@@ -1335,6 +1335,23 @@ object HnswIndex {
         numPartitions, metric))
   }
 
+  /** The resident handle for a FIXED home its writers rebuild in place
+    * (a Collection field's forest): [[loadOrBuild]] runs once, then every
+    * call reuses the same instance — no pid-count job, no re-cached blob
+    * frame, and ONE prepared probe RDD — until a writer drops the entry
+    * ([[delete]], [[appendSegment]], [[appendSegmentLocal]]) or the
+    * home's file listing changes ([[IndexStore.Family.serveFixed]]). */
+  def serveFixed(
+      spark: SparkSession,
+      path: String,
+      df: => DataFrame,
+      vecCol: String,
+      idCol: String,
+      m: Int = 16,
+      efConstruction: Int = 64): HnswIndex =
+    family.serveFixed(path)(
+      loadOrBuild(spark, path, df, vecCol, idCol, m, efConstruction))
+
   /** The family's on-disk root (spec introspection). */
   def indexRoot: String = family.root
 

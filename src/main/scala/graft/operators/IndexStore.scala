@@ -27,7 +27,10 @@ private[operators] object IndexStore {
     * swapped parquet). */
   final class Family[T](name: String, formatVersion: Int)(
       release: T => Unit) {
-    private val cache = scala.collection.concurrent.TrieMap.empty[String, T]
+    // home → (listing fingerprint, served index); mtime-keyed homes carry
+    // fingerprint 0 — their key already changes with the source
+    private val cache = scala.collection.concurrent.TrieMap.empty[String, (Long, T)]
+    private val loadLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
     // home → source, recorded at serve time so writers can invalidate by
     // SOURCE path: homes are mtime-hashed, so a writer holding only the
     // table path could otherwise never name the cache key it must drop
@@ -60,11 +63,36 @@ private[operators] object IndexStore {
       cache.getOrElseUpdate(home, {
         val t = loadOrBuild
         publishManifestAndPrune(spark, home, sourcePath)
-        t
-      })
+        (0L, t)
+      })._2
     }
 
-    def invalidate(home: String): Unit = cache.remove(home).foreach(release)
+    /** Serve a FIXED home: one path its writers rebuild and append to in
+      * place (a Collection field's index), so the path alone cannot tell
+      * a fresh build from a stale one. The entry stays resident across
+      * calls and is checked against the home's [[listingFingerprint]] on
+      * every serve: in-process writers drop it themselves (delete and
+      * segment appends invalidate the home), and a rewrite this JVM did
+      * not make changes the listing, so the next serve reloads. Concurrent
+      * misses on one home load it once. */
+    def serveFixed(home: String)(loadOrBuild: => T): T = {
+      val fp = listingFingerprint(home)
+      cache.get(home) match {
+        case Some((`fp`, t)) => t
+        case _ => loadLocks.getOrElseUpdate(home, new Object).synchronized {
+          cache.get(home) match {
+            case Some((`fp`, t)) => t
+            case stale =>
+              if (stale.isDefined) invalidate(home)
+              val t = loadOrBuild
+              cache.put(home, (fp, t))
+              t
+          }
+        }
+      }
+    }
+
+    def invalidate(home: String): Unit = cache.remove(home).foreach(e => release(e._2))
 
     /** Drop every cached home served for `sourcePath` (writers hold the
       * table path, not the mtime-hashed home). Returns the homes dropped so
@@ -163,6 +191,28 @@ private[operators] object IndexStore {
         case None => present
       }
     }
+  }
+
+  /** A java.io fingerprint of a local index home: (relative path, length,
+    * mtime) of every file under its `data/`, `delta/` and `_commits/`
+    * trees — what any build, segment append or commit changes. A
+    * non-local home (hdfs://, s3a://) fingerprints as a constant; its
+    * writers' invalidation is then the only freshness signal. */
+  def listingFingerprint(home: String): Long = {
+    val local =
+      if (home.startsWith("file:")) "/" + home.stripPrefix("file:").dropWhile(_ == '/')
+      else if (home.contains("://")) return 0L
+      else home
+    val sb = new StringBuilder
+    def walk(f: java.io.File, rel: String): Unit =
+      Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach { k =>
+        val r = s"$rel/${k.getName}"
+        if (k.isDirectory) walk(k, r)
+        else sb.append(r).append(':').append(k.length).append(':')
+          .append(k.lastModified).append('|')
+      }
+    Seq("data", "delta", "_commits").foreach(d => walk(new java.io.File(local, d), d))
+    graft.functions.TextKernels.fnv1a64(sb.toString)
   }
 
   /** Latest modification time under `path` (a file or one-level directory) —

@@ -351,6 +351,18 @@ object IvfIndex {
     }
   }
 
+  /** The resident handle for a FIXED home its writers rebuild in place
+    * (a Collection field's index): the [[HnswIndex.serveFixed]] twin —
+    * loaded once, dropped by [[delete]] / [[appendSegment]] or by a
+    * changed file listing. */
+  def serveFixed(
+      spark: SparkSession,
+      path: String,
+      df: => DataFrame,
+      vecCol: String,
+      nlist: Int): IvfIndex =
+    family.serveFixed(path)(loadOrBuild(spark, path, df, vecCol, nlist))
+
   /** One-time migration sweep: pre-consolidation IVF homes lived at the
     * BARE `GRAFT_INDEX_DIR` root (every other family always used a
     * subdir); the Family layer resolves `GRAFT_INDEX_DIR/ivf` now, so
@@ -392,6 +404,7 @@ object IvfIndex {
 
   /** Remove a persisted index (e.g. before a re-sync rebuilds it). */
   def delete(spark: SparkSession, path: String): Unit = {
+    invalidate(path)
     IndexStore.fsFor(spark, path).delete(new Path(path), true); ()
   }
 

@@ -226,7 +226,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * the failure mode the pipeline tables' staged merge already solves.
     * Same one-per-path dedup guard and [[Collection.pendingMerges]]
     * visibility (awaitMaintenance blocks on it). */
-  private def scheduleDocsCompaction(): Unit =
+  private[store] def scheduleDocsCompaction(): Unit =
     if (DeltaTable.compactionDue(docsPath, docsMaxSegments)) {
       val key = docsKey
       val done = scala.concurrent.Promise[Unit]()
@@ -417,6 +417,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     true
   }
 
+  /** Test seam: runs inside a bulk upsert between its documents-segment
+    * commit and the changelog read-back of that segment. */
+  @volatile private[store] var afterBulkSegment: () => Unit = () => ()
+
   /** Upsert a batch of JSON documents (each must contain an "id" key).
     * `merge=true` shallow-merges new keys over the previous document
     * (`document || EXCLUDED.document`, queries.rs:146-169).
@@ -568,22 +572,26 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
             }
           }
         case None =>
-          val seg = withDocsAppendLock {
-            traced("up:append-docs")(DeltaTable.appendDelta(sess, docsPath, upserted,
-              incoming.select("source_uuid"), docCol = "source_uuid",
+          withDocsAppendLock {
+            val seg = traced("up:append-docs")(DeltaTable.appendDelta(sess, docsPath,
+              upserted, incoming.select("source_uuid"), docCol = "source_uuid",
               sortCols = Seq("source_uuid"),
               coalesceTo =
                 if (batchN <= DeltaTable.CoalesceBatchMax)
                   math.max(1, (batchN / DeltaTable.RowsPerDeltaFile).toInt)
                 else 0,
               knownIds = idsLocal))
+            afterBulkSegment()
+            // record the batch's FINAL (post-merge) documents for
+            // incremental sync by reading back the segment just written —
+            // an O(batch) file scan; re-evaluating `upserted` here would
+            // replay the whole merge join (a second corpus-sized pass on
+            // bulk re-ingest). Still under the shared lock: a compaction
+            // publish in between would retire `seg=N`, and the read-back
+            // would then fail after the commit or skip the batch, so no
+            // incremental sync would ever see these documents.
+            traced("up:changelog")(appendChangelogFromSeg(seg, sess))
           }
-          // record the batch's FINAL (post-merge) documents for
-          // incremental sync by reading back the segment just written —
-          // an O(batch) file scan; re-evaluating `upserted` here would
-          // replay the whole merge join (a second corpus-sized pass on
-          // bulk re-ingest)
-          traced("up:changelog")(appendChangelogFromSeg(seg, sess))
       }
       traced("up:compact-check")(scheduleDocsCompaction())
       ()
@@ -1668,62 +1676,92 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
 
   /** The persisted HNSW forest a sync built for `field` (requires
     * `hnswIndex` on the field — an unmanaged build would serve stale after
-    * re-sync, so refuse without the config, like [[ivfIndex]]). */
+    * re-sync, so refuse without the config, like [[ivfIndex]]). The handle
+    * is resident: loaded once, then reused by every search until a writer
+    * rebuilds or appends to the home or its files change
+    * ([[graft.operators.HnswIndex.serveFixed]]). */
   def hnswIndex(p: Pipeline, field: String): graft.operators.HnswIndex = {
     val f = p.fields.find(_.name == field)
       .getOrElse(throw new IllegalArgumentException(s"field $field not in pipeline"))
     val (m, efc) = f.hnswIndex.getOrElse(throw new IllegalArgumentException(
       s"field $field has no hnswIndex configured; set PipelineField.hnswIndex"))
-    graft.operators.HnswIndex.loadOrBuild(
+    graft.operators.HnswIndex.serveFixed(
       spark, tablePath(p.name, field, "hnsw"),
       hnswKeyed(p, field), "embedding", "hid", m, efc)
   }
 
-  /** ANN chunk search over the per-field HNSW forest: graph top-k, then the
-    * surrogate hits broadcast-join back to (document_id, chunk_index) — the
-    * resolution leg scans only two narrow columns, never vectors. Between
-    * delta syncs and the next merge, graphs hold up to `stale[field]`
-    * superseded nodes whose hits resolve to nothing; the fetch widens by
-    * exactly that count so a top-k can never under-fill. */
+  /** ANN chunk search over the per-field HNSW forest: (document_id,
+    * chunk_index, score), best first, as a local frame — see [[hnswHits]]. */
   def hnswSearch(p: Pipeline, field: String, query: Array[Float], k: Int,
-      ef: Int = 0): DataFrame = {
+      ef: Int = 0): DataFrame =
+    hnswHits(p, field, query, k, ef).map(h => (h.docId, h.chunkIndex, h.score))
+      .toDF("document_id", "chunk_index", "score")
+
+  /** Graph top-k, then the surrogate hits resolve back to (document_id,
+    * chunk_index) through one key-filtered collect of two narrow columns,
+    * never vectors. Between delta syncs and the next merge, graphs hold up
+    * to `stale[field]` superseded nodes whose hits resolve to nothing; the
+    * fetch widens by exactly that count so a top-k can never under-fill. */
+  private def hnswHits(p: Pipeline, field: String, query: Array[Float], k: Int,
+      ef: Int): Seq[Collection.Hit] = {
     // Since merges went background, delta syncs keep landing while a
     // merge is in flight, so stale can exceed maxStaleIndexRows for the
     // merge's duration — capping the slack there would let stale nodes
     // crowd live rows out of the top-kk and silently under-fill results.
     // Correctness pays the wider fetch up to a BOUNDED ceiling; past it
     // (a bulk re-ingest racing a slow merge) the graph probe would devolve
-    // into a full-graph scan plus an unbounded broadcast, so serve the
+    // into a full-graph scan plus an unbounded resolve, so serve the
     // exact scan instead — same results, bounded cost, and the next
     // publish restores the index path.
     val stale = readState(p.name).flatMap(_.stale.get(field)).getOrElse(0L)
     val slackCeiling = math.max(maxStaleIndexRows, 16L * k)
-    if (stale > slackCeiling)
-      return embeddings(p, field)
-        .withColumn("score",
-          cosineSimilarity(col("embedding"), floatVec(query.toIndexedSeq)))
-        .orderBy(col("score").desc, col("document_id"), col("chunk_index"))
-        .limit(k)
-        .select(col("document_id"), col("chunk_index"), col("score"))
+    if (stale > slackCeiling) return exactHits(p, field, query, k)
     val kk = k + stale.toInt
     // prepared probe (HnswIndex.serveDistributed): one RDD job over the
-    // persisted blob rows, zero per-query Catalyst work — spec-pinned
-    // bit-identical to the plan-based search(); the kk-row hit set then
-    // broadcasts into the resolve join exactly as before. The prepared
-    // RDD lives with the served index instance and is released on the
-    // sync path's delete/invalidate, so a rebuilt field never serves
-    // stale blobs.
+    // resident handle's blob rows, zero per-query Catalyst work —
+    // spec-pinned bit-identical to the plan-based search()
     val hitRows = hnswIndex(p, field).serveDistributed(query, kk,
       if (ef > 0) math.max(ef, kk) else 0)
-    import spark.implicits._
-    val hits = hitRows.toSeq.toDF("hid", "score")
-    hnswKeyed(p, field)
-      .join(broadcast(hits), "hid")
-      .select(col("document_id"), col("chunk_index"), col("score"))
-      .dropDuplicates("document_id", "chunk_index")
-      .orderBy(col("score").desc, col("document_id"), col("chunk_index"))
-      .limit(k)
+    if (hitRows.isEmpty) return Nil
+    val keys = hnswKeyed(p, field)
+      .where(col("hid").isin(hitRows.map(_._1).distinct.toSeq: _*))
+      .select(col("hid"), col("document_id"), col("chunk_index"))
+      .collect().groupBy(_.getLong(0))
+    // a stale node's hid resolves to no live row and drops out
+    hitRows.toSeq
+      .flatMap { case (hid, s) =>
+        keys.getOrElse(hid, Array.empty[org.apache.spark.sql.Row])
+          .map(r => Collection.Hit(field, r.getString(1), r.getInt(2), s))
+      }
+      .sorted(Collection.hitOrder)
+      .distinctBy(h => (h.docId, h.chunkIndex))
+      .take(k)
   }
+
+  /** Exact top-`k` chunks of `field` by cosine × `boost`, collected — the
+    * scan every index family falls back to. `docIds` gates documents (the
+    * metadata filter's survivors) before the limit; `textFilter` is the
+    * full-text chunk filter, which needs chunk text before the limit. */
+  private def exactHits(p: Pipeline, field: String, query: Array[Float], k: Int,
+      boost: Double = 1.0, docIds: Option[DataFrame] = None,
+      textFilter: Option[String] = None): Seq[Collection.Hit] = {
+    var scored = embeddings(p, field).withColumn("score",
+      cosineSimilarity(col("embedding"), floatVec(query.toIndexedSeq)) * boost)
+    // join just the chunk column for this field and drop it after filtering
+    textFilter.foreach { t =>
+      scored = scored
+        .join(chunks(p, field), Seq("document_id", "chunk_index"))
+        .where(col("chunk").contains(t)).drop("chunk")
+    }
+    docIds.foreach(ids => scored = scored.join(ids, Seq("document_id"), "left_semi"))
+    collectHits(field,
+      scored.orderBy(col("score").desc, col("document_id"), col("chunk_index")).limit(k))
+  }
+
+  private def collectHits(field: String, df: DataFrame): Seq[Collection.Hit] =
+    df.select(col("document_id"), col("chunk_index"), col("score")).collect()
+      .map(r => Collection.Hit(field, r.getString(0), r.getInt(1), r.getDouble(2)))
+      .toSeq
 
   /** ANN chunk search over the per-field IVF home (requires `vectorIndex`
     * on the field). `nprobe` 0 → ⌈√nlist⌉, the standard accuracy/cost
@@ -1740,7 +1778,8 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
 
   /** The persisted IVF index a sync built for `field` (requires
     * `vectorIndex` on the field). Loads from the warehouse — partition
-    * pruning serves probes across sessions with no rebuild. */
+    * pruning serves probes across sessions with no rebuild — and stays
+    * resident like [[hnswIndex]]. */
   def ivfIndex(p: Pipeline, field: String): graft.operators.IvfIndex = {
     val f = p.fields.find(_.name == field)
       .getOrElse(throw new IllegalArgumentException(s"field $field not in pipeline"))
@@ -1749,7 +1788,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     // re-sync, so refuse instead of defaulting
     val nlist = f.vectorIndex.getOrElse(throw new IllegalArgumentException(
       s"field $field has no vectorIndex configured; set PipelineField.vectorIndex"))
-    graft.operators.IvfIndex.loadOrBuild(
+    graft.operators.IvfIndex.serveFixed(
       spark, tablePath(p.name, field, "ivf"),
       embeddings(p, field), "embedding", nlist)
   }
@@ -1767,11 +1806,24 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
 
   /** Chunk-level KNN search across fields — `collection.vector_search`
     * (vector_search_query_builder.rs:77-401). Per field: embed the query
-    * driver-side, score stored embeddings (cosine × boost), optional
-    * metadata filter + full-text chunk filter, UNION ALL across fields,
-    * global top-k; optional deterministic rerank stand-in.
+    * driver-side and collect the field's top-k (cosine × boost) under the
+    * optional metadata filter and full-text chunk filter; one driver merge
+    * takes the global top-k; one key-filtered collect per table fetches the
+    * payloads; optional deterministic rerank stand-in.
     *
-    * Returns (document_id, document, chunk, score [, rerank_score]).
+    * Returns (document_id, document, chunk, score [, rerank_score]),
+    * ordered by score desc, document_id, chunk_index (by rerank_score
+    * first under rerank). The result is MATERIALIZED at call time — a
+    * local relation holding one consistent snapshot of the rows — so
+    * consuming it later never re-runs the search against tables or index
+    * homes a sync or background merge has since swapped.
+    *
+    * Spark jobs per call over an HNSW field: 4 unfiltered (graph probe,
+    * hid → chunk-key resolve, documents payload, chunk text); with a
+    * metadata filter the same 4 when the first over-fetch fills the top-k,
+    * plus 3 (probe, resolve, filtered documents) per refill round. The
+    * resident index handle adds its load jobs only on the first call after
+    * a sync rebuilt or appended to the home.
     */
   def vectorSearch(
       p: Pipeline,
@@ -1780,18 +1832,27 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       filterJson: Option[String] = None,
       rerank: Option[Int] = None,
       reranker: graft.functions.Reranker = graft.functions.TokenOverlapReranker): DataFrame = {
-    val docs = documents.select(
-      col("source_uuid").as("document_id"), col("document"))
-    // Score and top-k over (ids, score) ONLY; chunk text and document
-    // payloads join AFTER the limit. At scale the pre-limit relation is the
-    // whole corpus — joining payloads there shuffles every chunk's text to
-    // keep k rows. The metadata filter must still apply pre-limit (top-k of
-    // the filtered set), but as a semi-join on ids, not a payload join.
-    val filteredIds = filterJson.map { f =>
-      val resolver = FilterCompiler.jsonStringResolver(col("document"))
-      docs.where(FilterCompiler.compile(f, resolver)).select("document_id")
-    }
     val kGlobal = math.max(limit, rerank.getOrElse(0))
+    val docFilter = filterJson.map(f =>
+      FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document"))))
+    // payloads of the documents looked up so far that pass the filter
+    // (every one found, when there is none): one key-filtered collect per
+    // batch of new ids is both the filter verdict and the payload fetch
+    val payload = scala.collection.mutable.HashMap.empty[String, String]
+    val looked = scala.collection.mutable.HashSet.empty[String]
+    def fetchDocs(ids: Seq[String]): Unit = {
+      val fresh = ids.filterNot(looked).distinct
+      if (fresh.nonEmpty) {
+        val keyed = documents.where(col("source_uuid").isin(fresh: _*))
+        docFilter.fold(keyed)(keyed.where)
+          .select(col("source_uuid"), col("document")).collect()
+          .foreach(r => payload.put(r.getString(0), r.getString(1)))
+        looked ++= fresh
+      }
+    }
+    // the exact scan's pre-limit gate: top-k of the FILTERED set
+    val filteredIds = docFilter.map(f =>
+      documents.where(f).select(col("source_uuid").as("document_id")))
     val perField = fieldQueries.map { fq =>
       val fieldDef = p.fields.find(_.name == fq.field)
         .getOrElse(throw new IllegalArgumentException(s"field ${fq.field} not in pipeline"))
@@ -1805,9 +1866,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       // negative boost wants the OTHER end of the ranking, so it keeps the
       // exact scan. Precedence: HNSW, then binary signatures, then IVF
       // (pgvector's hnsw-over-ivfflat preference), then exact. The
-      // full-text chunk filter stays on the
-      // exact path (it needs chunk text pre-limit); a metadata filter is
-      // served THROUGH the index by over-fetch + post-filter + refill.
+      // full-text chunk filter stays on the exact path (it needs chunk
+      // text pre-limit); a metadata filter is served THROUGH the index by
+      // over-fetch + post-filter + refill.
       val hasIndex = fieldDef.hnswIndex.isDefined || fieldDef.binaryIndex ||
         fieldDef.vectorIndex.isDefined
       val indexable = hasIndex && fq.fullTextFilter.isEmpty && fq.boost > 0
@@ -1821,139 +1882,102 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       // index), and for IVF only once nprobe has widened to every cluster —
       // a partial-probe shortlist coming up short just means the probed
       // clusters ran dry, not that the index did.
-      def indexServe(fetch: Int): (DataFrame, Boolean) =
+      def indexServe(fetch: Int): (Seq[Collection.Hit], Boolean) =
         if (fieldDef.hnswIndex.isDefined)
-          (hnswSearch(p, fq.field, qv, fetch,
+          (hnswHits(p, fq.field, qv, fetch,
             ef = if (fieldDef.annEf > 0) math.max(fieldDef.annEf, fetch) else 0), true)
         else if (fieldDef.binaryIndex)
-          (binarySearch(p, fq.field, qv, fetch, rerank = fieldDef.annRerank), true)
+          (collectHits(fq.field,
+            binarySearch(p, fq.field, qv, fetch, rerank = fieldDef.annRerank)), true)
         else {
           val nlist = fieldDef.vectorIndex.get
           val np0 = math.max(1, math.ceil(math.sqrt(nlist)).toInt)
           val np = math.min(nlist.toLong, np0.toLong * math.max(1, fetch / fetch0)).toInt
-          (ivfSearch(p, fq.field, qv, fetch, np), np >= nlist)
+          (collectHits(fq.field, ivfSearch(p, fq.field, qv, fetch, np)), np >= nlist)
         }
-      if (indexable && filteredIds.isEmpty) {
-        indexServe(kGlobal)._1
-          .select(col("document_id"), col("chunk_index"),
-            lit(fq.field).as("_field"), (col("score") * fq.boost).as("score"))
-      } else if (indexable) {
+      def boosted(hs: Seq[Collection.Hit]): Seq[Collection.Hit] =
+        hs.map(h => h.copy(score = h.score * fq.boost))
+      if (indexable && docFilter.isEmpty) boosted(indexServe(kGlobal)._1)
+      else if (indexable) {
         // Filtered ANN (vector_search_query_builder.rs:163-232 applies the
         // filter inside the index-ordered scan): fetch an over-widened
-        // shortlist, keep rows passing the metadata filter, and refill by
-        // quadrupling the fetch until k survivors or the index is
-        // exhausted — detected by the shortlist coming back SHORTER than
-        // requested, so no corpus-sized count() job sits on the serving
-        // path. ONE job per round: the shortlist's total row count and its
-        // filter-surviving count come from a single left-join aggregate
-        // (the old shape paid an eager checkpoint plus two count() jobs per
-        // round). Rounds are CAPPED: a filter selecting almost nothing
+        // shortlist, keep rows whose documents pass the metadata filter,
+        // and refill by quadrupling the fetch until k survivors or the
+        // index is exhausted — detected by the shortlist coming back
+        // SHORTER than requested, so no corpus-sized count sits on the
+        // serving path. Each round's shortlist is already on the driver,
+        // so the exit decision and the returned rows come from the same
+        // evaluation. Rounds are CAPPED: a filter selecting almost nothing
         // stops widening after maxRounds (fetch ≈ 4^6·fetch0 by then) and
         // degrades to the exact filtered scan — the reference's single
         // filtered-scan cost, instead of log4(N) ever-larger index probes.
-        val ids = filteredIds.get
-        // distinct BEFORE the counting join: a duplicate document_id row
-        // (however it arose) would otherwise multiply served rows in the
-        // left join and inflate both counts past what the final semi-join
-        // returns; the frame is filter-result-sized, the distinct is noise
-        val passIds = ids.select(col("document_id")).distinct()
-          .withColumn("__pass", lit(1))
         var fetch = fetch0
         var rounds = 0
         val maxRounds = 6
-        var out: DataFrame = null
+        var out: Seq[Collection.Hit] = null
         while (out == null) {
-          // LAZY checkpoint, materialized by the counts job below: freezes
-          // the shortlist so the exit decision and the returned rows come
-          // from the SAME evaluation — a background merge publishing
-          // between the counts action and the final consumption would
-          // otherwise re-execute the probe against swapped index homes
-          // (FileNotFound or rows inconsistent with the counted decision).
-          // Still ONE job per round. Abandoned rounds' checkpoint blocks
-          // linger until the ContextCleaner GCs the frame — bounded by
-          // maxRounds shortlist-sized frames per query, reclaimed with the
-          // loop's references (no public API unpersists a checkpoint
-          // eagerly).
-          val (served0, covers) = indexServe(fetch)
-          val served = served0.localCheckpoint(eager = false)
-          val counts = served
-            .join(passIds, Seq("document_id"), "left")
-            .agg(count(lit(1)).as("n"), count(col("__pass")).as("s")).head()
-          val (n, survivors) = (counts.getLong(0), counts.getLong(1))
-          val exhausted = covers && n < fetch
+          val (served, covers) = indexServe(fetch)
+          fetchDocs(served.map(_.docId))
+          val kept = served.filter(h => payload.contains(h.docId))
           rounds += 1
-          if (exhausted || survivors >= kGlobal)
-            out = served.join(ids, Seq("document_id"), "left_semi")
+          if ((covers && served.size < fetch) || kept.size >= kGlobal) out = kept
           else if (rounds >= maxRounds)
-            out = embeddings(p, fq.field)
-              .join(ids, Seq("document_id"), "left_semi")
-              .withColumn("score",
-                cosineSimilarity(col("embedding"), floatVec(qv.toIndexedSeq)))
-              .select(col("document_id"), col("chunk_index"), col("score"))
+            out = exactHits(p, fq.field, qv, kGlobal, docIds = filteredIds)
           else fetch = (fetch * 4L).min(Int.MaxValue.toLong).toInt
         }
-        out.orderBy(col("score").desc, col("document_id"), col("chunk_index"))
-          .limit(kGlobal)
-          .select(col("document_id"), col("chunk_index"),
-            lit(fq.field).as("_field"), (col("score") * fq.boost).as("score"))
-      } else {
-        var scored = embeddings(p, fq.field)
-          .withColumn("score", cosineSimilarity(col("embedding"), floatVec(qv.toIndexedSeq)) * fq.boost)
-        // the full-text chunk filter needs chunk text pre-limit — join just
-        // the chunk column for this field and drop it again after filtering
-        fq.fullTextFilter.foreach { t =>
-          scored = scored
-            .join(chunks(p, fq.field), Seq("document_id", "chunk_index"))
-            .where(col("chunk").contains(t)).drop("chunk")
-        }
-        scored.select(col("document_id"), col("chunk_index"),
-          lit(fq.field).as("_field"), col("score"))
-      }
+        boosted(out.sorted(Collection.hitOrder).take(kGlobal))
+      } else
+        exactHits(p, fq.field, qv, kGlobal, fq.boost, filteredIds, fq.fullTextFilter)
     }
-    var unioned = perField.reduce(_ unionAll _)
-    // Gate on document ids BEFORE the limit ONLY when a metadata filter is
-    // present (top-k of the filtered set needs the pre-limit semi-join).
-    // With no filter there is nothing to gate: deleteDocuments cascades to
-    // every pipeline table synchronously (the reference's FK-cascade
-    // semantics, queries.rs:49-66), so orphaned embeddings cannot exist and
-    // the unfiltered path never pays a corpus-wide shuffle per search.
-    filteredIds.foreach { ids =>
-      unioned = unioned.join(ids, Seq("document_id"), "left_semi")
+    val top = perField.flatten.sorted(Collection.hitOrder).take(kGlobal)
+
+    // payloads for the k winners only: documents by id (already on the
+    // driver for filtered index hits), chunk text by key per field
+    fetchDocs(top.map(_.docId))
+    val text: Map[(String, String, Int), String] =
+      if (top.isEmpty) Map.empty
+      else top.groupBy(_.field).toSeq.map { case (fn, hs) =>
+        chunks(p, fn)
+          .where(col("document_id").isin(hs.map(_.docId).distinct: _*) &&
+            col("chunk_index").isin(hs.map(_.chunkIndex).distinct: _*))
+          .select(lit(fn), col("document_id"), col("chunk_index"), col("chunk"))
+      }.reduce(_ unionAll _).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2)) -> r.getString(3)).toMap
+    val joined = top.flatMap { h =>
+      for {
+        doc <- payload.get(h.docId)
+        chunk <- text.get((h.field, h.docId, h.chunkIndex))
+      } yield (h, doc, chunk)
     }
-    val k = kGlobal
-    val top = unioned
-      .orderBy(col("score").desc, col("document_id"), col("chunk_index"))
-      .limit(k)
-
-    // payload joins over the k-row result: broadcast the tiny side so chunk
-    // text and documents are probed map-side, never shuffled
-    val allChunks = fieldQueries.map(_.field).distinct
-      .map(fn => chunks(p, fn).withColumn("_field", lit(fn)))
-      .reduce(_ unionAll _)
-    val withChunk = allChunks
-      .join(broadcast(top), Seq("document_id", "chunk_index", "_field"))
-    val joinedFull = docs.join(broadcast(withChunk), Seq("document_id"))
-      .orderBy(col("score").desc, col("document_id"), col("chunk_index"))
-    val joined = joinedFull
-      .select(col("document_id"), col("document"), col("chunk"), col("score"))
-
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq("document_id", "document", "chunk")
+      .map(StructField(_, StringType)) :+ StructField("score", DoubleType))
     rerank match {
-      case None => joined
+      case None =>
+        spark.createDataFrame(
+          joined.map { case (h, d, c) => Row(h.docId, d, c, h.score) }.asJava, schema)
       case Some(_) =>
         // cross-scorer seam for pgml.rank (api.rs:612-625) — default is the
         // deterministic token-overlap stand-in; a BiEncoderReranker over a
         // trained embedder (or a production cross-encoder) drops in through
-        // the same (query, chunk) → score contract. chunk_index is the
-        // final tie-break: overlapping chunks of one document can share a
-        // score, and without it the ordering of equal-scored chunks is
-        // nondeterministic.
+        // the same (query, chunk) → score contract. The scorer's column
+        // runs over the k rows as a local relation, which Catalyst folds
+        // on the driver (no job). chunk_index is the final tie-break:
+        // overlapping chunks of one document can share a score.
         val queryText = fieldQueries.map(_.query).mkString(" ")
-        joinedFull
+        val scored = spark.createDataFrame(
+            joined.map { case (h, d, c) => Row(h.docId, d, c, h.score, h.chunkIndex) }.asJava,
+            schema.add("chunk_index", IntegerType))
           .withColumn("rerank_score", reranker.scoreCol(queryText, col("chunk")))
-          .orderBy(col("rerank_score").desc, col("document_id"), col("chunk_index"))
-          .limit(limit)
-          .select(col("document_id"), col("document"), col("chunk"),
-            col("score"), col("rerank_score"))
+        val rsType = scored.schema("rerank_score").dataType
+        val ranked = scored.withColumn("__rs", col("rerank_score").cast("double"))
+          .collect().toSeq
+          .sorted(Collection.rerankOrder)
+          .take(limit)
+          .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(5)))
+        spark.createDataFrame(ranked.asJava, schema.add("rerank_score", rsType))
     }
   }
 
@@ -2252,6 +2276,43 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
 }
 
 object Collection {
+  /** One ranked chunk candidate of [[Collection.vectorSearch]]. */
+  private[store] final case class Hit(
+      field: String, docId: String, chunkIndex: Int, score: Double)
+
+  /** Catalyst's `score DESC, document_id, chunk_index` order on the
+    * driver: doubles compare as SQL does (NaN largest, -0.0 = 0.0) and
+    * strings by UTF-8 bytes. */
+  private[store] val hitOrder: Ordering[Hit] = (a, b) => {
+    val s = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(b.score, a.score)
+    if (s != 0) s
+    else {
+      val d = utf8Compare(a.docId, b.docId)
+      if (d != 0) d else Integer.compare(a.chunkIndex, b.chunkIndex)
+    }
+  }
+
+  /** `rerank_score DESC NULLS LAST, document_id, chunk_index` over rerank
+    * rows (document_id 0, chunk_index 4, rerank score as double 6). */
+  private[store] val rerankOrder: Ordering[org.apache.spark.sql.Row] = (a, b) => {
+    val s = (a.isNullAt(6), b.isNullAt(6)) match {
+      case (true, true) => 0
+      case (true, false) => 1
+      case (false, true) => -1
+      case _ => org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(b.getDouble(6), a.getDouble(6))
+    }
+    if (s != 0) s
+    else {
+      val d = utf8Compare(a.getString(0), b.getString(0))
+      if (d != 0) d else Integer.compare(a.getInt(4), b.getInt(4))
+    }
+  }
+
+  private def utf8Compare(a: String, b: String): Int =
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+
   /** AQE-off session clones for the micro-batch paths, keyed by
     * (SparkContext, reduce width) — see [[Collection.microSpark]]. */
   private[store] val microSessions =

@@ -248,6 +248,62 @@ class CollectionSpec extends AnyFunSuite {
     assert(!plan.contains("LeftSemi"), "unfiltered search must not pay a corpus-wide gate")
   }
 
+  /** Spark jobs `body` starts on this thread (its own job group). */
+  private def jobsOf(body: => Unit): Long = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is asynchronous: wait for the count to settle
+      var last = -1L
+      var stable = 0
+      val deadline = System.currentTimeMillis() + 10000
+      while (stable < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        if (jobs.get() == last) stable += 1 else { stable = 0; last = jobs.get() }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("vectorSearch job budget over HNSW: 4 unfiltered, 4 + 3 per refill round filtered") {
+    val c = newCollection("jobs")
+    c.upsertDocuments(dummyDocs(300))
+    val p = Pipeline("pj", Seq(PipelineField("body", splitter = Some((100000, 0)),
+      semanticSearch = Some(HashEmbedder(64)), hnswIndex = Some((8, 32)))))
+    c.syncPipeline(p)
+    def run(q: String, filter: Option[String]): Unit = {
+      c.vectorSearch(p, Seq(VectorSearchField("body", q)), limit = 5,
+        filterJson = filter).collect()
+      ()
+    }
+    run("warm the resident handle", None)
+    Seq("Test body 7 document", "spark data engine", "notes 42").foreach { q =>
+      val n = jobsOf(run(q, None))
+      assert(n <= 4, s"unfiltered '$q' ran $n Spark jobs (budget 4)")
+    }
+    // a filter every document passes fills the top-k in the first round;
+    // otherwise the fetch starts at 64 of the 300 chunks and quadruples
+    // per round, so no query needs more than 3 (64, 256, 1024 ≥ 300)
+    val chunksN = c.chunks(p, "body").count()
+    val maxRounds = Iterator.iterate(64L)(_ * 4).indexWhere(_ >= chunksN) + 1
+    Seq(("""{"category": {"$gte": 0}}""", 1), ("""{"category": {"$eq": 1}}""", maxRounds),
+        ("""{"uuid": {"$eq": 123}}""", maxRounds))
+      .foreach { case (f, rounds) =>
+        val n = jobsOf(run("Test body 123 document", Some(f)))
+        assert(n <= 4 + 3 * (rounds - 1),
+          s"filtered $f ran $n Spark jobs (budget ${4 + 3 * (rounds - 1)})")
+      }
+  }
+
   test("vector_search returns relevant docs first, respects filter and rerank shape") {
     val c = newCollection("c5")
     c.upsertDocuments(dummyDocs(12))
