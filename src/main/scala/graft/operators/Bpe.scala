@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -21,29 +21,19 @@ import graft.functions.TextFunctions
   *    (subword-nmt) fits too, and why fit cost is independent of corpus
   *    size once the dictionary is aggregated. A bounded deterministic
   *    sample caps even the dictionary pass (the PQ/centroid-fit pattern).
-  *  - SERVE (default regime): the model BROADCASTS and each DISTINCT
-  *    pretoken is encoded executor-side by the JVM encoder inside
-  *    mapPartitions — the per-word work is vocabulary-sized, and the
-  *    corpus side stays plan-pure (one broadcast join from pretoken to
-  *    token count and a map-side sum: the corpus streams once and never
-  *    shuffles for encoding).
-  *  - SERVE (opt-in literal regime, `graft.bpe.literalMaxMerges` /
-  *    [[literalMaxMerges]]): encoding is PLAN-PURE — no UDF, no driver
-  *    loop. The merge ranks ride the plan as a map literal; each BPE step
-  *    (find the lowest-rank adjacent pair, merge ALL its occurrences
-  *    left-to-right) is a pure Column fold over the word's token string,
-  *    and steps chain as successive projections over the distinct-pretoken
-  *    frame. This regime is the SQL-replayable reference encoder — the
-  *    t13 oracle simulates the SAME steps in DuckDB from the merge table
-  *    alone — but its stepped plan costs O(steps) Catalyst work per query,
-  *    so the broadcast regime serves by default; BpeSpec pins the two
-  *    regimes output-identical.
+  *  - SERVE: the model BROADCASTS and each DISTINCT pretoken is encoded
+  *    executor-side by the JVM encoder inside mapPartitions — the
+  *    per-word work is vocabulary-sized, and the corpus side stays
+  *    plan-pure (one broadcast join from pretoken to token count and a
+  *    map-side sum: the corpus streams once and never shuffles for
+  *    encoding). The t13 oracle replays the same bounded greedy merge
+  *    loop in DuckDB from the merge table alone.
   *
-  * Token strings are chr(31)-joined; U+001F itself is RESERVED — a
-  * pre-token equal to the unit separator (the only way the regex can
-  * emit one: letter/digit runs cannot contain it, so it would surface
-  * as a single-char punctuation token) is dropped by fit and both
-  * serving paths alike, keeping the joined encoding unambiguous.
+  * U+001F is RESERVED as the oracle's token separator — a pre-token
+  * equal to it (the only way the regex can emit one: letter/digit runs
+  * cannot contain it, so it would surface as a single-char punctuation
+  * token) is dropped by fit and serving alike, keeping the oracle's
+  * chr(31)-joined encoding unambiguous.
   */
 object Bpe {
 
@@ -53,12 +43,11 @@ object Bpe {
     * oracle's recursion — the two paths must truncate identically. */
   val DefaultMaxSteps = 24
 
-  /** Split per Unicode CODE POINT (not UTF-16 unit): the literal-plan
-    * regime's lookaround split and the DuckDB oracle's string_split both
-    * treat a supplementary character (e.g. an emoji matched by the
-    * punctuation branch of bpeishPattern) as ONE symbol, so fit and the
-    * driver/broadcast encoders must too — otherwise merges learned over
-    * surrogate halves could never fire in the plan. */
+  /** Split per Unicode CODE POINT (not UTF-16 unit): the DuckDB oracle's
+    * string_split treats a supplementary character (e.g. an emoji matched
+    * by the punctuation branch of bpeishPattern) as ONE symbol, so fit and
+    * the encoder must too — otherwise merges learned over surrogate
+    * halves could never fire. */
   private[operators] def codePoints(s: String): IndexedSeq[String] = {
     val out = IndexedSeq.newBuilder[String]
     var i = 0
@@ -75,11 +64,11 @@ object Bpe {
     @transient lazy val ranks: Map[(String, String), Int] =
       merges.zipWithIndex.toMap
 
-    /** Driver-local single-word encoding — the same greedy
-      * lowest-rank-first merge loop the distributed path folds, so the
-      * two agree exactly. `maxSteps` mirrors the literal regime's step
-      * bound (one step = merge all occurrences of the best pair), so
-      * every serving regime and the oracle truncate identically. */
+    /** Single-word encoding — the greedy lowest-rank-first merge loop
+      * the distributed path runs per distinct pretoken. `maxSteps` bounds
+      * the steps (one step = merge all occurrences of the best pair) the
+      * same way the oracle's recursion does, so the two truncate
+      * identically. */
     def encodeWord(word: String, maxSteps: Int = Int.MaxValue): Seq[String] = {
       var toks: IndexedSeq[String] = codePoints(word)
       var steps = 0
@@ -156,60 +145,10 @@ object Bpe {
     Model(merges.toIndexedSeq)
   }
 
-  /** One BPE step over a chr(31)-joined token string column: find the
-    * lowest-rank adjacent pair present in the plan-literal rank map and
-    * merge every occurrence left-to-right (merging appends the b-token to
-    * the accumulator WITHOUT a separator — the tail token is the a-token,
-    * so concatenation IS the merge). A word with no mergeable pair passes
-    * through unchanged, so extra steps are the identity. */
-  private def step(rankLit: Column, acc: Column): Column = {
-    val toks = split(acc, Sep)
-    val pairs = when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1), i =>
-        struct(
-          coalesce(element_at(rankLit,
-            concat(element_at(toks, i), lit(Sep), element_at(toks, i + 1))),
-            lit(Int.MaxValue)).as("r"),
-          element_at(toks, i).as("a"),
-          element_at(toks, i + 1).as("b"))))
-      .otherwise(array().cast("array<struct<r:int,a:string,b:string>>"))
-    val best = array_min(pairs)
-    val a = best.getField("a"); val b = best.getField("b")
-    val merged = aggregate(toks, lit(""), (s, t) =>
-      when(s === lit(""), t)
-        .when((s === a || s.endsWith(concat(lit(Sep), a))) && t === b,
-          concat(s, t))
-        .otherwise(concat(s, lit(Sep), t)))
-    when(best.isNull || best.getField("r") === Int.MaxValue, acc)
-      .otherwise(merged)
-  }
-
-  /** Merge tables at or under this ride the stepped-projection plan as a
-    * MAP LITERAL (plan-pure, codegen, SQL-replayable — what the t13
-    * oracle simulates). The literal is embedded once per step, so a
-    * realistic 32k-merge vocabulary would bloat the plan by
-    * steps × table; above the gate the per-word encoding runs as
-    * mapPartitions with the BROADCAST model instead — still over the
-    * vocabulary-sized distinct-pretoken frame only, the corpus-side
-    * plumbing identical. Volatile so tests can pin a regime.
-    *
-    * Default 0 = always broadcast (r18): the stepped literal plan costs
-    * ~1.3 s of pure driver Catalyst work PER QUERY (measured: analysis +
-    * optimization + physical planning of 24 chained HOF projections,
-    * independent of corpus size) versus ~0.2 s for the broadcast regime
-    * computing the identical counts (BpeSpec pins regime equality; the
-    * t13 oracle is regime-blind) — and at any realistic vocabulary the
-    * broadcast regime is the only viable shape anyway. The literal fold
-    * stays as the SQL-replayable reference encoder, opt-in via this
-    * knob / `-Dgraft.bpe.literalMaxMerges`. */
-  @volatile var literalMaxMerges: Int =
-    sys.props.get("graft.bpe.literalMaxMerges").map(_.trim.toInt).getOrElse(0)
-
   /** Per-document BPE token counts: (idCol, n_pretokens, n_bpe_tokens).
-    * `maxSteps` bounds the per-word merge iterations of the
-    * literal-plan regime (a word of up to `maxSteps + 1` characters
-    * encodes exactly; longer words may stop early and over-count — the
-    * corpus bound is what to size it to). */
+    * `maxSteps` bounds the per-word merge iterations (a word of up to
+    * `maxSteps + 1` characters encodes exactly; longer words may stop
+    * early and over-count — the corpus bound is what to size it to). */
   def tokenCounts(
       docs: DataFrame, idCol: String, textCol: String, model: Model,
       maxSteps: Int = DefaultMaxSteps): DataFrame = {
@@ -217,48 +156,17 @@ object Bpe {
       filter(
         regexp_extract_all(col(textCol), lit(TextFunctions.bpeishPattern), lit(0)),
         t => t =!= Sep).as("__pt"))
-    val distinctWords = pretoks.select(explode(col("__pt")).as("w")).distinct()
-    // empty models always take the broadcast arm: with no merges the
-    // literal regime would still build the full maxSteps chain of
-    // identity HOF steps (the slow plan shape the default exists to
-    // avoid) to compute what encodeWord returns immediately — the
-    // code-point split. Output-identical by construction either way.
-    val counts =
-      if (model.merges.nonEmpty && model.merges.length <= literalMaxMerges) {
-        val rankLit = typedLit(model.merges.zipWithIndex
-          .map { case ((a, b), r) => s"$a$Sep$b" -> r }.toMap)
-        // the merge steps run over the DISTINCT pretokens
-        // (vocabulary-sized), chained as successive projections so each
-        // step's expression is evaluated once. The chain is stacked as
-        // raw Project nodes and analyzed ONCE (ColumnBridge
-        // .stackProjections): every public Dataset transformation
-        // re-analyzes the whole growing plan eagerly, so a select/
-        // withColumn loop costs O(steps²) analyzer work over the HOF
-        // lambdas — measured 0.7–1.1 s of pure driver construct time per
-        // t13 call, more than the encode itself
-        val words = org.apache.spark.sql.graftbridge.ColumnBridge
-          .stackProjections(distinctWords,
-            Seq(("w", col("w")),
-              ("__s", regexp_replace(col("w"), "(?<=.)(?=.)", Sep))) +:
-            (1 to maxSteps).map(_ =>
-              Seq(("w", col("w")), ("__s", step(rankLit, col("__s"))))))
-        words.select(col("w"), size(split(col("__s"), Sep)).as("__c"))
-      } else {
-        // big-model regime: broadcast the model, encode each distinct
-        // word executor-side with the driver encoder under the SAME
-        // maxSteps bound as the literal plan — the two regimes (and the
-        // t13 oracle's bounded recursion) truncate identically, so
-        // crossing literalMaxMerges can never change tokenCounts output
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val bc = spark.sparkContext.broadcast(model)
-        distinctWords.as[String]
-          .mapPartitions { it =>
-            val m = bc.value
-            it.map(w => (w, m.encodeWord(w, maxSteps).length))
-          }
-          .toDF("w", "__c")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model)
+    // the merge loop runs over the DISTINCT pretokens (vocabulary-sized)
+    val counts = pretoks.select(explode(col("__pt")).as("w")).distinct()
+      .as[String]
+      .mapPartitions { it =>
+        val m = bc.value
+        it.map(w => (w, m.encodeWord(w, maxSteps).length))
       }
+      .toDF("w", "__c")
     pretoks.select(col(idCol), size(col("__pt")).as("n_pretokens"),
         explode_outer(col("__pt")).as("w"))
       .join(broadcast(counts), Seq("w"), "left")

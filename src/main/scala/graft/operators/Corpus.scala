@@ -1,10 +1,11 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{GramCounts, NgramLm, NgramLmKernel, TextFunctions}
 
 /** Composed training-data curation: the standard pretraining front door
   * (language gate → quality gate → exact dedup → per-doc stats) as ONE
@@ -113,6 +114,14 @@ object Corpus {
     * fixed-width, and the per-document fold is BLOCKED ([[blockedLnSum]])
     * so agg state stays bounded on million-token documents.
     *
+    * Contracts: the lookup keys are 64-bit fingerprints, so when two
+    * distinct bigrams (or two history words) collide, a position that
+    * matches one of them joins BOTH count rows and is scored once per
+    * match, counting twice in n_bigrams and in the sum (~n²/2⁶⁵ expected
+    * collisions over n distinct keys). Positions group by `idCol`, so ids
+    * must be unique. The count frames broadcast up to
+    * [[LmBroadcastMaxRows]] bigram rows and shuffle above it.
+    *
     * Output: (idCol, n_bigrams, ppl), ppl null for docs under 2 tokens.
     */
   def perplexityStats(
@@ -145,8 +154,8 @@ object Corpus {
     // keyed (exact), but the lookup joins carry only fixed-width hashes —
     // if the broadcast below ever fell back to an exchange it would ship
     // 8-byte keys, never word strings. Exactness modulo 64-bit collisions
-    // (≈n²/2⁶⁵ expected merges — KenLM's own hashed probing accepts the
-    // same class of risk).
+    // (≈n²/2⁶⁵ expected — KenLM's own hashed probing accepts the same
+    // class of risk; the contract is stated in the scaladoc).
     val c2h = c2.select(xxhash64(col("w1"), col("w2")).as("__j2"), col("__c2"))
     val c1h = c1.select(xxhash64(col("w1")).as("__j1"), col("__c1"))
     // V = reference-corpus vocabulary over ALL positions (a single-token
@@ -171,8 +180,7 @@ object Corpus {
     // side carries (id, pos, j2, j1) fixed-width rows only. The LM frames
     // carry an EXPLICIT broadcast hint — the reference deployment (CCNet/
     // KenLM) ships the full model to every node, so the hint is the
-    // honest contract, not the optimizer's 10 MB good mood (ExplainCheck
-    // re-asserts the plan with autoBroadcastJoinThreshold disabled).
+    // honest contract, not the optimizer's 10 MB good mood.
     val scored = bigrams(docs, textCol, Seq(col(idCol)))
       .select(col(idCol), col("pos"),
         xxhash64(col("w1"), col("w2")).as("__j2"),
@@ -190,18 +198,18 @@ object Corpus {
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"), col("ppl"))
   }
 
-  /** Fold-block width for [[blockedLnSum]] — positions per level-1 block. */
-  private[graft] val FoldBlockSize = 1024
-
-  /** Broadcast ceiling for the LM count frames, in rows. Spark HARD-FAILS
-    * broadcast relations past 8 GB, so an unconditional hint would turn a
-    * giant reference corpus into a job abort where a shuffle join merely
-    * degrades. These frames are fixed-width ((k,) 8-byte fingerprint,
-    * 8-byte count — ~80 bytes/row as a HashedRelation). The scoring plan
-    * holds TWO hinted frames live at once (c2h bigram + c1h unigram
-    * lookups, both gated on the same c2 row count), so the ceiling is
-    * sized for the PAIR: 25M rows ≈ 2 GB each, ≤ 4 GB summed — half the
-    * hard limit even with both resident plus build overheads. */
+  /** Broadcast ceiling for the LM count frames, in rows. Up to it, the
+    * LMs ship their counts to every executor (KenLM's architecture);
+    * above it, c6's lookups degrade to a fingerprint-keyed exchange and
+    * c9 scores through its join plan. Spark HARD-FAILS broadcast
+    * relations past 8 GB, so an unconditional broadcast would turn a
+    * giant reference corpus into a job abort where a shuffle merely
+    * degrades. c6 holds TWO hinted frames live at once (bigram + unigram
+    * lookups, ~80 bytes/row each as a HashedRelation, both gated on the
+    * bigram row count): 25M rows ≈ 2 GB each, ≤ 4 GB summed. c9 collects
+    * its (k, fingerprint, count) frame to the driver (~17 bytes/row) and
+    * ships it as per-order probing tables (≤ 48 bytes/row): ≤ 1.2 GB on
+    * the driver and on each executor at the ceiling. */
   private[graft] val LmBroadcastMaxRows = 25L * 1000 * 1000
 
   /** The LM lookup side: broadcast (the KenLM ship-the-model architecture)
@@ -212,7 +220,8 @@ object Corpus {
     if (rows <= LmBroadcastMaxRows) broadcast(frame) else frame
 
   /** Per-document left-associative ln-score sum with BOUNDED aggregation
-    * state: positions fold inside fixed-size blocks of [[FoldBlockSize]]
+    * state: positions fold inside fixed-size blocks of
+    * [[NgramLmKernel.FoldBlockSize]] (the width the c9 kernel folds with)
     * (each level-1 agg row buffers ≤ 1024 (pos, ln) structs), then the
     * block sums fold in block order (≤ ⌈maxPos/1024⌉ structs) — a
     * million-token document peaks at ~32 KB of agg state instead of the
@@ -226,7 +235,7 @@ object Corpus {
   private def blockedLnSum(idCol: String, lnCol: String, nCol: String)(
       df: DataFrame): DataFrame =
     df.groupBy(col(idCol),
-        floor((col("pos") - 1) / FoldBlockSize).cast("int").as("__blk"))
+        floor((col("pos") - 1) / NgramLmKernel.FoldBlockSize).cast("int").as("__blk"))
       .agg(count(lit(1)).as("__nb"),
         aggregate(
           sort_array(collect_list(struct(col("pos"), col(lnCol)))),
@@ -251,21 +260,24 @@ object Corpus {
       Seq(idCol), "left_semi")
   }
 
-  /** Per-position n-gram lookup rows for [[ngramLmStats]]: one row per
+  /** The c9 LM tokenizer, shared by the fit and both scoring arms so gram
+    * keys cannot drift between them: lower-cased, space-trimmed, split on
+    * whitespace runs. Empty tokens are FILTERED (split of a
+    * whitespace-only string yields [""]): an empty document must produce
+    * zero positions — n_tokens 0, ppl null, gate passes — not a single
+    * ""-token scored at the OOV floor. */
+  private def lmTokens(text: Column): Column =
+    filter(split(trim(lower(text)), "\\s+"), t => t =!= "")
+
+  /** Per-position n-gram lookup rows of [[lmTokens]]: one row per
     * (document, position, gram order k ≤ min(pos, order)) carrying the
     * k-gram ENDING at the position (`g`) and its length-(k−1) history
-    * (`h`, empty string at k=1). The same generator tokenizes the
-    * reference corpus (count side) and the scored documents (query side),
-    * so gram strings cannot drift between the two. */
+    * (`h`, empty string at k=1). The fit counts these rows; the join arm
+    * scores them. */
   private def ngramRows(
       df: DataFrame, textCol: String, keep: Seq[Column], order: Int): DataFrame = {
-    // empty tokens are FILTERED (split of a whitespace-only string yields
-    // [""]): an empty document must produce zero positions — n_tokens 0,
-    // ppl null, gate passes — not a single ""-token scored at the OOV
-    // floor
     val toked = df
-      .withColumn("__toks",
-        filter(split(trim(lower(col(textCol))), "\\s+"), t => t =!= ""))
+      .withColumn("__toks", lmTokens(col(textCol)))
       .withColumn("__n", size(col("__toks")))
     toked.select(keep :+ explode(
         // guard: sequence(1, 0) would DESCEND ([1,0]) for an empty doc
@@ -280,96 +292,79 @@ object Corpus {
       .select(keep ++ Seq(col("__r.pos"), col("__r.k"), col("__r.g"), col("__r.h")): _*)
   }
 
-  /** Backoff 5-gram LM perplexity — the order CCNet's actual filter runs
-    * at (Wenzek et al. 2020 score with a KenLM 5-gram; [[perplexityStats]]
-    * remains the add-α bigram fallback for corpora too small to populate
-    * higher orders). Smoothing is Stupid Backoff (Brants et al., "Large
-    * Language Models in Machine Translation", EMNLP 2007 — the published
-    * LARGE-SCALE choice precisely because it needs only raw counts, no
-    * discount statistics): S(w|h) = c(h,w)/c(h) when the full gram was
-    * seen, else λ·S(w|backoff(h)) with λ = 0.4, grounding at an add-α
-    * unigram so OOV tokens score finitely. Scores are not normalized
-    * probabilities (Brants' point); exp(−Σ ln S / N) is the same
-    * reference-likeness ranking CCNet thresholds on.
-    *
-    * Spark-first shape, extending the bigram design: ALL orders' counts
-    * live in ONE (k, gram, count) frame (built by the same position
-    * generator that scores documents), each document position joins that
-    * frame twice (gram hit + history count — the history is a contiguous
-    * subgram, so a gram hit implies its history hit), the longest
-    * matching order wins via struct-max, and the per-document sum is the
-    * BLOCKED left-associative fold of [[blockedLnSum]] — run-stable,
-    * bounded agg state, SQL-replayable (the c9 oracle replays the
-    * identical two-level fold and gates the ppl values). The count
-    * frame is reference-corpus-sized: CCNet's reference is
-    * Wikipedia-scale, so at 100 TB the two joins broadcast the LM (KenLM
-    * ships the same counts to every node as a binary blob) and the corpus
-    * itself never shuffles for scoring — only the per-document fold
-    * exchanges fixed-width (pos, lnS) rows.
-    *
-    * Output: (idCol, n_tokens, ppl) — every document with ≥1 token
-    * scores (the unigram ground covers length-1 docs; the bigram op
-    * nulls those).
-    */
-  def ngramLmStats(
-      docs: DataFrame, idCol: String, textCol: String,
-      lmCorpus: DataFrame, lmTextCol: String,
-      order: Int = 5, lambda: Double = 0.4, alpha: Double = 0.1): DataFrame = {
-    require(order >= 2, s"order must be >=2, got $order")
-    require(lambda > 0 && lambda <= 1, s"backoff lambda must be in (0,1], got $lambda")
-    require(alpha > 0, s"smoothing alpha must be positive, got $alpha")
-    // localCheckpoint (eager): THREE consumers — the driver-side unigram
-    // totals plus the two join sides — would each re-run the full
-    // reference explode+aggregate otherwise (the reference is
-    // Wikipedia-scale in the CCNet deployment this models)
-    //
-    // 64-bit gram fingerprints (codegen xxhash64) are taken BEFORE the
-    // fit aggregate, so the fit exchange ships fixed-width (k, gid) keys
-    // — never the up-to-5-token gram strings (guide §2.3 narrower keys;
-    // the map-side partial agg then also hashes longs, not strings). The
-    // scoring side likewise carries only (id, pos, k, gid, hid). Exactness
-    // modulo 64-bit collisions (~n²/2⁶⁵ expected spurious merges;
-    // negligible at Wikipedia-scale vocabularies, the same risk class
-    // KenLM's hashed probing tables accept — and the same contract the
-    // string-keyed fit already carried on its join side, where a collision
-    // produced a duplicate lookup match).
+  /** A fitted c9 LM: the (k, __gid, __c) count frame, the reference
+    * vocabulary `v` and token total `t` of the add-α unigram ground, and
+    * the frame's row count (the broadcast-ceiling gate). */
+  private final case class LmFit(counts: DataFrame, v: Long, t: Long, rows: Long)
+
+  private def fitNgramLm(lmCorpus: DataFrame, lmTextCol: String, order: Int): LmFit = {
+    // localCheckpoint (eager): the totals below and the scoring arm would
+    // each re-run the full reference explode+aggregate otherwise (the
+    // reference is Wikipedia-scale in the CCNet deployment this models).
+    // 64-bit gram fingerprints (codegen xxhash64) are taken BEFORE the fit
+    // aggregate, so the fit exchange ships fixed-width (k, gid) keys —
+    // never the up-to-5-token gram strings.
     val counts = ngramRows(lmCorpus, lmTextCol, Nil, order)
       .groupBy(col("k"), xxhash64(col("g")).as("__gid"))
       .agg(count(lit(1)).as("__c"))
       .localCheckpoint()
-    val cg = counts.select(col("k"), col("__gid"), col("__c").as("__cg"))
-    val chist = counts.select((col("k") + 1).as("k"),
+    // V (distinct unigrams), T (unigram total) and the frame's row count
+    // in ONE shuffle-free job over the checkpointed partitions — a
+    // DataFrame global aggregate would add an exchange and, under AQE, a
+    // second job
+    val (v, t, rows) = counts.rdd
+      .map(r => if (r.getInt(0) == 1) (1L, r.getLong(2), 1L) else (0L, 0L, 1L))
+      .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+    require(v > 0, "ngramLmStats: the reference corpus is empty")
+    LmFit(counts, v, t, rows)
+  }
+
+  /** The fitted counts as one broadcast [[NgramLm]]: each partition packs
+    * its rows into per-order primitive arrays (no per-row objects reach
+    * the driver), the driver builds one probing table per order. */
+  private def broadcastLm(
+      fit: LmFit, order: Int, lambda: Double, alpha: Double): Broadcast[NgramLm] = {
+    val parts = fit.counts.rdd.mapPartitions { rows =>
+      val gids = Array.fill(order)(Array.newBuilder[Long])
+      val cs = Array.fill(order)(Array.newBuilder[Long])
+      rows.foreach { r =>
+        val k = r.getInt(0) - 1
+        gids(k) += r.getLong(1)
+        cs(k) += r.getLong(2)
+      }
+      Iterator((gids.map(_.result()), cs.map(_.result())))
+    }.collect()
+    val tables = Array.tabulate(order)(k => GramCounts.build(
+      Array.concat(parts.map(_._1(k)).toIndexedSeq: _*),
+      Array.concat(parts.map(_._2(k)).toIndexedSeq: _*)))
+    fit.counts.sparkSession.sparkContext.broadcast(
+      new NgramLm(tables, math.log(lambda), alpha, fit.t + alpha * fit.v))
+  }
+
+  /** c9's join plan: every document position joins the count frame twice
+    * (gram hit + history count — the history is a contiguous subgram, so
+    * a gram hit implies its history hit), the longest matching order wins
+    * via struct-max, and the per-document sum is the blocked fold of
+    * [[blockedLnSum]]. It scores past [[LmBroadcastMaxRows]], where the
+    * lookups degrade to a fingerprint-keyed exchange, and it is the
+    * reference the kernel is specified against. Positions group by
+    * `idCol`. */
+  private def ngramLmJoinStats(
+      docs: DataFrame, idCol: String, textCol: String, fit: LmFit,
+      order: Int, lambda: Double, alpha: Double): DataFrame = {
+    val cg = fit.counts.select(col("k"), col("__gid"), col("__c").as("__cg"))
+    val chist = fit.counts.select((col("k") + 1).as("k"),
       col("__gid").as("__hid"), col("__c").as("__ch"))
     val rows = ngramRows(docs, textCol, Seq(col(idCol)), order)
       .select(col(idCol), col("pos"), col("k"),
         xxhash64(col("g")).as("__gid"), xxhash64(col("h")).as("__hid"))
-    // the add-α unigram ground: (c(w)+α) / (T+αV), T and V computed in
-    // the SAME arithmetic order the SQL replay uses (T + α·V). Count is
-    // read (and gated on) BEFORE the sum: an empty reference yields a
-    // NULL sum and getLong would throw an opaque NPE ahead of the
-    // diagnostic. The same (cheap, checkpointed-input) aggregate also
-    // sizes the whole count frame for the broadcast-ceiling gate below.
-    val unigrams = counts
-      .agg(count(when(col("k") === 1, 1)),
-        sum(when(col("k") === 1, col("__c"))).cast("long"),
-        count(lit(1))).head()
-    val v = unigrams.getLong(0)
-    require(v > 0, "ngramLmStats: the reference corpus is empty")
-    val t = unigrams.getLong(1)
-    val frameRows = unigrams.getLong(2)
-    // EXPLICIT broadcast while the frame fits: CCNet's production filter
-    // ships the full KenLM model to every node — the hint is the published
-    // architecture, not an optimizer-threshold accident (ExplainCheck
-    // re-asserts the plan with autoBroadcastJoinThreshold disabled). Past
-    // [[LmBroadcastMaxRows]] (Spark's 8 GB broadcast hard limit would
-    // abort the job) the lookup degrades to a fingerprint-keyed exchange.
     val looked = rows
-      .join(lmJoinSide(cg, frameRows), Seq("k", "__gid"), "left")
-      .join(lmJoinSide(chist, frameRows), Seq("k", "__hid"), "left")
+      .join(lmJoinSide(cg, fit.rows), Seq("k", "__gid"), "left")
+      .join(lmJoinSide(chist, fit.rows), Seq("k", "__hid"), "left")
     val candidate = when(col("k") === 1,
         struct(lit(1).as("k"),
           log((coalesce(col("__cg"), lit(0L)) + lit(alpha)) /
-            (lit(t) + lit(alpha) * lit(v))).as("lnp")))
+            (lit(fit.t) + lit(alpha) * lit(fit.v))).as("lnp")))
       .otherwise(when(col("__cg").isNotNull,
         struct(col("k").as("k"), log(col("__cg") / col("__ch")).as("lnp"))))
     val perPos = looked
@@ -391,18 +386,109 @@ object Corpus {
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"), col("ppl"))
   }
 
+  /** Fit the c9 LM and pick its scoring arm: `Left` is the per-document
+    * kernel column (struct(n_tokens, ppl) of `textCol`) while the count
+    * frame has at most `maxBroadcastRows` rows, `Right` the join plan's
+    * stats frame above it. */
+  private def ngramLm(
+      docs: DataFrame, idCol: String, textCol: String,
+      lmCorpus: DataFrame, lmTextCol: String,
+      order: Int, lambda: Double, alpha: Double,
+      maxBroadcastRows: Long): Either[Column, DataFrame] = {
+    require(order >= 2, s"order must be >=2, got $order")
+    require(lambda > 0 && lambda <= 1, s"backoff lambda must be in (0,1], got $lambda")
+    require(alpha > 0, s"smoothing alpha must be positive, got $alpha")
+    val fit = fitNgramLm(lmCorpus, lmTextCol, order)
+    if (fit.rows <= maxBroadcastRows)
+      Left(NgramLm.score(lmTokens(col(textCol)), broadcastLm(fit, order, lambda, alpha)))
+    else Right(ngramLmJoinStats(docs, idCol, textCol, fit, order, lambda, alpha))
+  }
+
+  /** Backoff 5-gram LM perplexity — the order CCNet's actual filter runs
+    * at (Wenzek et al. 2020 score with a KenLM 5-gram; [[perplexityStats]]
+    * remains the add-α bigram fallback for corpora too small to populate
+    * higher orders). Smoothing is Stupid Backoff (Brants et al., "Large
+    * Language Models in Machine Translation", EMNLP 2007 — the published
+    * LARGE-SCALE choice precisely because it needs only raw counts, no
+    * discount statistics): S(w|h) = c(h,w)/c(h) when the full gram was
+    * seen, else λ·S(w|backoff(h)) with λ = 0.4, grounding at an add-α
+    * unigram so OOV tokens score finitely. Scores are not normalized
+    * probabilities (Brants' point); exp(−Σ ln S / N) is the same
+    * reference-likeness ranking CCNet thresholds on.
+    *
+    * Spark-first shape, CCNet/KenLM's: ALL orders' counts live in ONE
+    * (k, gram fingerprint, count) frame fitted by one aggregate over the
+    * reference; the driver collects it into per-order probing tables and
+    * ships them to every executor as ONE broadcast variable; each
+    * document is then scored in place by [[NgramLmKernel]] — one pass,
+    * inside the scan stage, no join, no aggregate, the corpus never
+    * shuffles for scoring. The per-document sum is the BLOCKED
+    * left-associative fold of [[blockedLnSum]] — run-stable and
+    * SQL-replayable (the c9 oracle replays the identical two-level fold
+    * and gates the ppl values). Past [[LmBroadcastMaxRows]] count rows
+    * the same LM scores through a join plan with identical doubles.
+    *
+    * Contracts:
+    *  - grams are keyed by 64-bit xxhash64 fingerprints: two distinct
+    *    grams of one order that collide MERGE their counts (~n²/2⁶⁵
+    *    expected merges over n distinct grams — the risk class KenLM's
+    *    hashed probing tables accept), and a gram hit whose history
+    *    misses (possible only through such a collision) yields a null ppl;
+    *  - scoring is per row: `idCol` is carried, never grouped on, so ids
+    *    must be unique (the join arm merges the positions of rows that
+    *    share an id).
+    *
+    * Output: (idCol, n_tokens, ppl) — every document with ≥1 token
+    * scores (the unigram ground covers length-1 docs; the bigram op
+    * nulls those); null or empty text gives (0, null).
+    */
+  def ngramLmStats(
+      docs: DataFrame, idCol: String, textCol: String,
+      lmCorpus: DataFrame, lmTextCol: String,
+      order: Int = 5, lambda: Double = 0.4, alpha: Double = 0.1): DataFrame =
+    ngramLmStats(docs, idCol, textCol, lmCorpus, lmTextCol, order, lambda, alpha,
+      LmBroadcastMaxRows)
+
+  private[graft] def ngramLmStats(
+      docs: DataFrame, idCol: String, textCol: String,
+      lmCorpus: DataFrame, lmTextCol: String,
+      order: Int, lambda: Double, alpha: Double,
+      maxBroadcastRows: Long): DataFrame =
+    ngramLm(docs, idCol, textCol, lmCorpus, lmTextCol, order, lambda, alpha,
+        maxBroadcastRows) match {
+      case Left(score) =>
+        // two projections: the consumer reads the struct twice, so
+        // CollapseProject keeps the kernel evaluated once per row
+        docs.select(col(idCol), score.as("__lm"))
+          .select(col(idCol), col("__lm.n_tokens").as("n_tokens"),
+            col("__lm.ppl").as("ppl"))
+      case Right(stats) => stats
+    }
+
   /** [[ngramLmStats]] as a gate: keep documents at or under `maxPpl`
-    * (unscoreable empty docs pass — length gates own that case). */
+    * (unscoreable empty docs pass — length gates own that case). Under
+    * the broadcast ceiling the gate is a filter over `docs` itself: the
+    * kernel scores each row in the scan stage, no join back by id. */
   def ngramLmFilter(
       docs: DataFrame, idCol: String, textCol: String,
       lmCorpus: DataFrame, lmTextCol: String, maxPpl: Double,
-      order: Int = 5, lambda: Double = 0.4, alpha: Double = 0.1): DataFrame = {
-    val stats = ngramLmStats(docs, idCol, textCol, lmCorpus, lmTextCol,
-      order, lambda, alpha)
-    docs.join(
-      stats.where(col("ppl").isNull || col("ppl") <= maxPpl).select(col(idCol)),
-      Seq(idCol), "left_semi")
-  }
+      order: Int = 5, lambda: Double = 0.4, alpha: Double = 0.1): DataFrame =
+    ngramLmFilter(docs, idCol, textCol, lmCorpus, lmTextCol, maxPpl,
+      order, lambda, alpha, LmBroadcastMaxRows)
+
+  private[graft] def ngramLmFilter(
+      docs: DataFrame, idCol: String, textCol: String,
+      lmCorpus: DataFrame, lmTextCol: String, maxPpl: Double,
+      order: Int, lambda: Double, alpha: Double,
+      maxBroadcastRows: Long): DataFrame =
+    ngramLm(docs, idCol, textCol, lmCorpus, lmTextCol, order, lambda, alpha,
+        maxBroadcastRows) match {
+      // null ppl passes; one comparison, so the kernel runs once per row
+      case Left(score) => docs.where(coalesce(score.getField("ppl") <= maxPpl, lit(true)))
+      case Right(stats) => docs.join(
+        stats.where(col("ppl").isNull || col("ppl") <= maxPpl).select(col(idCol)),
+        Seq(idCol), "left_semi")
+    }
 
   /** Exact-substring span deduplication (Lee et al., "Deduplicating
     * Training Data Makes Language Models Better", ACL 2022): remove every

@@ -3198,23 +3198,20 @@ object QueryCatalog {
 
   /** Fit BPE tokenization (t13): a genuinely FIT byte-pair encoder
     * (Sennrich et al. 2016 — the t4 regex counter's trained sibling).
-    * The default serve path is the broadcast-model JVM encoder over the
-    * distinct-pretoken frame (plan-pure corpus side); the plan-pure
-    * literal-fold regime is opt-in via graft.bpe.literalMaxMerges, with
-    * regime equality pinned by BpeSpec. The generated oracle receives
-    * ONLY the merge table and re-runs the whole encoder in DuckDB
-    * (recursive lowest-rank merge steps with the same left-to-right
-    * fold) — it is regime-blind.
+    * The serve path is the broadcast-model JVM encoder over the
+    * distinct-pretoken frame (plan-pure corpus side). The generated
+    * oracle receives ONLY the merge table and re-runs the whole encoder
+    * in DuckDB (recursive lowest-rank merge steps with the same
+    * left-to-right fold).
     */
   val t13BpeTokens: GraftQuery = GraftQuery(
     "t13_bpe_tokens",
     (s, dir) => {
       val model = T13OracleSql.fitted(s, dir)
-      // plain loader, no tiny-input spread: the r18 spread was sized to
-      // the LITERAL regime's scan-fused merge chain; under the now-default
-      // broadcast encoder the distinct-pretoken mapPartitions re-evaluates
-      // its per-partition setup 32× for no wall win (re-A/B'd r19:
-      // spread 0.482 s wall / 5.28 cpu-s vs plain 0.448 s / 1.13 cpu-s)
+      // plain loader, no tiny-input spread: under the broadcast encoder
+      // a spread re-evaluates the distinct-pretoken mapPartitions'
+      // per-partition setup 32× for no wall win (measured: spread
+      // 0.482 s wall / 5.28 cpu-s vs plain 0.448 s / 1.13 cpu-s)
       graft.operators.Bpe.tokenCounts(
           t(s, dir, "documents"), "doc_id", "text", model)
         .orderBy(col("doc_id"))

@@ -424,6 +424,13 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
   /** Upsert a batch of JSON documents (each must contain an "id" key).
     * `merge=true` shallow-merges new keys over the previous document
     * (`document || EXCLUDED.document`, queries.rs:146-169).
+    *
+    * When the batch holds one id more than once, the LAST occurrence in
+    * the frame's partition order wins. That order is read once, when the
+    * batch is stamped and frozen, so the winner is deterministic only if
+    * `docJsons` is: a frame whose row order depends on a shuffle without
+    * a sort, a sample, or a nondeterministic expression may keep either
+    * duplicate.
     */
   def upsertDocuments(docJsons: DataFrame, merge: Boolean = false): Unit = {
     // FAST PATH — event-sized upserts (the continuous-ingest shape): a

@@ -12,60 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Append a chain of projections to `base` as raw logical Project nodes
-    * and wrap a Dataset around the result ONCE. Every public Dataset
-    * transformation (`select`, `withColumn`, …) eagerly re-analyzes the
-    * whole growing plan, so a loop of k dependent projections costs
-    * O(k²) analyzer work — measured at 0.7–1.1 s of pure driver time for
-    * the 24-step BPE merge chain. Building the Projects directly defers
-    * analysis to the single terminal Dataset construction. Names resolve
-    * exactly as in the equivalent `select` chain (each step against its
-    * child Project's output). */
-  def stackProjections(
-      base: org.apache.spark.sql.DataFrame,
-      steps: Seq[Seq[(String, Column)]]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-    val spark =
-      base.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val analyzer = spark.sessionState.analyzer
-    var plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-      base.queryExecution.analyzed
-    steps.foreach { proj =>
-      val exprs: Seq[NamedExpression] = proj.map { case (n, c) =>
-        // session.expression, not ExpressionUtils.expression: the latter
-        // wraps the ColumnNode in a lazy placeholder that only the
-        // Dataset API's converter unwraps — stacked into a raw Project it
-        // survives to codegen and throws CANNOT_GENERATE_CODE
-        spark.expression(c) match {
-          case ne: NamedExpression if ne.name == n => ne
-          case e => Alias(e, n)()
-        }
-      }
-      // resolve THIS step against a dummy LocalRelation carrying the
-      // child's exact output attributes (same exprIds, so the resolved
-      // references bind to the real child unchanged): per-step analysis
-      // is then O(step) over a two-node plan, while handing the analyzer
-      // the whole k-deep unresolved HOF stack at once blows past its
-      // fixed-point iteration cap (and a Dataset-API loop re-analyzes
-      // the growing plan quadratically)
-      val resolved = analyzer
-        .execute(Project(exprs, LocalRelation(plan.output))) match {
-        // the analyzer rewrites some expressions OUT of Project form
-        // (a generator via ExtractGenerator, window functions via
-        // ExtractWindowExpressions, aggregates) — surface that as a
-        // contract error here rather than an opaque ClassCastException
-        // or a late failure at the terminal Dataset construction
-        case p: Project => p.projectList
-        case other => throw new IllegalArgumentException(
-          "stackProjections only supports plain projection expressions " +
-            "(no generators, window functions, or aggregates); step " +
-            s"${proj.map(_._1).mkString(", ")} analyzed to a " +
-            s"${other.getClass.getSimpleName} node")
-      }
-      plan = Project(resolved, plan)
-    }
-    org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
-  }
 }

@@ -44,30 +44,28 @@ class BpeSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq, s"got ${got.toSeq}\nwant ${want.toSeq}")
   }
 
-  test("broadcast-model regime counts identically to the literal-plan regime") {
+  test("broadcast-model regime counts identically to the driver encoder") {
     val docs = Seq(
       (1L, "the lowest lower low"),
       (2L, "newest widest wide west"),
       (3L, "mixed 42 tokens, here!")).toDF("id", "text")
     val m = Bpe.fit(docs, "id", "text", numMerges = 25)
-    def run(): Seq[(Long, Int, Long)] = Bpe.tokenCounts(docs, "id", "text", m)
+    val viaBroadcast = Bpe.tokenCounts(docs, "id", "text", m)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val saved = Bpe.literalMaxMerges
-    val viaLiteral = try { Bpe.literalMaxMerges = 2048; run() }
-      finally Bpe.literalMaxMerges = saved
-    val viaBroadcast = try { Bpe.literalMaxMerges = 1; run() }
-      finally Bpe.literalMaxMerges = saved
-    assert(viaLiteral == viaBroadcast,
-      s"regimes disagree: $viaLiteral vs $viaBroadcast")
+    val want = docs.as[(Long, String)].collect().sortBy(_._1).map { case (id, t) =>
+      val pts = graft.functions.TextFunctions.bpeishPattern.r.findAllIn(t).toSeq
+      (id, pts.length, pts.map(m.encodeWord(_).length.toLong).sum)
+    }
+    assert(viaBroadcast == want.toSeq,
+      s"broadcast $viaBroadcast vs driver ${want.toSeq}")
   }
 
   test("non-BMP symbols (emoji) tokenize identically in all regimes") {
     // fit/driver/broadcast split per UTF-16 unit before the code-point
-    // fix, while the literal plan's lookaround and the oracle's
-    // string_split are per code point — merges learned over surrogate
-    // halves could then never fire in the plan. All three paths must
-    // treat a supplementary character as ONE symbol.
+    // fix, while the oracle's string_split is per code point — merges
+    // learned over surrogate halves could then never fire. Every path
+    // must treat a supplementary character as ONE symbol.
     val docs = Seq(
       (1L, "👍👍👍👍 go"),
       (2L, "👍👍 stop")).toDF("id", "text")
@@ -76,41 +74,30 @@ class BpeSpec extends AnyFunSuite {
     assert(m.merges.forall { case (a, b) =>
       !a.exists(c => Character.isSurrogate(c) && a.length == 1) &&
         !b.exists(c => Character.isSurrogate(c) && b.length == 1) })
-    def run(): Seq[(Long, Int, Long)] = Bpe.tokenCounts(docs, "id", "text", m)
+    val viaBroadcast = Bpe.tokenCounts(docs, "id", "text", m)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val saved = Bpe.literalMaxMerges
-    val viaLiteral = try { Bpe.literalMaxMerges = 2048; run() }
-      finally Bpe.literalMaxMerges = saved
-    val viaBroadcast = try { Bpe.literalMaxMerges = 1; run() }
-      finally Bpe.literalMaxMerges = saved
-    assert(viaLiteral == viaBroadcast,
-      s"regimes disagree on emoji: $viaLiteral vs $viaBroadcast")
     // four thumbs-up collapse under the learned (👍,👍)-family merges:
-    // the plan must fire them (driver parity), not pass 4 raw symbols
+    // the serving path must fire them (driver parity), not pass 4 raw
+    // symbols
     val want = docs.as[(Long, String)].collect().sortBy(_._1).map { case (id, t) =>
       val pts = graft.functions.TextFunctions.bpeishPattern.r.findAllIn(t).toSeq
       (id, pts.length, pts.map(m.encodeWord(_).length.toLong).sum)
     }
-    assert(viaLiteral == want.toSeq, s"literal ${viaLiteral} vs driver ${want.toSeq}")
+    assert(viaBroadcast == want.toSeq, s"broadcast ${viaBroadcast} vs driver ${want.toSeq}")
   }
 
   test("words longer than the step bound truncate identically in both regimes") {
     // chain-merging 'aaaaaaaa' exhausts to ONE token unbounded; at
     // maxSteps=1 only the first merge fires → 4 tokens. The broadcast
-    // regime must apply the SAME bound as the literal plan (it ran to
-    // exhaustion before the fix, silently changing output when
-    // model.merges.length crossed literalMaxMerges).
+    // regime must apply the bound (it once ran to exhaustion, diverging
+    // from the oracle's bounded recursion).
     val docs = Seq((1L, "aaaaaaaa")).toDF("id", "text")
     val m = Bpe.fit(docs, "id", "text", numMerges = 4)
-    def run(): Long = Bpe.tokenCounts(docs, "id", "text", m, maxSteps = 1)
+    val viaBroadcast = Bpe.tokenCounts(docs, "id", "text", m, maxSteps = 1)
       .collect()(0).getLong(2)
-    val saved = Bpe.literalMaxMerges
-    val viaLiteral = try { Bpe.literalMaxMerges = 2048; run() }
-      finally Bpe.literalMaxMerges = saved
-    val viaBroadcast = try { Bpe.literalMaxMerges = 1; run() }
-      finally Bpe.literalMaxMerges = saved
-    assert(viaLiteral == 4L, s"literal regime at maxSteps=1 gave $viaLiteral")
+    assert(m.encodeWord("aaaaaaaa", maxSteps = 1).length == 4,
+      "driver encode at maxSteps=1 should stop after the first merge")
     assert(viaBroadcast == 4L,
       s"broadcast regime ignored the step bound: $viaBroadcast")
     assert(m.encodeWord("aaaaaaaa").length == 1,

@@ -249,30 +249,7 @@ class CollectionSpec extends AnyFunSuite {
   }
 
   /** Spark jobs `body` starts on this thread (its own job group). */
-  private def jobsOf(body: => Unit): Long = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      // the listener bus is asynchronous: wait for the count to settle
-      var last = -1L
-      var stable = 0
-      val deadline = System.currentTimeMillis() + 10000
-      while (stable < 3 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-        if (jobs.get() == last) stable += 1 else { stable = 0; last = jobs.get() }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
+  private def jobsOf(body: => Unit): Long = TestSpark.jobsOf(spark)(body)
 
   test("vectorSearch job budget over HNSW: 4 unfiltered, 4 + 3 per refill round filtered") {
     val c = newCollection("jobs")

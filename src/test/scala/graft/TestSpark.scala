@@ -17,6 +17,33 @@ object TestSpark {
     s
   }
 
+  /** Spark jobs started while `body` runs on this thread, counted by job
+    * group with a listener (the listener bus is asynchronous, so the
+    * count is read once it stops changing). */
+  def jobsOf(spark: SparkSession)(body: => Unit): Long = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      var last = -1L
+      var stable = 0
+      val deadline = System.currentTimeMillis() + 10000
+      while (stable < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        if (jobs.get() == last) stable += 1 else { stable = 0; last = jobs.get() }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

@@ -806,4 +806,22 @@ class TextDedupSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 3L), s"gate kept $kept")
   }
+
+  test("ngramLmStats and ngramLmFilter score scan-fused: no join, no aggregate") {
+    // the LM ships as one broadcast variable and each document is scored
+    // in place — a Join or HashAggregate here is the per-position
+    // explode + lookup + fold plan coming back
+    val lm = Seq((100L, "a b c d e a b c d e")).toDF("doc_id", "text")
+    // RDD-backed: a local Seq frame would be scored at optimization time
+    val docs = spark.sparkContext.parallelize(Seq((1L, "a b c d e"), (2L, "a b x c d")))
+      .toDF("doc_id", "text")
+    for (df <- Seq(
+        graft.operators.Corpus.ngramLmStats(docs, "doc_id", "text", lm, "text"),
+        graft.operators.Corpus.ngramLmFilter(docs, "doc_id", "text", lm, "text",
+          maxPpl = 10.0))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("ngram_lm_score") &&
+        !p.contains("Join") && !p.contains("HashAggregate"), p)
+    }
+  }
 }
