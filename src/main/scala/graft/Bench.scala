@@ -419,6 +419,19 @@ object Bench {
       ("v9c_hnsw_local" -> hnswLocal) + ("v5c_ivf_local" -> ivfLocal) +
       ("v24c_ivfpq_local" -> ivfpqLocal) + ("s4_sync_delta" -> syncDelta) +
       ("s4_sync_steady" -> syncSteady)
+    // How a leg's output is consumed: count() by default. A count lets
+    // Catalyst prune output columns nothing reads, and c9's scoring kernel
+    // (ppl, n_tokens) is exactly such a projection — counted, the leg timed
+    // only the LM fit — so c9 is consumed by an aggregate over its scores.
+    val scoredBy = Map("c9_ngram_lm" -> Seq("ppl", "n_tokens"))
+    def consume(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      import org.apache.spark.sql.functions.{col, count, lit, sum}
+      scoredBy.get(name) match {
+        case Some(cs) =>
+          df.agg(count(lit(1)), cs.map(c => sum(col(c))): _*).collect(); ()
+        case None => df.count(); ()
+      }
+    }
     // Warm every headline query once, untimed (JIT + classload + index/
     // warehouse builds — indexes are built at ingest, not per query; the
     // reference's HNSW numbers likewise exclude the 2h51m index build),
@@ -428,7 +441,7 @@ object Bench {
     for (w <- headline) {
       spark.sparkContext.setJobDescription(s"bench:$w:warm")
       traceLine(s"LEG_START $w:warm")
-      try queries(w)(spark, sfDir).count() catch { case _: Throwable => }
+      try consume(w, queries(w)(spark, sfDir)) catch { case _: Throwable => }
       traceLine(s"LEG_END   $w:warm")
     }
     spark.sparkContext.setJobDescription(null)
@@ -525,7 +538,7 @@ object Bench {
           spark.sparkContext.setJobDescription(s"bench:$name:p$p")
           traceLine(s"LEG_START $name:p$p")
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
+          val ok = try { consume(name, fn(spark, sfDir)); true }
             catch { case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
           val dt = (System.nanoTime() - t0) / 1e9

@@ -6,9 +6,11 @@ import org.apache.spark.sql.SparkSession
 /** Shared persistence plumbing for ANN index homes ([[IvfIndex]],
   * [[HnswIndex]]): Hadoop-FS IO (HDFS/S3A work like local disk),
   * stage-then-rename atomic publish, source-mtime-keyed home resolution,
-  * and manifest-based pruning of stale sibling homes.
+  * and manifest-based pruning of stale sibling homes. Its fixed-home
+  * residency ([[IndexStore.Family.serveFixed]] + [[listingFingerprint]])
+  * also keeps `graft.store`'s prepared table reads.
   */
-private[operators] object IndexStore {
+private[graft] object IndexStore {
 
   val SourceManifest = "source.path"
 
@@ -193,11 +195,12 @@ private[operators] object IndexStore {
     }
   }
 
-  /** A java.io fingerprint of a local index home: (relative path, length,
-    * mtime) of every file under its `data/`, `delta/` and `_commits/`
-    * trees — what any build, segment append or commit changes. A
-    * non-local home (hdfs://, s3a://) fingerprints as a constant; its
-    * writers' invalidation is then the only freshness signal. */
+  /** A java.io fingerprint of a local home — an index home or a
+    * [[graft.store.DeltaTable]] home alike: (relative path, length, mtime)
+    * of every file under it, which any build, segment append, manifest
+    * write, commit or publish swap changes. A non-local home (hdfs://,
+    * s3a://) fingerprints as a constant; its writers' invalidation is then
+    * the only freshness signal. */
   def listingFingerprint(home: String): Long = {
     val local =
       if (home.startsWith("file:")) "/" + home.stripPrefix("file:").dropWhile(_ == '/')
@@ -211,7 +214,7 @@ private[operators] object IndexStore {
         else sb.append(r).append(':').append(k.length).append(':')
           .append(k.lastModified).append('|')
       }
-    Seq("data", "delta", "_commits").foreach(d => walk(new java.io.File(local, d), d))
+    walk(new java.io.File(local), "")
     graft.functions.TextKernels.fnv1a64(sb.toString)
   }
 

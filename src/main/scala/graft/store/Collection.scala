@@ -1640,6 +1640,18 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     else t.withColumn("hid", hidCol(col("seg"))).drop("seg")
   }
 
+  /** The prepared reads `vectorSearch` resolves and fetches through, one
+    * projection per table, resident while the table's listing holds
+    * ([[SnapshotRead]]): hid → chunk key, document payloads, chunk text. */
+  private[store] def hidKeys(p: Pipeline, field: String): SnapshotRead =
+    SnapshotRead(tablePath(p.name, field, "embeddings"))(
+      hnswKeyed(p, field).select("hid", "document_id", "chunk_index"))
+  private[store] def docPayloads: SnapshotRead =
+    SnapshotRead(docsPath)(documents.select("source_uuid", "document"))
+  private[store] def chunkTexts(p: Pipeline, field: String): SnapshotRead =
+    SnapshotRead(tablePath(p.name, field, "chunks"))(
+      chunks(p, field).select("document_id", "chunk_index", "chunk"))
+
   /** Sync-time signature-table rebuild for a field with `binaryIndex`:
     * (document_id, chunk_index, sig) — the natural keys ride along so
     * cascade deletes tombstone it like any derived table and candidates
@@ -1705,9 +1717,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       .toDF("document_id", "chunk_index", "score")
 
   /** Graph top-k, then the surrogate hits resolve back to (document_id,
-    * chunk_index) through one key-filtered collect of two narrow columns,
-    * never vectors. Between delta syncs and the next merge, graphs hold up
-    * to `stale[field]` superseded nodes whose hits resolve to nothing; the
+    * chunk_index) through one key lookup on the embeddings table's
+    * prepared read ([[hidKeys]]: three narrow columns, never vectors).
+    * Between delta syncs and the next merge, graphs hold up to
+    * `stale[field]` superseded nodes whose hits resolve to nothing; the
     * fetch widens by exactly that count so a top-k can never under-fill. */
   private def hnswHits(p: Pipeline, field: String, query: Array[Float], k: Int,
       ef: Int): Seq[Collection.Hit] = {
@@ -1730,15 +1743,14 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     val hitRows = hnswIndex(p, field).serveDistributed(query, kk,
       if (ef > 0) math.max(ef, kk) else 0)
     if (hitRows.isEmpty) return Nil
-    val keys = hnswKeyed(p, field)
-      .where(col("hid").isin(hitRows.map(_._1).distinct.toSeq: _*))
-      .select(col("hid"), col("document_id"), col("chunk_index"))
-      .collect().groupBy(_.getLong(0))
+    val keys = hidKeys(p, field)
+      .lookup(Seq("hid"), hitRows.map(h => Seq(h._1)).distinct.toSeq)
+      .groupBy(_.getLong(0))
     // a stale node's hid resolves to no live row and drops out
     hitRows.toSeq
       .flatMap { case (hid, s) =>
-        keys.getOrElse(hid, Array.empty[org.apache.spark.sql.Row])
-          .map(r => Collection.Hit(field, r.getString(1), r.getInt(2), s))
+        keys.getOrElse(hid, Array.empty[org.apache.spark.sql.catalyst.InternalRow])
+          .map(r => Collection.Hit(field, r.getUTF8String(1).toString, r.getInt(2), s))
       }
       .sorted(Collection.hitOrder)
       .distinctBy(h => (h.docId, h.chunkIndex))
@@ -1815,8 +1827,8 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * (vector_search_query_builder.rs:77-401). Per field: embed the query
     * driver-side and collect the field's top-k (cosine × boost) under the
     * optional metadata filter and full-text chunk filter; one driver merge
-    * takes the global top-k; one key-filtered collect per table fetches the
-    * payloads; optional deterministic rerank stand-in.
+    * takes the global top-k; one key lookup per table fetches the payloads;
+    * optional deterministic rerank stand-in.
     *
     * Returns (document_id, document, chunk, score [, rerank_score]),
     * ordered by score desc, document_id, chunk_index (by rerank_score
@@ -1825,12 +1837,22 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * consuming it later never re-runs the search against tables or index
     * homes a sync or background merge has since swapped.
     *
-    * Spark jobs per call over an HNSW field: 4 unfiltered (graph probe,
+    * No per-call Catalyst work over an HNSW field: the graph probe runs on
+    * the resident index handle, and the hid → chunk-key resolve, the
+    * documents payload and the chunk text are key lookups on each table's
+    * prepared read ([[SnapshotRead]]) — one physical plan per table,
+    * planned once and kept while the table home's file listing
+    * ([[graft.operators.IndexStore.listingFingerprint]]) is unchanged, so
+    * every call reads the snapshot the home holds when the call starts. A
+    * metadata filter is the same compiled filter as `where(filter)`,
+    * evaluated on the fetched documents rows on the driver.
+    *
+    * Spark jobs per call over one HNSW field: 4 unfiltered (graph probe,
     * hid → chunk-key resolve, documents payload, chunk text); with a
     * metadata filter the same 4 when the first over-fetch fills the top-k,
-    * plus 3 (probe, resolve, filtered documents) per refill round. The
-    * resident index handle adds its load jobs only on the first call after
-    * a sync rebuilt or appended to the home.
+    * plus 3 (probe, resolve, documents) per refill round. The index handle
+    * and each prepared read add their planning and load jobs only on the
+    * first call after a write changed their home.
     */
   def vectorSearch(
       p: Pipeline,
@@ -1843,22 +1865,24 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     val docFilter = filterJson.map(f =>
       FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document"))))
     // payloads of the documents looked up so far that pass the filter
-    // (every one found, when there is none): one key-filtered collect per
-    // batch of new ids is both the filter verdict and the payload fetch
+    // (every one found, when there is none): one key lookup per batch of
+    // new ids on the documents' prepared read fetches the payloads, and
+    // the filter, bound to that read's rows, gives the verdict
     val payload = scala.collection.mutable.HashMap.empty[String, String]
     val looked = scala.collection.mutable.HashSet.empty[String]
+    lazy val passes = docFilter.map(docPayloads.predicate(spark, _))
     def fetchDocs(ids: Seq[String]): Unit = {
       val fresh = ids.filterNot(looked).distinct
       if (fresh.nonEmpty) {
-        val keyed = documents.where(col("source_uuid").isin(fresh: _*))
-        docFilter.fold(keyed)(keyed.where)
-          .select(col("source_uuid"), col("document")).collect()
-          .foreach(r => payload.put(r.getString(0), r.getString(1)))
+        docPayloads.lookup(Seq("source_uuid"), fresh.map(Seq(_)))
+          .filter(r => passes.forall(_(r)))
+          .foreach(r => payload.put(r.getUTF8String(0).toString, SnapshotRead.string(r, 1)))
         looked ++= fresh
       }
     }
-    // the exact scan's pre-limit gate: top-k of the FILTERED set
-    val filteredIds = docFilter.map(f =>
+    // the exact scan's pre-limit gate: top-k of the FILTERED set (planned
+    // only when a field takes the exact scan)
+    lazy val filteredIds = docFilter.map(f =>
       documents.where(f).select(col("source_uuid").as("document_id")))
     val perField = fieldQueries.map { fq =>
       val fieldDef = p.fields.find(_.name == fq.field)
@@ -1942,14 +1966,12 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     // driver for filtered index hits), chunk text by key per field
     fetchDocs(top.map(_.docId))
     val text: Map[(String, String, Int), String] =
-      if (top.isEmpty) Map.empty
-      else top.groupBy(_.field).toSeq.map { case (fn, hs) =>
-        chunks(p, fn)
-          .where(col("document_id").isin(hs.map(_.docId).distinct: _*) &&
-            col("chunk_index").isin(hs.map(_.chunkIndex).distinct: _*))
-          .select(lit(fn), col("document_id"), col("chunk_index"), col("chunk"))
-      }.reduce(_ unionAll _).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getInt(2)) -> r.getString(3)).toMap
+      top.groupBy(_.field).toSeq.flatMap { case (fn, hs) =>
+        chunkTexts(p, fn)
+          .lookup(Seq("document_id", "chunk_index"),
+            hs.map(h => Seq(h.docId, h.chunkIndex)).distinct)
+          .map(r => (fn, r.getUTF8String(0).toString, r.getInt(1)) -> SnapshotRead.string(r, 2))
+      }.toMap
     val joined = top.flatMap { h =>
       for {
         doc <- payload.get(h.docId)

@@ -281,6 +281,28 @@ class CollectionSpec extends AnyFunSuite {
       }
   }
 
+  test("a warm vectorSearch over HNSW runs no Catalyst query, filtered or not") {
+    val c = newCollection("noquery")
+    c.upsertDocuments(dummyDocs(200))
+    val p = Pipeline("pq", Seq(PipelineField("body", splitter = Some((100000, 0)),
+      semanticSearch = Some(HashEmbedder(64)), hnswIndex = Some((8, 32)))))
+    c.syncPipeline(p)
+    c.awaitMaintenance()
+    def run(q: String, filter: Option[String]): Unit = {
+      c.vectorSearch(p, Seq(VectorSearchField("body", q)), limit = 5, filterJson = filter)
+      ()
+    }
+    val filter = Some("""{"category": {"$gte": 0}}""")
+    run("warm the resident handle and reads", None)
+    run("warm the resident handle and reads", filter)
+    Seq(None, filter).foreach { f =>
+      val q = TestSpark.queriesOf(spark)(run("Test body 7 document", f))
+      assert(q == 0, s"warm vectorSearch (filter $f) ran $q Catalyst queries")
+      val n = jobsOf(run("spark data engine", f))
+      assert(n <= 4, s"warm vectorSearch (filter $f) ran $n Spark jobs (budget 4)")
+    }
+  }
+
   test("vector_search returns relevant docs first, respects filter and rerank shape") {
     val c = newCollection("c5")
     c.upsertDocuments(dummyDocs(12))

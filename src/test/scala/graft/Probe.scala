@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   *
   *   time <query>... [sfDir] [nPasses]   warm + median timing of catalog queries
   *   explain <query> [sfDir]             executed plan of a catalog query
+  *   count-prune [query...] [sfDir]      what a bare count() drops from each query's plan
   *   drive                               manual e2e drive of the public surface
   *   ivf-recall [sfDir]                  measured recall@10 at nprobe=4/nlist=16
   *   profile [sfDir]                     stage decomposition of m1 + s4 legs
@@ -99,6 +100,30 @@ object Probe {
       val spark = session()
       for (q <- queries)
         println(s"ROWS $q = ${SparkEntry.queries(q)(spark, sfDir).count()}")
+      spark.stop()
+
+    case "count-prune" :: rest =>
+      // which catalog queries a bare count() would time only in part: the
+      // plan operators and expression classes of the query's optimized
+      // plan that its count's optimized plan no longer has (Catalyst
+      // prunes output columns nothing reads — c9's scoring kernel was one)
+      val (named, opts) = rest.partition(SparkEntry.queries.contains)
+      val sfDir = opts.find(_.startsWith("/")).getOrElse(TestSpark.sf0001)
+      val spark = session(4)
+      def classes(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Set[String] =
+        p.collectWithSubqueries { case n => n }.flatMap(n =>
+          n.nodeName +: n.expressions.flatMap(_.collect { case e => e.prettyName })).toSet
+      val trivial = Set("Sort", "sortorder", "Project", "alias", "attributereference",
+        "literal", "GlobalLimit", "LocalLimit")
+      for (q <- if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted) {
+        val lost = scala.util.Try {
+          val df = SparkEntry.queries(q)(spark, sfDir)
+          classes(df.queryExecution.optimizedPlan) --
+            classes(df.groupBy().count().queryExecution.optimizedPlan) -- trivial
+        }
+        println(s"COUNT_PRUNES $q " + lost.fold(e => s"ERROR ${e.getMessage.take(80)}",
+          l => l.toSeq.sorted.mkString(",")))
+      }
       spark.stop()
 
     case "explain" :: q :: rest =>

@@ -44,6 +44,33 @@ object TestSpark {
     jobs.get()
   }
 
+  /** Catalyst query executions that finished while `body` ran, counted
+    * with a `QueryExecutionListener`. A marker query runs after `body`; the
+    * listener bus delivers in order, so once the marker is seen every
+    * execution of `body` has been counted. Counts the whole session: run
+    * nothing else concurrently. */
+  def queriesOf(spark: SparkSession)(body: => Unit): Long = {
+    val marker = s"queries_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val seen = new java.util.concurrent.atomic.AtomicLong(0)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def count(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
+        else { seen.incrementAndGet(); () }
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = count(qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = count(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS), "marker query never reported")
+    } finally spark.listenerManager.unregister(listener)
+    seen.get()
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

@@ -9,10 +9,12 @@ import graft.TestSpark
 import graft.functions.HashEmbedder
 import graft.operators.HnswIndex
 
-/** Invariant "no cache entry outlives its source" for the resident index
-  * handle `vectorSearch` serves from: after every kind of write, the next
-  * search on a long-lived Collection returns exactly what a fresh load of
-  * the same warehouse returns with its index caches dropped. */
+/** Invariant "no cache entry outlives its source" for the resident state
+  * `vectorSearch` serves from — the index handle and the prepared reads of
+  * the embeddings, documents and chunks tables: after every kind of write,
+  * the next search on a long-lived Collection returns exactly what a fresh
+  * load of the same warehouse returns with those caches dropped, and its
+  * payloads and chunk text are what a Catalyst read of the tables holds. */
 class ResidentIndexSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
@@ -22,33 +24,69 @@ class ResidentIndexSpec extends AnyFunSuite {
   private val pipeline = Pipeline("p", Seq(PipelineField("body",
     splitter = Some((100000, 0)), semanticSearch = Some(HashEmbedder(32)),
     hnswIndex = Some((8, 32)), annEf = 500)))
+  private val kindFilter = """{"kind": {"$eq": 1}}"""
+
+  private def docJson(i: Int, tag: String, kind: Int, rev: Int = 0): String =
+    s"""{"id": $i, "body": "$tag doc $i ${"idea " * (i % 5 + 1)}", "kind": $kind, "rev": $rev}"""
 
   private def upsert(c: Collection, ids: Range, tag: String): Unit =
-    c.upsertDocuments(ids.map(i =>
-      s"""{"id": $i, "body": "$tag doc $i ${"idea " * (i % 5 + 1)}", "kind": ${i % 2}}""")
-      .toDF("document"))
+    c.upsertDocuments(ids.map(i => docJson(i, tag, i % 2)).toDF("document"))
+
+  /** Rewrite document `i`'s JSON without touching its body: its payload
+    * and its filter verdict change, its chunks do not. */
+  private def revise(c: Collection, i: Int, tag: String, kind: Int, rev: Int): Unit =
+    c.upsertDocuments(Seq(docJson(i, tag, kind, rev)).toDF("document"))
 
   private def search(c: Collection, q: String, filtered: Boolean = false): Seq[Row] =
     c.vectorSearch(pipeline, Seq(VectorSearchField("body", q)), limit = 5,
-      filterJson = if (filtered) Some("""{"kind": {"$eq": 1}}""") else None)
+      filterJson = if (filtered) Some(kindFilter) else None)
       .collect().toSeq
 
+  private def homes(wh: String): Seq[String] =
+    Seq("documents", "p/body_embeddings", "p/body_chunks").map(t => s"$wh/$name/$t")
+
   /** A fresh load: the warehouse's index handle dropped with its graphs,
-    * probe RDD and cached blob frame (only this home's — other suites'
-    * caches share the JVM), and a new Collection over the same warehouse. */
+    * probe RDD and cached blob frame, and its tables' prepared reads
+    * dropped (only this warehouse's — other suites' caches share the JVM),
+    * and a new Collection over the same warehouse. */
   private def fresh(wh: String, q: String, filtered: Boolean = false): Seq[Row] = {
     HnswIndex.invalidate(s"$wh/$name/p/body_hnsw")
+    homes(wh).foreach(SnapshotRead.invalidate)
     search(new Collection(spark, name, wh), q, filtered)
   }
 
-  /** The long-lived collection's next answers (handle possibly resident)
-    * equal a fresh load's, filtered and not; then re-warm the handle so
-    * the next write has a resident entry to invalidate. */
+  /** Every row's payload is the document a Catalyst read of `documents`
+    * holds for its id (and passes a Catalyst `where` of the filter), and
+    * its chunk is one of that document's chunks. */
+  private def assertCatalystPayloads(c: Collection, rows: Seq[Row], filtered: Boolean,
+      after: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val ids = rows.map(_.getString(0)).distinct
+    val keyed = c.documents.where(col("source_uuid").isin(ids: _*))
+    val docs = (if (filtered) keyed.where(FilterCompiler.compile(kindFilter,
+        FilterCompiler.jsonStringResolver(col("document")))) else keyed)
+      .select("source_uuid", "document").as[(String, String)].collect().toMap
+    val chunks = c.chunks(pipeline, "body").where(col("document_id").isin(ids: _*))
+      .select("document_id", "chunk").as[(String, String)].collect().toSet
+    rows.foreach { r =>
+      assert(docs.get(r.getString(0)).contains(r.getString(1)),
+        s"payload of ${r.getString(0)} differs from a Catalyst read after $after")
+      assert(chunks((r.getString(0), r.getString(2))),
+        s"chunk of ${r.getString(0)} differs from a Catalyst read after $after")
+    }
+  }
+
+  /** The long-lived collection's next answers (handle and reads possibly
+    * resident) equal a fresh load's, filtered and not, with Catalyst's
+    * payloads; then re-warm so the next write has resident entries to
+    * outlive. */
   private def assertFresh(c: Collection, wh: String, q: String, after: String): Unit = {
     val served = (search(c, q), search(c, q, filtered = true))
     val want = (fresh(wh, q), fresh(wh, q, filtered = true))
     assert(served == want, s"stale results after $after")
     assert(served._1.nonEmpty && served._2.nonEmpty)
+    assertCatalystPayloads(c, served._1, filtered = false, after)
+    assertCatalystPayloads(c, served._2, filtered = true, after)
     search(c, q)
   }
 
@@ -67,6 +105,14 @@ class ResidentIndexSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** A copy of `home` as it is now, in a new temp dir. */
+  private def snapshot(home: Path): Path = {
+    val copy = Files.createTempDirectory("graft_resident_home_")
+    deleteTree(copy)
+    copyTree(home, copy)
+    copy
+  }
+
   test("the handle is resident across searches and dropped by every writer") {
     val wh = Files.createTempDirectory("graft_resident_").toString
     val c = new Collection(spark, name, wh)
@@ -74,9 +120,14 @@ class ResidentIndexSpec extends AnyFunSuite {
     upsert(c, 0 until 40, "first")
     c.syncPipeline(pipeline)
     search(c, "first doc 3")
+    search(c, "first doc 3", filtered = true)
     val h = c.hnswIndex(pipeline, "body")
+    def reads = Seq(c.hidKeys(pipeline, "body"), c.docPayloads, c.chunkTexts(pipeline, "body"))
+    val rs = reads
     search(c, "first doc 4")
+    search(c, "first doc 4", filtered = true)
     assert(c.hnswIndex(pipeline, "body") eq h, "the handle was reloaded without a write")
+    assert(reads.zip(rs).forall { case (a, b) => a eq b }, "a read was re-planned without a write")
 
     // 1. delta sync: appendSegmentLocal
     upsert(c, 40 until 43, "zanzibar")
@@ -92,22 +143,30 @@ class ResidentIndexSpec extends AnyFunSuite {
     assertFresh(c, wh, "zanzibar doc 42", "a merge publish")
     c.mergeEvery = 1000
 
-    // 3. delete cascade
+    // 3. an upsert that changes documents' JSON but not their chunks: doc
+    // 15 leaves the filter's set, doc 20 joins it (both rank first for
+    // their own query)
+    revise(c, 15, "first", kind = 0, rev = 1)
+    revise(c, 20, "first", kind = 1, rev = 1)
+    assertFresh(c, wh, "first doc 15", "an upsert changing a document's JSON")
+    assertFresh(c, wh, "first doc 20", "an upsert changing a document's JSON")
+    assert(search(c, "first doc 20", filtered = true).headOption
+      .exists(_.getString(1).contains("\"id\": 20, ")), "the revised document was not served")
+
+    // 4. delete cascade
     c.deleteDocuments("""{"id": {"$eq": 41}}""")
     assertFresh(c, wh, "zanzibar doc 41", "a delete cascade")
 
-    // 4. a write through a second Collection over the same warehouse
+    // 5. a write through a second Collection over the same warehouse
     val other = new Collection(spark, name, wh)
     upsert(other, 43 until 46, "quasar")
     other.syncPipeline(pipeline)
     assertFresh(c, wh, "quasar doc 44", "another instance's sync")
 
-    // 5. an out-of-band rewrite of the home's files: put back an older
-    // forest (no quasar nodes) without any graft writer seeing it
+    // 6. an out-of-band rewrite of the home's files: put back an older
+    // forest (no flotilla nodes) without any graft writer seeing it
     val home = java.nio.file.Paths.get(s"$wh/$name/p/body_hnsw")
-    val older = Files.createTempDirectory("graft_resident_home_")
-    deleteTree(older)
-    copyTree(home, older)
+    val older = snapshot(home)
     upsert(other, 46 until 49, "flotilla")
     other.syncPipeline(pipeline)
     val before = search(c, "flotilla doc 47")
@@ -116,6 +175,73 @@ class ResidentIndexSpec extends AnyFunSuite {
     val after = search(c, "flotilla doc 47")
     assert(after != before, "the rewrite did not change what the forest answers")
     assert(after == fresh(wh, "flotilla doc 47"), "stale results after an out-of-band rewrite")
+    assertCatalystPayloads(c, after, filtered = false, "an out-of-band rewrite")
+
+    // 7. an out-of-band rewrite of the documents table: put back its files
+    // from before a JSON change, after a search planned the changed ones
+    val docsHome = java.nio.file.Paths.get(s"$wh/$name/documents")
+    val olderDocs = snapshot(docsHome)
+    revise(c, 45, "quasar", kind = 1, rev = 2)
+    assert(search(c, "quasar doc 45", filtered = true)
+      .exists(r => "\"rev\"\\s*:\\s*2\\b".r.findFirstIn(r.getString(1)).isDefined),
+      "the revised payload was not served")
+    deleteTree(docsHome)
+    copyTree(olderDocs, docsHome)
+    assertFresh(c, wh, "quasar doc 45", "an out-of-band documents rewrite")
+
+    // 8. a documents-compaction publish forced right after a segment
+    // commit, with the reads planned on the pre-publish listing between:
+    // fragment the table to its budget, then a bulk upsert's seam plans
+    // the reads and schedules the compaction, which publishes once the
+    // upsert lets go of the documents lock
+    val docsPath = docsHome.toString
+    var rev = 3
+    while (DeltaTable.segmentCount(docsPath) < 16) {
+      revise(c, 5, "first", kind = rev % 2, rev = rev)
+      rev += 1
+    }
+    var dueAtHook = false
+    c.afterBulkSegment = () => {
+      search(c, "first doc 5")
+      search(c, "first doc 5", filtered = true)
+      dueAtHook = DeltaTable.compactionDue(docsPath, 16)
+      c.scheduleDocsCompaction()
+    }
+    try upsert(c, 100 until 101 + DeltaTable.InPushdownMaxIds, "bulk")
+    finally c.afterBulkSegment = () => ()
+    c.awaitMaintenance()
+    assert(dueAtHook, "the seam ran without a compaction due")
+    assert(DeltaTable.segmentCount(docsPath) == 1, "the forced compaction never published")
+    assertFresh(c, wh, "first doc 5", "a documents-compaction publish")
+  }
+
+  test("the documents read's filter verdict equals where(filter)") {
+    import org.apache.spark.sql.functions.col
+    val wh = Files.createTempDirectory("graft_verdict_").toString
+    val c = new Collection(spark, "verdict", wh)
+    c.upsertDocuments((0 until 30).map { i =>
+      val extra = if (i % 3 == 0) "" else s""", "score": ${i * 1.5}, "tag": "t${i % 4}""""
+      val nested = if (i % 5 == 0) s""", "meta": {"n": $i}""" else ""
+      s"""{"id": $i, "kind": ${i % 2}, "big": ${9007199254740993L + i}$extra$nested}"""
+    }.toDF("document"))
+    val ids = c.documents.select("source_uuid").as[String].collect().toSeq
+    val read = c.docPayloads
+    val rows = read.lookup(Seq("source_uuid"), ids.map(Seq(_)))
+    assert(rows.length == ids.size)
+    Seq("""{"kind": 1}""", """{"kind": {"$ne": 1}}""", """{"score": {"$gt": 10}}""",
+      """{"score": {"$lte": 7.5}}""", """{"tag": {"$in": ["t1", "t3"]}}""",
+      """{"tag": {"$nin": ["t1"]}}""", """{"kind": {"$in": [1, 2.5]}}""",
+      """{"big": {"$eq": 9007199254740995}}""", """{"meta": {"n": {"$gte": 10}}}""",
+      """{"$or": [{"kind": 0}, {"score": {"$lt": 5}}]}""", """{"$not": {"tag": "t2"}}""",
+      """{"$and": [{"kind": 1}, {"tag": {"$ne": "t3"}}]}""", """{"tag": {"$in": []}}""",
+      """{"missing": {"$ne": 3}}""").foreach { f =>
+      val cond = FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document")))
+      val want = c.documents.where(cond).select("source_uuid").as[String].collect().toSet
+      val pass = read.predicate(spark, cond)
+      val got = rows.filter(pass).map(SnapshotRead.string(_, 0)).toSet
+      assert(got == want, s"filter $f")
+      assert(want.nonEmpty || f.contains("[]"), s"filter $f selects nothing")
+    }
   }
 
   /** The pre-change vectorSearch, kept here as the ordering oracle: per
