@@ -420,10 +420,14 @@ object Bench {
       ("v24c_ivfpq_local" -> ivfpqLocal) + ("s4_sync_delta" -> syncDelta) +
       ("s4_sync_steady" -> syncSteady)
     // How a leg's output is consumed: count() by default. A count lets
-    // Catalyst prune output columns nothing reads, and c9's scoring kernel
-    // (ppl, n_tokens) is exactly such a projection — counted, the leg timed
-    // only the LM fit — so c9 is consumed by an aggregate over its scores.
-    val scoredBy = Map("c9_ngram_lm" -> Seq("ppl", "n_tokens"))
+    // Catalyst prune output columns nothing reads, and the scoring kernels
+    // of c9 (ppl, n_tokens), c7, c10 and t12 are exactly such projections —
+    // counted, a leg timed only its model fit — so these legs are consumed
+    // by an aggregate over their scores.
+    val scoredBy = Map("c9_ngram_lm" -> Seq("ppl", "n_tokens"),
+      "c7_quality_classifier" -> Seq("score", "n_toks"),
+      "c10_dsir_weights" -> Seq("log_weight", "n_grams"),
+      "t12_lang_id_trained" -> Seq("confidence"))
     def consume(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       import org.apache.spark.sql.functions.{col, count, lit, sum}
       scoredBy.get(name) match {

@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextKernels, WeightFold}
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
   * 2023): pick raw-corpus documents whose hashed-n-gram distribution looks
@@ -28,19 +30,19 @@ import graft.functions.TextFunctions
   * per-gram rows reach an exchange or the driver at any corpus size
   * (measured: the exploded-rows hash-agg alternative GC-thrashed an
   * 8 GB heap at 5M docs; the histogram fold is flat there).
-  * Scoring is a pure map: the codegen gram kernel and one
-  * in-order fold over the plan-literal ratio table (a single
-  * `Literal(ArrayData)` node — NOT dim expression nodes, so no codegen
-  * blow-up; above [[literalMaxDim]] it switches to a broadcast-join fold,
-  * the wide-quantizer lesson from the sf100 run). Selection is a
-  * TakeOrdered over (key desc, id asc) — no corpus-sized shuffle anywhere.
+  * Scoring is a pure map: the codegen gram kernel and one in-order fold
+  * of the bucket array against the ratio table
+  * ([[graft.functions.WeightFold]], plain mode), shipped once per executor
+  * as a broadcast of `dim × 8 B` — at no width does the table enter the
+  * plan or a join. Selection is a TakeOrdered over (key desc, id asc) — no
+  * corpus-sized shuffle anywhere.
   *
   * Float contract: the per-document fold is left-associative in gram
   * order (all unigrams in position order, then all bigrams), identical in
-  * the literal path, the broadcast path, [[Model.scoreOne]], and the c10
-  * DuckDB oracle replay — so the paths agree bitwise and the oracle
-  * agrees behind a fixed rounding (ln is the only transcendental; its
-  * ulp spread is absorbed by round(4), the c9 convention).
+  * the distributed path, [[Model.scoreOne]], and the c10 DuckDB oracle
+  * replay — so the paths agree bitwise and the oracle agrees behind a
+  * fixed rounding (ln is the only transcendental; its ulp spread is
+  * absorbed by round(4), the c9 convention).
   */
 object Dsir {
 
@@ -55,18 +57,9 @@ object Dsir {
       * the distributed [[Dsir.logWeights]] in the same gram order, so the
       * two paths agree bitwise. */
     def scoreOne(text: String): Double = {
-      var s = 0.0
-      var n = 1
-      while (n <= ngrams) {
-        val bks = graft.functions.TextKernels.wordNgramFnvBuckets(
-          org.apache.spark.unsafe.types.UTF8String.fromString(text), n, dim)
-        var i = 0
-        while (i < bks.numElements()) {
-          s += logRatios(bks.getInt(i)); i += 1
-        }
-        n += 1
-      }
-      s
+      val t = UTF8String.fromString(text)
+      val bks = (1 to ngrams).flatMap(n => TextKernels.wordNgramFnvBuckets(t, n, dim).toIntArray())
+      WeightFold.fold(logRatios, ArrayData.toArrayData(bks.toArray), tf = false)
     }
   }
 
@@ -126,49 +119,17 @@ object Dsir {
     Model(dim, ngrams, alpha, lr)
   }
 
-  /** Above this table width the plan-literal fold gives way to a
-    * broadcast-join fold (both bitwise-identical; DsirSpec pins it). */
-  @volatile var literalMaxDim: Int =
-    sys.props.get("graft.dsir.literalMaxDim").map(_.toInt).getOrElse(65536)
-
   /** Per-document importance log-weights: `(idCol, n_grams, log_weight)`,
-    * one row per input document (a gramless document scores 0.0). */
+    * one row per input document (a gramless or null-text document scores
+    * 0.0). */
   def logWeights(
       docs: DataFrame, idCol: String, textCol: String, m: Model): DataFrame = {
-    // null text folds to the empty document (0 grams, weight 0.0) on BOTH
-    // scoring paths — without the coalesce the literal path's aggregate
-    // null-propagates while the broadcast path's posexplode drops the row,
-    // and the two paths would rank a null-text doc differently
-    val base = docs.select(col(idCol),
-      gramBuckets(coalesce(col(textCol), lit("")), m.dim, m.ngrams).as("__bks"))
-    if (m.dim <= literalMaxDim) {
-      val lrLit = typedLit(m.logRatios.toIndexedSeq)
-      base.select(col(idCol),
+    val ratios = docs.sparkSession.sparkContext.broadcast(Array(m.logRatios))
+    docs.select(col(idCol),
+        gramBuckets(coalesce(col(textCol), lit("")), m.dim, m.ngrams).as("__bks"))
+      .select(col(idCol),
         size(col("__bks")).cast("long").as("n_grams"),
-        aggregate(col("__bks"), lit(0.0),
-          (acc, b) => acc + element_at(lrLit, b + 1)).as("log_weight"))
-    } else {
-      // broadcast path: per-occurrence join against the (bucket, lr)
-      // table, then the SAME pos-ordered left-assoc fold (the quality
-      // classifier's wide-model shape)
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val w = m.logRatios.toIndexedSeq.zipWithIndex
-        .map { case (v, b) => (b, v) }.toDF("bucket", "lr")
-      val counts = base.select(col(idCol),
-        size(col("__bks")).cast("long").as("n_grams"))
-      val occ = base.select(col(idCol),
-        posexplode(col("__bks")).as(Seq("pos", "bucket")))
-      val scored = occ.join(broadcast(w), Seq("bucket"), "left")
-        .groupBy(col(idCol))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("pos"),
-            coalesce(col("lr"), lit(0.0)).as("c")))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("__s"))
-      counts.join(scored, Seq(idCol), "left")
-        .select(col(idCol), col("n_grams"),
-          coalesce(col("__s"), lit(0.0)).as("log_weight"))
-    }
+        WeightFold(col("__bks"), ratios, 0, tf = false).as("log_weight"))
   }
 
   /** Deterministic selection: the `n` documents most target-like,

@@ -1,11 +1,11 @@
 package graft.operators
 
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextKernels, WeightFold}
 
 /** Trained language identification — the fastText shape (a linear model
   * over hashed character-n-gram bag-of-features; Joulin et al. 2016
@@ -24,9 +24,11 @@ import graft.functions.TextFunctions
   *    running inside the scan — char n-grams capture orthography without
   *    a tokenizer, so one kernel covers space-delimited and unsegmented
   *    (CJK) scripts alike;
-  *  - the fitted per-class weight rows ride the scoring plan as ARRAY
-  *    LITERALS: scoring a 100 TB corpus is one map-side pass, zero
-  *    shuffle, constant memory per row;
+  *  - the fitted per-class weight rows ship to each executor once, as one
+  *    broadcast of `classes × dim × 8 B` per model, and each class logit
+  *    is one fold of the shared bucket array against its row
+  *    ([[graft.functions.WeightFold]], tf mode): scoring a 100 TB corpus
+  *    is one map-side pass, zero shuffle, constant memory per row;
   *  - per-class logits fold LEFT-ASSOCIATIVELY in window order and the
   *    softmax folds in label order, so scores replay IEEE-identically in
   *    SQL — the t12 oracle gates predicted label AND confidence.
@@ -53,23 +55,9 @@ object LangIdClassifier {
       * the distributed [[predictions]] in the same fold order, so the two
       * paths agree bitwise: (label, confidence). */
     def predictOne(text: String): (String, Double) = {
-      val s = text.toLowerCase(java.util.Locale.ROOT)
-      val count = s.length - n + 1
-      val logits = intercepts.clone()
-      if (count > 0) {
-        var c = 0
-        while (c < labels.length) {
-          var acc = 0.0
-          var i = 0
-          while (i < count) {
-            acc += weights(c)((graft.functions.TextKernels
-              .fnv1a64(s.substring(i, i + n)) & (dim - 1)).toInt) / count
-            i += 1
-          }
-          logits(c) = intercepts(c) + acc
-          c += 1
-        }
-      }
+      val bks = TextKernels.charNgramFnvBuckets(UTF8String.fromString(text), n, dim)
+      val logits = Array.tabulate(labels.length)(c =>
+        intercepts(c) + WeightFold.fold(weights(c), bks, tf = true))
       // argmax with ties to the lexicographically-smallest label — the
       // (−logit, label) struct-min the distributed path computes
       var best = 0
@@ -101,22 +89,10 @@ object LangIdClassifier {
     require(labels.length >= 2, s"langid fit needs >=2 classes, got ${labels.mkString(",")}")
     val labelIdx = labels.zipWithIndex.toMap
     val toIdx = udf((l: String) => labelIdx(l).toDouble)
-    val toTf = udf { bks: scala.collection.Seq[Int] =>
-      if (bks == null || bks.isEmpty)
-        Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val counts = scala.collection.mutable.TreeMap.empty[Int, Int]
-        bks.foreach(b => counts.update(b, counts.getOrElse(b, 0) + 1))
-        val tot = bks.length.toDouble
-        val idx = new Array[Int](counts.size); val v = new Array[Double](counts.size)
-        var i = 0
-        counts.foreach { case (b, c) => idx(i) = b; v(i) = c / tot; i += 1 }
-        Vectors.sparse(dim, idx, v)
-      }
-    }
     val feats = labeled.select(
       toIdx(col(labelCol)).as("label"),
-      toTf(TextFunctions.charNgramFnvBuckets(col(textCol), n, dim)).as("features"))
+      WeightFold.tfVectors(TextFunctions.charNgramFnvBuckets(col(textCol), n, dim), dim)
+        .as("features"))
     val m = new LogisticRegression()
       .setMaxIter(maxIter).setRegParam(regParam).setFamily("multinomial")
       .fit(feats)
@@ -127,28 +103,20 @@ object LangIdClassifier {
     Model(n, dim, labels, m.interceptVector.toArray, ws)
   }
 
-  /** Per-class logit columns over a bucket-array column: intercept +
-    * Σ_windows w[bucket]/n_windows, folded left-associatively in window
-    * order. An empty window array scores the intercept alone (the model
-    * prior) — the fold never runs, so no 0/0. */
-  private def logitCols(model: Model, bks: Column): IndexedSeq[Column] =
-    model.labels.indices.map { c =>
-      val wLit = typedLit(model.weights(c).toIndexedSeq)
-      lit(model.intercepts(c)) +
-        aggregate(bks, lit(0.0), (acc, b) => acc + element_at(wLit, b + 1) / size(bks))
-    }
-
   /** Predict every document's language: (idCol, lang, confidence) with
     * confidence = softmax probability of the winning class, ties on the
-    * argmax resolved to the lexicographically-smallest label. Fully
-    * map-side: the weights are plan literals, the per-document fold is
-    * one `aggregate` per class over the shared bucket array — one scan,
-    * zero shuffle. */
+    * argmax resolved to the lexicographically-smallest label. Class `c`'s
+    * logit is intercept_c + Σ_windows w_c[bucket]/n_windows, folded
+    * left-associatively in window order; a text shorter than `n` scores
+    * the intercepts alone (the model prior), a null text has null
+    * logits. Fully map-side: one scan, zero shuffle. */
   def predictions(
       docs: DataFrame, idCol: String, textCol: String, model: Model): DataFrame = {
+    val rows = docs.sparkSession.sparkContext.broadcast(model.weights)
     val toked = docs.select(col(idCol),
       TextFunctions.charNgramFnvBuckets(col(textCol), model.n, model.dim).as("__bks"))
-    val ls = logitCols(model, col("__bks"))
+    val ls = model.labels.indices.map(c =>
+      lit(model.intercepts(c)) + WeightFold(col("__bks"), rows, c, tf = true))
     // struct-min over (−logit, label): the same deterministic argmax the
     // SemDeDup assignment and the SQL replay's struct sort compute
     val pick = array_min(array(model.labels.indices.map { c =>

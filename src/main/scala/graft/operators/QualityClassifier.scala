@@ -1,11 +1,11 @@
 package graft.operators
 
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextKernels, WeightFold}
 
 /** Trained model-based quality filtering — the classifier stage of a
   * pretraining curation pipeline (GPT-3 / The Pile train a logistic
@@ -15,20 +15,21 @@ import graft.functions.TextFunctions
   * scale for ~zero cost per document). Unlike the heuristic gates
   * ([[graft.functions.TextFunctions.qualityScore]]) this model is FIT to
   * data — a real MLlib `LogisticRegression` trained in-pipeline, its
-  * coefficients then served as a broadcastable weight frame.
+  * coefficients then served as one broadcast weight row.
   *
   * Spark-first scale shape, mirroring the CCNet perplexity gate
   * ([[Corpus.perplexityStats]]):
   *
   *  - featurization is a codegen kernel (`token_fnv_buckets`: per-token
   *    FNV-1a-64 folded to a power-of-two `dim`) running inside the scan;
-  *  - the model lives as a dim-sized (bucket, weight) FRAME the scoring
-  *    join broadcasts — scoring a 100 TB corpus shuffles nothing, the
-  *    only wide op is the per-document aggregation of fixed-width rows;
-  *  - the per-document dot product folds LEFT-ASSOCIATIVELY over
-  *    position-sorted contributions (`sort_array` + `aggregate`), so
-  *    score values are run-stable and replay IEEE-identically in SQL —
-  *    the c7 oracle gates the probabilities themselves, not just counts.
+  *  - the weights ship to each executor once, as a broadcast of
+  *    `dim × 8 B`, and the per-document dot product is one fold of the
+  *    bucket array against them ([[graft.functions.WeightFold]], tf mode)
+  *    inside the scan — scoring a 100 TB corpus shuffles nothing, joins
+  *    nothing and puts no weights in the plan, at any `dim`;
+  *  - the fold is LEFT-ASSOCIATIVE in token order, so score values are
+  *    run-stable and replay IEEE-identically in SQL — the c7 oracle gates
+  *    the probabilities themselves, not just counts.
   *
   * Features are term frequencies (bucket count / doc token count), so a
   * document's score is length-invariant; the per-occurrence contribution
@@ -54,21 +55,9 @@ object QualityClassifier {
       * distributed [[QualityClassifier.scores]] in the same order (token
       * -order left-associative sum), so the two paths agree bitwise. */
     def scoreOne(text: String): Double = {
-      val toks = graft.functions.TextKernels.tokens(text)
-      val n = toks.length.toDouble
-      var s = 0.0
-      var i = 0
-      while (i < toks.length) {
-        s += weights((graft.functions.TextKernels.fnv1a64(toks(i)) & (dim - 1)).toInt) / n
-        i += 1
-      }
+      val s = WeightFold.fold(weights,
+        TextKernels.tokenFnvBuckets(UTF8String.fromString(text), dim), tf = true)
       1.0 / (1.0 + math.exp(-(intercept + s)))
-    }
-
-    def weightsFrame(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      weights.toIndexedSeq.zipWithIndex.map { case (w, b) => (b, w) }
-        .toDF("bucket", "w")
     }
 
     /** Persist as a JSON sidecar (exact `Double.toString` round-trip). */
@@ -103,8 +92,8 @@ object QualityClassifier {
   /** Fit a logistic quality classifier: `pos` = trusted/kept documents,
     * `neg` = rejected/untrusted documents. Featurization at fit time goes
     * through the SAME `token_fnv_buckets` kernel serving uses; the
-    * per-document tf vector assembly is a fit-time-only UDF (the serving
-    * path never builds vectors — it streams occurrences).
+    * per-document tf vector assembly is fit-time only (the serving path
+    * never builds vectors — it folds occurrences).
     */
   def fit(
       pos: DataFrame,
@@ -131,21 +120,9 @@ object QualityClassifier {
     }
     val labeled = pos.select(col(textCol).as("__text"), lit(1.0).as("label"))
       .unionByName(neg.select(col(textCol).as("__text"), lit(0.0).as("label")))
-    val toTf = udf { bks: scala.collection.Seq[Int] =>
-      if (bks == null || bks.isEmpty)
-        Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val counts = scala.collection.mutable.TreeMap.empty[Int, Int]
-        bks.foreach(b => counts.update(b, counts.getOrElse(b, 0) + 1))
-        val n = bks.length.toDouble
-        val idx = new Array[Int](counts.size); val v = new Array[Double](counts.size)
-        var i = 0
-        counts.foreach { case (b, c) => idx(i) = b; v(i) = c / n; i += 1 }
-        Vectors.sparse(dim, idx, v)
-      }
-    }
     val feats = labeled.select(col("label"),
-      toTf(TextFunctions.tokenFnvBuckets(col("__text"), dim)).as("features"))
+      WeightFold.tfVectors(TextFunctions.tokenFnvBuckets(col("__text"), dim), dim)
+        .as("features"))
     val m = new LogisticRegression()
       .setMaxIter(maxIter).setRegParam(regParam).setFamily("binomial")
       .fit(feats)
@@ -154,54 +131,24 @@ object QualityClassifier {
     Model(dim, m.intercept, m.coefficients.toArray)
   }
 
-  /** Weight counts at or under this ride the scoring plan as an ARRAY
-    * LITERAL (pure scan-stage fold — no explode, no join, no aggregation
-    * buffer); larger models broadcast as a (bucket, weight) frame instead
-    * (a 2²⁰-bucket model would bloat every plan by 8 MB of literals).
-    * Volatile so tests can pin a regime. */
-  @volatile var literalMaxDim: Int = 8192
-
   /** Score every document: (idCol, n_toks, score) with
     * score = sigmoid(intercept + Σ_occurrences w[bucket]/n_toks), the fold
     * running left-associatively in TOKEN ORDER. A document with no tokens
     * scores sigmoid(intercept) — the model's prior, exactly what an
-    * all-zero tf vector predicts.
+    * all-zero tf vector predicts; a null text scores null.
     *
-    * Default (dim ≤ [[literalMaxDim]]) is fully map-side: the weights are
-    * a plan literal and the per-doc sum is `aggregate` over the bucket
-    * array — one scan, zero shuffle, constant memory per row regardless
-    * of document length. Above the gate the weights broadcast as a frame
-    * and the fold runs over position-sorted collected contributions
-    * (same order, same IEEE result — the oracle replays both
-    * identically).
+    * Fully map-side at any `dim`: one scan, zero shuffle, constant memory
+    * per row regardless of document length, and one `dim × 8 B` weight
+    * broadcast per call.
     */
   def scores(docs: DataFrame, idCol: String, textCol: String, model: Model): DataFrame = {
-    val toked = docs.select(col(idCol),
-      TextFunctions.tokenFnvBuckets(col(textCol), model.dim).as("__bks"))
-    if (model.dim <= literalMaxDim) {
-      val wLit = typedLit(model.weights.toIndexedSeq)
-      toked.select(col(idCol),
+    val w = docs.sparkSession.sparkContext.broadcast(Array(model.weights))
+    docs.select(col(idCol),
+        TextFunctions.tokenFnvBuckets(col(textCol), model.dim).as("__bks"))
+      .select(col(idCol),
         size(col("__bks")).cast("long").as("n_toks"),
-        sigmoid(lit(model.intercept) +
-          aggregate(col("__bks"), lit(0.0),
-            (acc, b) => acc + element_at(wLit, b + 1) / size(col("__bks"))))
+        sigmoid(lit(model.intercept) + WeightFold(col("__bks"), w, 0, tf = true))
           .as("score"))
-    } else {
-      val w = model.weightsFrame(docs.sparkSession)
-      val base = toked.select(col(idCol), size(col("__bks")).as("n_toks"))
-      val occ = toked.select(col(idCol), size(col("__bks")).as("__n"),
-        posexplode(col("__bks")).as(Seq("pos", "bucket")))
-      val scored = occ.join(broadcast(w), Seq("bucket"), "left")
-        .groupBy(col(idCol))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("pos"),
-            (coalesce(col("w"), lit(0.0)) / col("__n")).as("c")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("c")).as("__s"))
-      base.join(scored, Seq(idCol), "left")
-        .select(col(idCol), col("n_toks").cast("long").as("n_toks"),
-          sigmoid(lit(model.intercept) + coalesce(col("__s"), lit(0.0))).as("score"))
-    }
   }
 
   private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))

@@ -1224,7 +1224,8 @@ object QueryCatalog {
     * LogisticRegression over hashed char-bigram tf features (the fastText
     * lid shape, Joulin et al. 2016), fit on the deterministic
     * multi-language fixture corpus and serving every document fully
-    * map-side (weights as plan literals). Generated oracle: the fitted
+    * map-side (the per-class weight rows as one broadcast, each class
+    * logit one fold of the bucket array). Generated oracle: the fitted
     * per-class coefficients inline as exact double literals and the whole
     * serving pipeline — char-window FNV bucketing, per-class left-assoc
     * folds, struct-sort argmax, label-order softmax — replays in DuckDB

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -18,20 +18,29 @@ import graft.operators.IndexStore
   * Key lookups over it are one `runJob` each with no Analyzer, planner or
   * closure-cleaning work. Nothing is persisted: a dropped reader holds no
   * blocks, so retiring one can never pull data from under a lookup in
-  * flight. */
+  * flight.
+  *
+  * A publish that swaps the home's files (a compaction, a merge, a full
+  * rewrite) can land between the listing check that handed out this
+  * reader and a lookup's scan; the scan then finds a planned file gone.
+  * The lookup drops the home's reader, plans `frame` afresh on the new
+  * listing and runs once more — so it reads the snapshot published last,
+  * never a subset of one. */
 private[store] final class SnapshotRead private (
-    val schema: StructType, rdd: RDD[InternalRow]) {
+    home: String, frame: () => DataFrame, private[store] val plan: SnapshotRead.Plan) {
+
+  def schema: StructType = plan.schema
 
   /** Rows whose `keyCols` equal one of `keys` (Scala values: String, Int,
-    * Long, …), copied, in partition order. One Spark job. */
+    * Long, …), copied, in partition order. One Spark job, or two plus the
+    * re-plan when a publish moved the files. */
   def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] =
     if (keys.isEmpty) Array.empty
-    else {
-      val want = keys.map(_.map(CatalystTypeConverters.convertToCatalyst)).toSet
-      val ords = keyCols.map(schema.fieldIndex).toArray
-      rdd.sparkContext.runJob(rdd,
-        new SnapshotRead.KeepKeys(ords, ords.map(schema(_).dataType), want),
-        rdd.partitions.indices).flatten
+    else try plan.lookup(keyCols, keys)
+    catch {
+      case e: Exception if SnapshotRead.missingFile(e) =>
+        SnapshotRead.invalidate(home)
+        SnapshotRead(home)(frame()).plan.lookup(keyCols, keys)
     }
 
   /** `cond` (a Column over this read's columns) as a predicate on the rows
@@ -51,26 +60,44 @@ private[store] final class SnapshotRead private (
 
 private[store] object SnapshotRead {
 
-  // home → (listing fingerprint, reader): the residency layer the index
+  // home → (listing fingerprint, plan): the residency layer the index
   // handles use, checked against the home's listing on every serve
-  private val reads = new IndexStore.Family[SnapshotRead]("snapshot-reads", 1)(_ => ())
+  private val reads = new IndexStore.Family[Plan]("snapshot-reads", 1)(_ => ())
 
   /** The resident reader of a local `home`, re-planned from `frame` when
     * the home's listing changed since it was planned. A non-local home has
     * no listing to check, so it is planned on every call: never stale. */
   def apply(home: String)(frame: => DataFrame): SnapshotRead =
-    if (DeltaTable.isLocal(home)) reads.serveFixed(home)(prepare(frame))
-    else prepare(frame)
+    new SnapshotRead(home, () => frame,
+      if (DeltaTable.isLocal(home)) reads.serveFixed(home)(prepare(frame))
+      else prepare(frame))
 
   /** Field `i` of a looked-up row as a String (null stays null). */
   def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
-  /** Drop `home`'s reader (spec seam: a fresh read of the same home). */
+  /** Drop `home`'s plan: the next serve plans the home afresh. */
   private[store] def invalidate(home: String): Unit = reads.invalidate(home)
 
-  private def prepare(frame: DataFrame): SnapshotRead =
-    new SnapshotRead(frame.schema, frame.queryExecution.toRdd)
+  private def prepare(frame: DataFrame): Plan = new Plan(frame.schema, frame.queryExecution.toRdd)
+
+  /** A scan found a file of its plan gone. */
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable => t.getCondition == "FAILED_READ_FILE.FILE_NOT_EXIST"
+      case _: java.io.FileNotFoundException => true
+      case _ => false
+    }
+
+  /** The resident part: the physical RDD and its schema. */
+  private[store] final class Plan(val schema: StructType, rdd: RDD[InternalRow]) {
+    def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] = {
+      val want = keys.map(_.map(CatalystTypeConverters.convertToCatalyst)).toSet
+      val ords = keyCols.map(schema.fieldIndex).toArray
+      rdd.sparkContext.runJob(rdd,
+        new KeepKeys(ords, ords.map(schema(_).dataType), want), rdd.partitions.indices).flatten
+    }
+  }
 
   /** The lookup's task: keep the rows whose key columns are in `keys`,
     * copied (scans reuse their row buffers). A named class, so the job's

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.Dsir
 
 /** DSIR importance resampling: distribution-shift sanity on real docs,
-  * bitwise equality of the literal / broadcast / driver-local scoring
-  * paths, deterministic seeded resampling, and gram-count edges. */
+  * bitwise equality of the broadcast weight fold with the literal fold it
+  * replaced and with the driver-local scorer, deterministic seeded
+  * resampling, and gram-count edges. */
 class DsirSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
@@ -31,16 +32,28 @@ class DsirSpec extends AnyFunSuite {
   }
 
   test("literal and broadcast scoring paths are bitwise identical") {
-    val lit = Dsir.logWeights(docs, "doc_id", "text", model)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    val saved = Dsir.literalMaxDim
-    try {
-      Dsir.literalMaxDim = 1 // force the broadcast-join fold
-      val bc = Dsir.logWeights(docs, "doc_id", "text", model)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      assert(lit.length == bc.length)
-      lit.zip(bc).foreach { case (a, b) => assert(a == b, s"paths diverged: $a vs $b") }
-    } finally Dsir.literalMaxDim = saved
+    // the literal fold over the same gram sequence is the reference; the
+    // broadcast kernel must give the same bits on both evaluation paths,
+    // at every table width, planning no exchange and no join (2^20 is
+    // past the old literal ceiling, where the join arm took over)
+    for (dim <- FoldParity.dims; (path, df) <- FoldParity.frames(spark)) {
+      val m = Dsir.Model(dim, 2, 1.0, FoldParity.weights(dim, dim + 17L))
+      val got = Dsir.logWeights(df, "id", "text", m)
+      FoldParity.assertKernelPlan(got, path)
+      val grams = concat(Seq(1, 2).map(n => graft.functions.TextFunctions
+        .wordNgramFnvBuckets(coalesce(col("text"), lit("")), n, dim)): _*)
+      val want = df.select(col("id"), grams.as("b"))
+        .select(col("id"), size(col("b")).cast("long").as("n_grams"),
+          FoldParity.literalFold(col("b"), m.logRatios, tf = false).as("log_weight"))
+      val gotBits = FoldParity.bits(got, "log_weight")
+      assert(gotBits == FoldParity.bits(want, "log_weight"), s"dim $dim, $path")
+      assert(got.select("id", "n_grams").collect().toSet ==
+        want.select("id", "n_grams").collect().toSet, s"dim $dim, $path")
+      FoldParity.rows.collect { case (id, t) if t != null =>
+        assert(Some(java.lang.Double.doubleToRawLongBits(m.scoreOne(t))) == gotBits(id),
+          s"scoreOne of doc $id, dim $dim")
+      }
+    }
   }
 
   test("driver-local scoreOne is bitwise identical to the distributed fold") {
@@ -56,20 +69,18 @@ class DsirSpec extends AnyFunSuite {
   test("gram counting: n tokens give n unigrams + (n-1) bigrams; gramless/null text scores 0 on both paths") {
     val tiny = Seq((1L, "alpha beta gamma"), (2L, "solo"), (3L, " \t "),
       (4L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    def run(): Map[Long, (Long, Double)] =
-      Dsir.logWeights(tiny, "doc_id", "text", model)
+    def run(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      Dsir.logWeights(df, "doc_id", "text", model)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val rows = run()
+    val rows = run(tiny)
     assert(rows(1L)._1 == 5, s"3 tokens should give 5 grams, got ${rows(1L)._1}")
     assert(rows(2L)._1 == 1)
     assert(rows(3L) == ((0L, 0.0)), s"gramless doc: ${rows(3L)}")
     assert(rows(4L) == ((0L, 0.0)), s"null-text doc: ${rows(4L)}")
-    // the broadcast path must agree on the null/gramless rows too (it
-    // drops occurrence-less docs at posexplode and recovers them in the
-    // left join; the literal path folds an empty array — review finding)
-    val saved = Dsir.literalMaxDim
-    try { Dsir.literalMaxDim = 1; assert(run() == rows) }
-    finally Dsir.literalMaxDim = saved
+    // the local frame above is scored interpreted; the generated code must
+    // agree on the null/gramless rows too
+    assert(run(spark.createDataFrame(spark.sparkContext.parallelize(
+      tiny.collect().toSeq, 2), tiny.schema)) == rows)
   }
 
   test("select returns the deterministic top-n; resample is seed-deterministic and seed-sensitive") {

@@ -139,19 +139,24 @@ object ExplainCheck {
     // never re-derive md5 from the corpus/batch text
     check("d6_dedup_against", "corpus-hash + positives frames persisted (InMemoryTableScan over __h)")(
       p => "InMemoryTableScan \\[[^\\]]*__h#\\d+".r.findAllIn(p).size >= 2)
-    // the quality classifier at default dim serves MAP-SIDE: weights are
-    // a plan literal and the per-doc fold runs over the bucket array —
+    // the quality classifier serves MAP-SIDE at any dim: the weights are
+    // one broadcast row and the per-doc fold runs over the bucket array —
     // no join, no aggregation, the corpus streams once through the scan
-    check("c7_quality_classifier", "literal-weight scoring is scan-fused (no join/agg)")(
+    check("c7_quality_classifier", "broadcast-weight scoring is scan-fused (no join/agg)")(
+      p => !p.contains("Join") && !p.contains("HashAggregate"))
+    // DSIR's ratio table folds the same way, so the weights leg is the
+    // scan plus the fold
+    check("c10_dsir_weights", "scan-fused (no join/agg)")(
       p => !p.contains("Join") && !p.contains("HashAggregate"))
     // span dedup's gram-keyed work is hash joins over fixed-width rows
     check("t10_dedup_spans", "no cartesian/nested-loop in the span-dedup plan")(
       p => !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
 
-    // trained langid serves MAP-SIDE like c7: per-class weights are plan
-    // literals, the per-doc folds run over the shared bucket array — no
-    // join, no aggregation, the corpus streams once through the scan
-    check("t12_lang_id_trained", "literal-weight multiclass scoring is scan-fused (no join/agg)")(
+    // trained langid serves MAP-SIDE like c7: the per-class weight rows
+    // are one broadcast, the per-doc folds run over the shared bucket
+    // array — no join, no aggregation, the corpus streams once through
+    // the scan
+    check("t12_lang_id_trained", "broadcast-weight multiclass scoring is scan-fused (no join/agg)")(
       p => !p.contains("Join") && !p.contains("HashAggregate"))
     // the 5-gram LM ships its per-order count tables as one broadcast
     // variable and scores each document in place: scan-fused like c7/t12

@@ -59,6 +59,43 @@ class LangIdSpec extends AnyFunSuite {
     }
   }
 
+  test("predictions equal the literal-fold plan bit for bit on both evaluation paths") {
+    // the plan the broadcast fold replaced, one weight literal per class,
+    // is the reference: null, empty, whitespace-only, 1-char, non-ASCII
+    // and 2,000+-token texts at every width (2^20 included)
+    for (dim <- FoldParity.dims; (path, df) <- FoldParity.frames(spark)) {
+      // weights under 1 keep the logits close, so the confidences carry
+      // the folds' low bits instead of saturating at 1.0
+      val labels = Array("aa", "bb", "cc")
+      val m = LangIdClassifier.Model(2, dim, labels, Array(0.002, -0.001, 0.0),
+        labels.indices.map(c => FoldParity.weights(dim, dim * 7L + c).map(_ / 1000)).toArray)
+      val got = LangIdClassifier.predictions(df, "id", "text", m)
+      FoldParity.assertKernelPlan(got, path)
+      val toked = df.select(col("id"),
+        graft.functions.TextFunctions.charNgramFnvBuckets(col("text"), 2, dim).as("b"))
+      val ls = labels.indices.map(c =>
+        lit(m.intercepts(c)) + FoldParity.literalFold(col("b"), m.weights(c), tf = true))
+      val pick = array_min(array(labels.indices.map(c =>
+        struct((-ls(c)).as("nl"), lit(labels(c)).as("lang"))): _*))
+      val want = toked.select(col("id"), pick.getField("lang").as("lang"),
+        (lit(1.0) / labels.indices.map(c => exp(ls(c) + pick.getField("nl")))
+          .reduceLeft(_ + _)).as("confidence"))
+      assert(FoldParity.bits(got, "confidence") == FoldParity.bits(want, "confidence"),
+        s"dim $dim, $path")
+      assert(got.select("id", "lang").collect().toSet ==
+        want.select("id", "lang").collect().toSet, s"dim $dim, $path")
+      assert(got.select("lang").distinct().count() > 1, "one class won every row")
+      // and each class row's fold on its own, as the logits carry it
+      val rows = spark.sparkContext.broadcast(m.weights)
+      labels.indices.foreach { c =>
+        val logit = toked.select(col("id"), (lit(m.intercepts(c)) +
+          graft.functions.WeightFold(col("b"), rows, c, tf = true)).as("l"))
+        assert(FoldParity.bits(logit, "l") == FoldParity.bits(toked.select(col("id"),
+          ls(c).as("l")), "l"), s"class $c logits, dim $dim, $path")
+      }
+    }
+  }
+
   test("empty and shorter-than-n text predicts the model prior, confidence in (0,1]") {
     val (lang, conf) = model.predictOne("")
     val (lang1, conf1) = model.predictOne("a")

@@ -8,8 +8,9 @@ import graft.operators.QualityClassifier
 /** Trained quality classifier (operators/QualityClassifier.scala): the
   * fitted logistic model separates reference-like prose from garble, the
   * serving path's occurrence-fold score equals the model's own tf dot
-  * product, the gate keeps what it should, fits are run-deterministic,
-  * and the model round-trips through its JSON sidecar.
+  * product and, bit for bit, the literal fold it replaced; the gate keeps
+  * what it should, fits are run-deterministic, and the model round-trips
+  * through its JSON sidecar.
   */
 class QualityClassifierSpec extends AnyFunSuite {
 
@@ -114,18 +115,25 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(loaded.weights.sameElements(model.weights))
   }
 
-  test("literal-fold and broadcast-join scoring paths agree bitwise") {
-    val docs = pos.limit(10).unionByName(neg.limit(10))
-    val viaLiteral = QualityClassifier.scores(docs, "id", "text", model)
-      .collect().map(r => r.getInt(0) -> r.getDouble(2)).toMap
-    val saved = QualityClassifier.literalMaxDim
-    QualityClassifier.literalMaxDim = 0 // force the large-model join path
-    try {
-      val viaJoin = QualityClassifier.scores(docs, "id", "text", model)
-        .collect().map(r => r.getInt(0) -> r.getDouble(2)).toMap
-      // same token-order left-assoc fold on both paths → identical doubles
-      assert(viaJoin == viaLiteral)
-    } finally QualityClassifier.literalMaxDim = saved
+  test("broadcast weight fold equals the literal fold bit for bit on both evaluation paths") {
+    // the literal fold in token order is the reference: null, empty,
+    // whitespace-only, 1-token, non-ASCII and 2,000+-token texts at every
+    // width (2^20 is past the old literal ceiling)
+    for (dim <- FoldParity.dims; (path, df) <- FoldParity.frames(spark)) {
+      val m = QualityClassifier.Model(dim, -0.37, FoldParity.weights(dim, dim + 29L))
+      val got = QualityClassifier.scores(df, "id", "text", m)
+      FoldParity.assertKernelPlan(got, path)
+      val want = df.select(col("id"),
+          graft.functions.TextFunctions.tokenFnvBuckets(col("text"), dim).as("b"))
+        .select(col("id"), size(col("b")).cast("long").as("n_toks"),
+          (lit(1.0) / (lit(1.0) + exp(-(lit(m.intercept) +
+            FoldParity.literalFold(col("b"), m.weights, tf = true))))).as("score"))
+      val gotBits = FoldParity.bits(got, "score")
+      assert(gotBits == FoldParity.bits(want, "score"), s"dim $dim, $path")
+      assert(gotBits(1L).isEmpty && gotBits.values.count(_.isDefined) == 10)
+      assert(got.select("id", "n_toks").collect().toSet ==
+        want.select("id", "n_toks").collect().toSet, s"dim $dim, $path")
+    }
   }
 
   test("a fully empty corpus is refused") {

@@ -127,7 +127,8 @@ class ResidentIndexSpec extends AnyFunSuite {
     search(c, "first doc 4")
     search(c, "first doc 4", filtered = true)
     assert(c.hnswIndex(pipeline, "body") eq h, "the handle was reloaded without a write")
-    assert(reads.zip(rs).forall { case (a, b) => a eq b }, "a read was re-planned without a write")
+    assert(reads.zip(rs).forall { case (a, b) => a.plan eq b.plan },
+      "a read was re-planned without a write")
 
     // 1. delta sync: appendSegmentLocal
     upsert(c, 40 until 43, "zanzibar")
@@ -242,6 +243,33 @@ class ResidentIndexSpec extends AnyFunSuite {
       assert(got == want, s"filter $f")
       assert(want.nonEmpty || f.contains("[]"), s"filter $f selects nothing")
     }
+  }
+
+  test("a read planned before a documents-compaction publish looks up the published files") {
+    val wh = Files.createTempDirectory("graft_publish_").toString
+    val c = new Collection(spark, "publish", wh)
+    val docsPath = s"$wh/publish/documents"
+    upsert(c, 0 until 20, "first")
+    var rev = 1
+    while (DeltaTable.segmentCount(docsPath) < 16) {
+      revise(c, rev % 20, "first", kind = rev % 2, rev = rev)
+      rev += 1
+    }
+    // the listing check: the documents read is planned after a bulk
+    // upsert's segment commit made a compaction due, before its publish
+    // swaps the home; the lookup scans only after the publish
+    var read: SnapshotRead = null
+    c.afterBulkSegment = () => { read = c.docPayloads }
+    try upsert(c, 100 until 101 + DeltaTable.InPushdownMaxIds, "bulk")
+    finally c.afterBulkSegment = () => ()
+    c.awaitMaintenance()
+    assert(read != null && DeltaTable.segmentCount(docsPath) == 1,
+      "the forced compaction never published")
+    val want = c.documents.select("source_uuid", "document").as[(String, String)]
+      .collect().toMap
+    val got = read.lookup(Seq("source_uuid"), want.keys.map(Seq(_)))
+      .map(r => SnapshotRead.string(r, 0) -> SnapshotRead.string(r, 1)).toMap
+    assert(got == want, "the lookup differs from a Catalyst read of the published table")
   }
 
   /** The pre-change vectorSearch, kept here as the ordering oracle: per
