@@ -115,7 +115,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(loaded.weights.sameElements(model.weights))
   }
 
-  test("broadcast weight fold equals the literal fold bit for bit on both evaluation paths") {
+  test("broadcast weight fold equals the literal fold bitwise on both paths") {
     // the literal fold in token order is the reference: null, empty,
     // whitespace-only, 1-token, non-ASCII and 2,000+-token texts at every
     // width (2^20 is past the old literal ceiling)
