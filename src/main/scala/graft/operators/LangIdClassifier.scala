@@ -67,10 +67,11 @@ object LangIdClassifier {
           (logits(c) == logits(best) && labels(c) < labels(best))) best = c
         c += 1
       }
-      // stable softmax, denominator folded in label order
+      // stable softmax, denominator folded in label order, with Spark's
+      // `exp` (StrictMath.exp, not HotSpot's Math.exp intrinsic)
       var denom = 0.0
       c = 0
-      while (c < labels.length) { denom += math.exp(logits(c) - logits(best)); c += 1 }
+      while (c < labels.length) { denom += StrictMath.exp(logits(c) - logits(best)); c += 1 }
       (labels(best), 1.0 / denom)
     }
   }

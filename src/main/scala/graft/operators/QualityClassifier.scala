@@ -53,11 +53,13 @@ object QualityClassifier {
 
     /** Driver/executor-local single-text score — the same math as the
       * distributed [[QualityClassifier.scores]] in the same order (token
-      * -order left-associative sum), so the two paths agree bitwise. */
+      * -order left-associative sum) and with Spark's `exp`
+      * (`StrictMath.exp`; HotSpot's `Math.exp` intrinsic differs in the last
+      * bit on some inputs), so the two paths agree bitwise. */
     def scoreOne(text: String): Double = {
       val s = WeightFold.fold(weights,
         TextKernels.tokenFnvBuckets(UTF8String.fromString(text), dim), tf = true)
-      1.0 / (1.0 + math.exp(-(intercept + s)))
+      1.0 / (1.0 + StrictMath.exp(-(intercept + s)))
     }
 
     /** Persist as a JSON sidecar (exact `Double.toString` round-trip). */

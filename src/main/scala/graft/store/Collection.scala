@@ -1640,17 +1640,24 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     else t.withColumn("hid", hidCol(col("seg"))).drop("seg")
   }
 
-  /** The prepared reads `vectorSearch` resolves and fetches through, one
-    * projection per table, resident while the table's listing holds
-    * ([[SnapshotRead]]): hid → chunk key, document payloads, chunk text. */
+  /** The prepared reads `vectorSearch` and `search` resolve, score and
+    * fetch through, resident per (table, projection) while the table's
+    * listing holds ([[SnapshotRead]]): hid → chunk key, document payloads,
+    * chunk text, chunk vectors, chunk terms. */
   private[store] def hidKeys(p: Pipeline, field: String): SnapshotRead =
-    SnapshotRead(tablePath(p.name, field, "embeddings"))(
-      hnswKeyed(p, field).select("hid", "document_id", "chunk_index"))
+    SnapshotRead(tablePath(p.name, field, "embeddings"),
+      Seq("hid", "document_id", "chunk_index"))(hnswKeyed(p, field))
   private[store] def docPayloads: SnapshotRead =
-    SnapshotRead(docsPath)(documents.select("source_uuid", "document"))
+    SnapshotRead(docsPath, Seq("source_uuid", "document"))(documents)
   private[store] def chunkTexts(p: Pipeline, field: String): SnapshotRead =
-    SnapshotRead(tablePath(p.name, field, "chunks"))(
-      chunks(p, field).select("document_id", "chunk_index", "chunk"))
+    SnapshotRead(tablePath(p.name, field, "chunks"),
+      Seq("document_id", "chunk_index", "chunk"))(chunks(p, field))
+  private[store] def chunkVectors(p: Pipeline, field: String): SnapshotRead =
+    SnapshotRead(tablePath(p.name, field, "embeddings"),
+      Seq("document_id", "chunk_index", "embedding"))(embeddings(p, field))
+  private[store] def chunkTerms(p: Pipeline, field: String): SnapshotRead =
+    SnapshotRead(tablePath(p.name, field, "tsvectors"),
+      Seq("document_id", "chunk_index", "terms"))(tsvectors(p, field))
 
   /** Sync-time signature-table rebuild for a field with `binaryIndex`:
     * (document_id, chunk_index, sig) — the natural keys ride along so
@@ -2011,55 +2018,81 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
   }
 
   /** Document-level hybrid search — `collection.search`
-    * (search_query_builder.rs:60-536): per-field best-chunk-per-document
-    * (window dedup replaces the recursive CTE), ts_rank×boost for text,
-    * cosine×boost for semantic, FULL OUTER JOIN + COALESCE-sum fusion,
-    * global top-k.
+    * (search_query_builder.rs:60-536): per arm, each document's best chunk
+    * (cosine × boost for a semantic field, ts_rank × boost gated on > 0 for
+    * a full-text field; ties on chunk_index), the arms' scores summed with
+    * a missing arm counting 0 (the reference's FULL OUTER JOIN + COALESCE
+    * fusion), then the top `limit` documents that pass the metadata filter,
+    * by score desc, document_id. Returns (document_id, document, score),
+    * MATERIALIZED at call time as a local relation, like [[vectorSearch]].
+    *
+    * Exact: every chunk is scored, O(rows) per call, and the rows and score
+    * bits are those of the window → full-outer-join → sort plan this
+    * replaces. Each arm's score is its Column bound to the arm's prepared
+    * read ([[SnapshotRead.value]]) and evaluated in the scan's tasks, the
+    * fused sum is `((s₀ + s₁) + …)` in argument order, semantic arms first,
+    * and the order is SQL's. No Catalyst query runs on a warm call.
+    *
+    * A round reports, per partition of every arm's read, the
+    * `max(4·limit, 64)` best documents and the score bounding the rest
+    * (see [[HybridSearch]]). It stops once `limit` documents survive with
+    * the last one's score above anything an unreported document could sum
+    * to, or once every partition reported every document; otherwise the
+    * per-partition count doubles and a new round runs.
+    *
+    * Spark jobs per warm call: per round, one scan of all arms, one more
+    * scan when documents known exactly in one arm need their score in
+    * another, and one documents lookup per batch of payloads (fetched in
+    * score order; their filter verdicts decide survival). An unfiltered
+    * call that one round decides runs 2–3 jobs; a selective filter adds
+    * rounds.
+    * Each prepared read adds its planning only on the first call after a
+    * write changed its table.
     */
   def search(
       p: Pipeline,
       semantic: Seq[VectorSearchField] = Nil,
       fullText: Seq[FullTextField] = Nil,
       limit: Int = 10,
-      filterJson: Option[String] = None): DataFrame = {
-    val resolver = FilterCompiler.jsonStringResolver(col("document"))
-    val docs = filterJson.foldLeft(
-      documents.select(col("source_uuid").as("document_id"), col("document")))(
-      (d, f) => d.where(FilterCompiler.compile(f, resolver)))
+      filterJson: Option[String] = None): DataFrame =
+    search(p, semantic, fullText, limit, filterJson, math.max(4 * limit, 64))
 
-    def bestPerDoc(df: DataFrame, scoreCol: String): DataFrame = {
-      val w = Window.partitionBy(col("document_id")).orderBy(col(scoreCol).desc, col("chunk_index"))
-      df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-        .select(col("document_id"), col(scoreCol))
-    }
-
-    val semScores = semantic.map { fq =>
+  /** [[search]] with the first round reporting `m0` documents per
+    * partition: a small `m0` forces refill rounds and cross-arm lookups. */
+  private[store] def search(
+      p: Pipeline,
+      semantic: Seq[VectorSearchField],
+      fullText: Seq[FullTextField],
+      limit: Int,
+      filterJson: Option[String],
+      m0: Int): DataFrame = {
+    require(semantic.nonEmpty || fullText.nonEmpty,
+      "search needs a semantic or a fullText field; both are empty")
+    val semArms = semantic.map { fq =>
       val emb = p.fields.find(_.name == fq.field).flatMap(_.semanticSearch)
         .getOrElse(throw new IllegalArgumentException(s"no semantic_search on ${fq.field}"))
-      val qv = emb.embedOne(fq.query)
-      bestPerDoc(
-        embeddings(p, fq.field).withColumn("s",
-          cosineSimilarity(col("embedding"), floatVec(qv.toIndexedSeq)) * fq.boost), "s")
+      val read = chunkVectors(p, fq.field)
+      HybridSearch.Arm(read, read.value(spark, cosineSimilarity(col("embedding"),
+        floatVec(emb.embedOne(fq.query).toIndexedSeq)) * fq.boost), positive = false)
     }
-    val ftsScores = fullText.map { fq =>
-      // the reference gates the fts arm on `tsvector @@ query` BEFORE
-      // ranking (search_query_builder.rs:328-344): non-matching documents
-      // don't enter the fusion at all, rather than joining with score 0
-      bestPerDoc(
-        tsvectors(p, fq.field).withColumn("s",
-          TsRank.rank(col("terms"), fq.query) * fq.boost)
-          .where(col("s") > 0), "s")
+    // the reference gates the fts arm on `tsvector @@ query` BEFORE
+    // ranking (search_query_builder.rs:328-344): non-matching documents
+    // don't enter the fusion at all, rather than joining with score 0
+    val ftsArms = fullText.map { fq =>
+      val read = chunkTerms(p, fq.field)
+      HybridSearch.Arm(read, read.value(spark,
+        TsRank.rank(col("terms"), fq.query) * fq.boost), positive = true)
     }
-    val scoreFrames = (semScores ++ ftsScores).zipWithIndex.map { case (df, i) =>
-      df.withColumnRenamed("s", s"s_$i")
-    }
-    val fused = scoreFrames.reduce((a, b) => a.join(b, Seq("document_id"), "full_outer"))
-    val total = scoreFrames.indices.map(i => coalesce(col(s"s_$i"), lit(0.0))).reduce(_ + _)
-    fused.select(col("document_id"), total.as("score"))
-      .join(docs, Seq("document_id")) // also applies the metadata filter
-      .orderBy(col("score").desc, col("document_id"))
-      .limit(limit)
-      .select(col("document_id"), col("document"), col("score"))
+    val docs = docPayloads
+    val passes = filterJson.map(f => docs.predicate(spark,
+      FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document")))))
+    val top = HybridSearch.topK((semArms ++ ftsArms).toIndexedSeq, docs, passes, limit, m0)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(top.map { case (d, doc, s) => Row(d, doc, s) }.asJava,
+      StructType(Seq(StructField("document_id", StringType), StructField("document", StringType),
+        StructField("score", DoubleType, nullable = false))))
   }
 
   /** RAG composition (rag_query_builder.rs:162-373): run named vector
@@ -2140,14 +2173,12 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     val searchId = System.nanoTime()
     val queryJson = s"""{"semantic": [${semantic.map(f => s""""${f.field}:${f.query}"""").mkString(",")}],""" +
       s""" "full_text": [${fullText.map(f => s""""${f.field}:${f.query}"""").mkString(",")}]}"""
-    val results = search(p, semantic, fullText, limit, filterJson).cache()
+    val results = search(p, semantic, fullText, limit, filterJson)
     // search logging is concurrent BY NATURE (the reference logs inside
     // every search statement) — stage-then-rename appends, never
     // SaveMode.Append's shared _temporary dir. Both logs write
-    // driver-side: the results frame is top-`limit` by contract and its
-    // (score desc, document_id) order IS the rank, so the one collect
-    // (which also primes the cache the caller reads) replaces a window +
-    // two coalesce(1) jobs on the request hot path.
+    // driver-side: the results frame is a local relation, top-`limit` by
+    // contract, and its (score desc, document_id) order IS the rank.
     DeltaTable.appendLogFilesLocal(searchesPath,
       Seq("search_id" -> "long", "query" -> "string", "created_at" -> "string"),
       Seq(Seq(searchId, queryJson, java.time.Instant.now().toString)))

@@ -1,33 +1,37 @@
 package graft.store
 
+import scala.collection.concurrent.TrieMap
+import scala.reflect.ClassTag
+
 import org.apache.spark.{SparkThrowable, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, Predicate}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.IndexStore
 
-/** A table home's resolved read, planned once per file listing: the
-  * physical RDD of `frame` (a [[DeltaTable.read]] projected to the columns
-  * a caller looks up), with its manifest/committed-segment resolution,
-  * file listing, codegen and Hadoop-conf broadcast fixed at plan time.
-  * Key lookups over it are one `runJob` each with no Analyzer, planner or
-  * closure-cleaning work. Nothing is persisted: a dropped reader holds no
-  * blocks, so retiring one can never pull data from under a lookup in
-  * flight.
+/** A table home's resolved read of `cols`, planned once per file listing:
+  * the physical RDD of `table` (a [[DeltaTable.read]]) projected to the
+  * columns a caller looks up or scores, with its manifest/committed-segment
+  * resolution, file listing, codegen and Hadoop-conf broadcast fixed at
+  * plan time. Key lookups and scans over it are one `runJob` each with no
+  * Analyzer, planner or closure-cleaning work. Nothing is persisted: a
+  * dropped reader holds no blocks, so retiring one can never pull data from
+  * under a lookup in flight.
   *
   * A publish that swaps the home's files (a compaction, a merge, a full
   * rewrite) can land between the listing check that handed out this
-  * reader and a lookup's scan; the scan then finds a planned file gone.
-  * The lookup drops the home's reader, plans `frame` afresh on the new
-  * listing and runs once more — so it reads the snapshot published last,
-  * never a subset of one. */
+  * reader and a lookup's or scan's job; the job then finds a planned file
+  * gone. It drops every reader of the home, plans `table` afresh on the
+  * new listing and runs once more — so it reads the snapshot published
+  * last, never a subset of one. */
 private[store] final class SnapshotRead private (
-    home: String, frame: () => DataFrame, private[store] val plan: SnapshotRead.Plan) {
+    private val home: String, private val cols: Seq[String], private val table: () => DataFrame,
+    private[store] val plan: SnapshotRead.Plan) {
 
   def schema: StructType = plan.schema
 
@@ -36,50 +40,116 @@ private[store] final class SnapshotRead private (
     * re-plan when a publish moved the files. */
   def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] =
     if (keys.isEmpty) Array.empty
-    else try plan.lookup(keyCols, keys)
-    catch {
-      case e: Exception if SnapshotRead.missingFile(e) =>
-        SnapshotRead.invalidate(home)
-        SnapshotRead(home)(frame()).plan.lookup(keyCols, keys)
+    else {
+      val ords = keyCols.map(schema.fieldIndex).toArray
+      SnapshotRead.scan(IndexedSeq(this), _ => true)(new SnapshotRead.KeepKeys(ords,
+        ords.map(schema(_).dataType), keys.map(_.map(CatalystTypeConverters.convertToCatalyst)).toSet))
+        .head.flatten
     }
 
+  /** This read planned on the home's current files. */
+  private def replanned: SnapshotRead = SnapshotRead(home, cols)(table())
+
   /** `cond` (a Column over this read's columns) as a predicate on the rows
-    * [[lookup]] returns: analyzed over an empty relation of this schema
-    * and evaluated interpreted, so `where(cond)`'s verdict with no query
-    * execution and no code generation. */
+    * [[lookup]] returns: `where(cond)`'s verdict with no query execution
+    * and no code generation (see [[analyzed]]). */
   def predicate(spark: SparkSession, cond: Column): InternalRow => Boolean =
-    ReplaceExpressions(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      .where(cond).queryExecution.analyzed) match {
+    analyzed(spark, _.where(cond)) match {
       case Filter(c, child) =>
         val p = Predicate.createInterpreted(BindReferences.bindReference(c, child.output))
         p.initialize(0)
         p.eval
       case other => throw new IllegalStateException(s"unexpected filter plan $other")
     }
+
+  /** `v` (a Column over this read's columns) bound to the rows this read's
+    * lookups and scans give, for interpreted `eval`: the value
+    * `select(v)` computes for the row, with no query execution (see
+    * [[analyzed]]). Serializable, so a scan's tasks can evaluate it. */
+  def value(spark: SparkSession, v: Column): Expression =
+    analyzed(spark, _.select(v)) match {
+      case Project(Seq(e), child) =>
+        BindReferences.bindReference(e match { case a: Alias => a.child; case o => o }, child.output)
+      case other => throw new IllegalStateException(s"unexpected projection plan $other")
+    }
+
+  /** `f` over an empty relation of this schema, analyzed, with runtime-
+    * replaceable expressions swapped for the ones they stand for — what
+    * the planned query would evaluate, ready to bind and run interpreted. */
+  private def analyzed(spark: SparkSession, f: DataFrame => DataFrame): LogicalPlan =
+    ReplaceExpressions(f(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+      .queryExecution.analyzed)
 }
 
 private[store] object SnapshotRead {
 
-  // home → (listing fingerprint, plan): the residency layer the index
-  // handles use, checked against the home's listing on every serve
-  private val reads = new IndexStore.Family[Plan]("snapshot-reads", 1)(_ => ())
+  // home → (listing fingerprint, projected columns → plan): the residency
+  // layer the index handles use, checked against the home's listing on
+  // every serve; a listing change drops every projection of the home
+  private val reads =
+    new IndexStore.Family[TrieMap[Seq[String], Plan]]("snapshot-reads", 1)(_ => ())
 
-  /** The resident reader of a local `home`, re-planned from `frame` when
-    * the home's listing changed since it was planned. A non-local home has
-    * no listing to check, so it is planned on every call: never stale. */
-  def apply(home: String)(frame: => DataFrame): SnapshotRead =
-    new SnapshotRead(home, () => frame,
-      if (DeltaTable.isLocal(home)) reads.serveFixed(home)(prepare(frame))
-      else prepare(frame))
+  /** The resident reader of `cols` of a local `home`, re-planned from
+    * `table` when the home's listing changed since it was planned. A
+    * non-local home has no listing to check, so it is planned on every
+    * call: never stale. */
+  def apply(home: String, cols: Seq[String])(table: => DataFrame): SnapshotRead = {
+    def prepare: Plan = {
+      val frame = table.select(cols.head, cols.tail: _*)
+      new Plan(frame.schema, frame.queryExecution.toRdd)
+    }
+    new SnapshotRead(home, cols, () => table,
+      if (DeltaTable.isLocal(home))
+        reads.serveFixed(home)(TrieMap.empty).getOrElseUpdate(cols, prepare)
+      else prepare)
+  }
 
   /** Field `i` of a looked-up row as a String (null stays null). */
   def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
-  /** Drop `home`'s plan: the next serve plans the home afresh. */
+  /** Drop every plan of `home`: the next serve plans the home afresh. */
   private[store] def invalidate(home: String): Unit = reads.invalidate(home)
 
-  private def prepare(frame: DataFrame): Plan = new Plan(frame.schema, frame.queryExecution.toRdd)
+  /** A [[scan]]'s per-partition work: `run(i, rows)` on a partition of the
+    * `i`-th read. */
+  abstract class Scan[U] extends Serializable {
+    def run(read: Int, rows: Iterator[InternalRow]): U
+  }
+
+  /** One Spark job over the partitions of the reads `wanted` picks, all
+    * of `reads` at once (their RDDs unioned): `task` runs on each, and the
+    * results come back per read, in partition order (empty for a read not
+    * wanted). A scan a publish beat to the files runs once more on fresh
+    * plans. */
+  def scan[U: ClassTag](reads: IndexedSeq[SnapshotRead], wanted: Int => Boolean)(
+      task: Scan[U]): IndexedSeq[Array[U]] =
+    try runScan(reads, wanted, task)
+    catch {
+      case e: Exception if missingFile(e) =>
+        reads.map(_.home).distinct.foreach(invalidate)
+        runScan(reads.map(_.replanned), wanted, task)
+    }
+
+  private def runScan[U: ClassTag](reads: IndexedSeq[SnapshotRead], wanted: Int => Boolean,
+      task: Scan[U]): IndexedSeq[Array[U]] = {
+    val rdds = reads.map(_.plan.rdd)
+    val readOf = rdds.indices.flatMap(i => Array.fill(rdds(i).partitions.length)(i)).toArray
+    val sc = rdds.head.sparkContext
+    val parts = readOf.indices.filter(p => wanted(readOf(p)))
+    val out = if (parts.isEmpty) Array.empty[U]
+      else sc.runJob(new UnionRDD(sc, rdds), new ScanJob(readOf, task), parts)
+    val byRead = parts.map(readOf).zip(out).groupMap(_._1)(_._2)
+    reads.indices.map(i => byRead.get(i).fold(Array.empty[U])(_.toArray))
+  }
+
+  /** A scan's task: `task` on the partition with its read's index. A
+    * named class, so the job's closure cleaning has nothing to walk. */
+  private final class ScanJob[U](readOf: Array[Int], task: Scan[U])
+      extends ((TaskContext, Iterator[InternalRow]) => U) with Serializable {
+    override def apply(ctx: TaskContext, rows: Iterator[InternalRow]): U =
+      task.run(readOf(ctx.partitionId()), rows)
+  }
 
   /** A scan found a file of its plan gone. */
   private def missingFile(e: Throwable): Boolean =
@@ -90,21 +160,13 @@ private[store] object SnapshotRead {
     }
 
   /** The resident part: the physical RDD and its schema. */
-  private[store] final class Plan(val schema: StructType, rdd: RDD[InternalRow]) {
-    def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] = {
-      val want = keys.map(_.map(CatalystTypeConverters.convertToCatalyst)).toSet
-      val ords = keyCols.map(schema.fieldIndex).toArray
-      rdd.sparkContext.runJob(rdd,
-        new KeepKeys(ords, ords.map(schema(_).dataType), want), rdd.partitions.indices).flatten
-    }
-  }
+  private[store] final class Plan(val schema: StructType, val rdd: RDD[InternalRow])
 
   /** The lookup's task: keep the rows whose key columns are in `keys`,
-    * copied (scans reuse their row buffers). A named class, so the job's
-    * closure cleaning has nothing to walk. */
+    * copied (scans reuse their row buffers). */
   private final class KeepKeys(ords: Array[Int], types: Array[DataType], keys: Set[Seq[Any]])
-      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
-    override def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      extends Scan[Array[InternalRow]] {
+    override def run(read: Int, rows: Iterator[InternalRow]): Array[InternalRow] =
       rows.filter(r => keys.contains(ords.indices.map(i => r.get(ords(i), types(i)))))
         .map(_.copy()).toArray
   }

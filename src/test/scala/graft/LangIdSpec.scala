@@ -54,9 +54,37 @@ class LangIdSpec extends AnyFunSuite {
     held.zipWithIndex.foreach { case (t, i) =>
       val (lang, conf) = model.predictOne(t)
       assert(dist(i).getString(1) == lang, s"row $i lang mismatch")
-      assert(dist(i).getDouble(2) == conf,
+      assert(java.lang.Double.doubleToRawLongBits(dist(i).getDouble(2)) ==
+        java.lang.Double.doubleToRawLongBits(conf),
         s"row $i confidence ${dist(i).getDouble(2)} != $conf (not bitwise)")
     }
+  }
+
+  test("predictOne's confidence equals the distributed one bit for bit where Math.exp would not") {
+    import spark.implicits._
+    // logit gaps d whose confidence 1/(1 + exp(-d)) differs in its bits
+    // between HotSpot's Math.exp intrinsic and StrictMath.exp (Spark's
+    // `exp`): class "bb" weighs each bucket -d, so a two-character text
+    // (one window) has logits (0, -d) and "aa" wins
+    val r = new java.util.SplittableRandom(11L)
+    def conf(e: Double => Double, d: Double) = 1.0 / (e(0.0) + e(-d))
+    val ds = Iterator.continually(r.nextDouble() * 8)
+      .filter(d => conf(math.exp, d) != conf(StrictMath.exp, d)).take(64).toArray
+    val m = LangIdClassifier.Model(2, 64, Array("aa", "bb"), Array(0.0, 0.0),
+      Array(new Array[Double](64), ds.map(-_)))
+    val texts = for (a <- 'a' to 'z'; b <- '0' to '9') yield s"$a$b"
+    val dist = LangIdClassifier.predictions(
+        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text"),
+        "id", "text", m).orderBy("id").collect()
+    val bits = java.lang.Double.doubleToRawLongBits _
+    texts.indices.foreach { i =>
+      val (lang, c) = m.predictOne(texts(i))
+      assert(lang == "aa" && dist(i).getString(1) == lang, texts(i))
+      assert(bits(c) == bits(dist(i).getDouble(2)), texts(i))
+    }
+    assert(texts.indices.exists(i => bits(conf(math.exp, ds(
+      (graft.functions.TextKernels.fnv1a64(texts(i)) & 63).toInt))) != bits(dist(i).getDouble(2))),
+      "no text's logits separate the two exps")
   }
 
   test("predictions equal the literal-fold plan bit for bit on both evaluation paths") {

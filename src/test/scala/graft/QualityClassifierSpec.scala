@@ -62,8 +62,28 @@ class QualityClassifierSpec extends AnyFunSuite {
     val z = model.intercept + toks.map(t =>
       model.weights((graft.functions.TextKernels.fnv1a64(t) & (model.dim - 1)).toInt)
         / toks.length.toDouble).sum
-    val expected = 1.0 / (1.0 + math.exp(-z))
-    assert(math.abs(served - expected) < 1e-12)
+    val expected = 1.0 / (1.0 + StrictMath.exp(-z))
+    assert(java.lang.Double.doubleToRawLongBits(served) ==
+      java.lang.Double.doubleToRawLongBits(expected))
+  }
+
+  test("scoreOne equals the distributed score bit for bit where Math.exp would not") {
+    // logits whose sigmoid differs in its bits between HotSpot's Math.exp
+    // intrinsic and StrictMath.exp (Spark's `exp`), one per hash bucket: a
+    // one-token text folds to intercept 0 + its bucket's weight
+    val r = new java.util.SplittableRandom(7L)
+    def sig(e: Double => Double, z: Double) = 1.0 / (1.0 + e(-z))
+    val zs = Iterator.continually(r.nextDouble() * 16 - 8)
+      .filter(z => sig(math.exp, z) != sig(StrictMath.exp, z)).take(64).toArray
+    val m = QualityClassifier.Model(64, 0.0, zs)
+    val texts = (0 until 200).map(i => s"t$i")
+    val dist = QualityClassifier.scores(texts.zipWithIndex.map(_.swap).toDF("id", "text"),
+      "id", "text", m).orderBy("id").select("score").as[Double].collect()
+    val bits = java.lang.Double.doubleToRawLongBits _
+    texts.indices.foreach(i => assert(bits(m.scoreOne(texts(i))) == bits(dist(i)), texts(i)))
+    assert(texts.indices.exists(i => bits(sig(math.exp, m.weights(
+      (graft.functions.TextKernels.fnv1a64(texts(i)) & 63).toInt))) != bits(dist(i))),
+      "no text's logit separates the two exps")
   }
 
   test("empty document scores the model prior sigmoid(intercept)") {

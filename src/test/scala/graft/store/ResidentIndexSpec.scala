@@ -245,6 +245,32 @@ class ResidentIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("two projections of one home each keep their own resident plan") {
+    import org.apache.spark.sql.functions.col
+    val wh = Files.createTempDirectory("graft_projections_").toString
+    val c = new Collection(spark, "projections", wh)
+    upsert(c, 0 until 12, "proj")
+    c.syncPipeline(pipeline)
+    val table = DeltaTable.read(spark, s"$wh/projections/p/body_embeddings")
+    val ids = table.select("document_id").as[String].collect().toSeq.distinct
+    val wantKeys = table.select(col("hid"), col("document_id"), col("chunk_index"))
+      .as[(Long, String, Int)].collect().toSet
+    val wantVecs = table.select(col("document_id"), col("chunk_index"), col("embedding"))
+      .as[(String, Int, Seq[Float])].collect().toSet
+    // alternate: each serve of one projection follows a serve of the other
+    for (_ <- 1 to 3) {
+      val keys = c.hidKeys(pipeline, "body")
+      assert(keys.schema.fieldNames.toSeq == Seq("hid", "document_id", "chunk_index"))
+      assert(keys.lookup(Seq("document_id"), ids.map(Seq(_)))
+        .map(r => (r.getLong(0), SnapshotRead.string(r, 1), r.getInt(2))).toSet == wantKeys)
+      val vecs = c.chunkVectors(pipeline, "body")
+      assert(vecs.schema.fieldNames.toSeq == Seq("document_id", "chunk_index", "embedding"))
+      assert(vecs.lookup(Seq("document_id"), ids.map(Seq(_)))
+        .map(r => (SnapshotRead.string(r, 0), r.getInt(1), r.getArray(2).toFloatArray().toSeq))
+        .toSet == wantVecs)
+    }
+  }
+
   test("a read planned before a documents-compaction publish looks up the published files") {
     val wh = Files.createTempDirectory("graft_publish_").toString
     val c = new Collection(spark, "publish", wh)
