@@ -2033,19 +2033,26 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * fused sum is `((s₀ + s₁) + …)` in argument order, semantic arms first,
     * and the order is SQL's. No Catalyst query runs on a warm call.
     *
-    * A round reports, per partition of every arm's read, the
+    * The metadata filter is evaluated first, in one scan of the documents'
+    * prepared read; the arms then score only the documents it passes. A
+    * round reports, per partition of every arm's read, the
     * `max(4·limit, 64)` best documents and the score bounding the rest
     * (see [[HybridSearch]]). It stops once `limit` documents survive with
     * the last one's score above anything an unreported document could sum
     * to, or once every partition reported every document; otherwise the
     * per-partition count doubles and a new round runs.
     *
-    * Spark jobs per warm call: per round, one scan of all arms, one more
-    * scan when documents known exactly in one arm need their score in
-    * another, and one documents lookup per batch of payloads (fetched in
-    * score order; their filter verdicts decide survival). An unfiltered
-    * call that one round decides runs 2–3 jobs; a selective filter adds
-    * rounds.
+    * Spark jobs per warm call: one filter scan when filtered; per round,
+    * one scan of all arms and one more scan when documents known exactly
+    * in one arm need their score in another; rounds number at most one
+    * plus log₂ of a partition's documents over the first round's count.
+    * Payloads come from documents lookups in score order, each fetching
+    * twice the ids of the one before (the first, the `limit` still
+    * missing), so candidates without a documents row add O(log n)
+    * lookups. A call that one round decides runs 2–3 jobs unfiltered and
+    * 3–4 filtered; a filter that passes nothing stops after its scan.
+    * All jobs of a call read one snapshot: a publish that moves the files
+    * mid-call restarts it on fresh plans.
     * Each prepared read adds its planning only on the first call after a
     * write changed its table.
     */
@@ -2084,9 +2091,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
         TsRank.rank(col("terms"), fq.query) * fq.boost), positive = true)
     }
     val docs = docPayloads
-    val passes = filterJson.map(f => docs.predicate(spark,
+    val filter = filterJson.map(f => docs.value(spark,
       FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document")))))
-    val top = HybridSearch.topK((semArms ++ ftsArms).toIndexedSeq, docs, passes, limit, m0)
+    val top = HybridSearch.topK((semArms ++ ftsArms).toIndexedSeq, docs, filter, limit, m0)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._

@@ -26,9 +26,9 @@ import graft.operators.IndexStore
   * A publish that swaps the home's files (a compaction, a merge, a full
   * rewrite) can land between the listing check that handed out this
   * reader and a lookup's or scan's job; the job then finds a planned file
-  * gone. It drops every reader of the home, plans `table` afresh on the
-  * new listing and runs once more — so it reads the snapshot published
-  * last, never a subset of one. */
+  * gone. The call ([[SnapshotRead.consistent]]) drops every reader of its
+  * homes, plans them afresh on the new listings and runs once more — so it
+  * reads the snapshot published last, never a subset of one. */
 private[store] final class SnapshotRead private (
     private val home: String, private val cols: Seq[String], private val table: () => DataFrame,
     private[store] val plan: SnapshotRead.Plan) {
@@ -39,6 +39,11 @@ private[store] final class SnapshotRead private (
     * Long, …), copied, in partition order. One Spark job, or two plus the
     * re-plan when a publish moved the files. */
   def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] =
+    SnapshotRead.consistent(IndexedSeq(this))(_.head.lookupOnce(keyCols, keys))
+
+  /** [[lookup]] without the retry: a publish that moved the files fails
+    * it. For a call of several jobs, inside [[SnapshotRead.consistent]]. */
+  def lookupOnce(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] =
     if (keys.isEmpty) Array.empty
     else {
       val ords = keyCols.map(schema.fieldIndex).toArray
@@ -117,21 +122,23 @@ private[store] object SnapshotRead {
     def run(read: Int, rows: Iterator[InternalRow]): U
   }
 
-  /** One Spark job over the partitions of the reads `wanted` picks, all
-    * of `reads` at once (their RDDs unioned): `task` runs on each, and the
-    * results come back per read, in partition order (empty for a read not
-    * wanted). A scan a publish beat to the files runs once more on fresh
-    * plans. */
-  def scan[U: ClassTag](reads: IndexedSeq[SnapshotRead], wanted: Int => Boolean)(
-      task: Scan[U]): IndexedSeq[Array[U]] =
-    try runScan(reads, wanted, task)
+  /** `body` over `reads`, all its jobs on one snapshot: when a publish
+    * beat one of them to the files, every read's home is dropped and
+    * `body` runs once more, from the start, on fresh plans of all of
+    * `reads` — so no job of the call reads files older than another's. */
+  def consistent[T](reads: IndexedSeq[SnapshotRead])(body: IndexedSeq[SnapshotRead] => T): T =
+    try body(reads)
     catch {
       case e: Exception if missingFile(e) =>
         reads.map(_.home).distinct.foreach(invalidate)
-        runScan(reads.map(_.replanned), wanted, task)
+        body(reads.map(_.replanned))
     }
 
-  private def runScan[U: ClassTag](reads: IndexedSeq[SnapshotRead], wanted: Int => Boolean,
+  /** One Spark job over the partitions of the reads `wanted` picks, all
+    * of `reads` at once (their RDDs unioned): `task` runs on each, and the
+    * results come back per read, in partition order (empty for a read not
+    * wanted). No retry: run it inside [[consistent]]. */
+  def scan[U: ClassTag](reads: IndexedSeq[SnapshotRead], wanted: Int => Boolean)(
       task: Scan[U]): IndexedSeq[Array[U]] = {
     val rdds = reads.map(_.plan.rdd)
     val readOf = rdds.indices.flatMap(i => Array.fill(rdds(i).partitions.length)(i)).toArray

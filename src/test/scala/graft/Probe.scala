@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
   *   drive                               manual e2e drive of the public surface
   *   ivf-recall [sfDir]                  measured recall@10 at nprobe=4/nlist=16
   *   profile [sfDir]                     stage decomposition of m1 + s4 legs
+  *   hybrid-filter <sfDir> [calls]       hybrid search cost per call, per filter selectivity
   */
 object Probe {
 
@@ -612,6 +613,43 @@ object Probe {
         println(f"pass $pass: add $tAdd%.3f s (${tAdd * 1e6 / n}%.1f us/insert), " +
           f"freeze $tSer%.3f s, nodes ${g.size}")
       }
+
+    case "hybrid-filter" :: rest =>
+      // per-call cost of hybrid search (s7's query shape) on the e2e
+      // collection, unfiltered and under filters passing ~40%, one and no
+      // document: median wall and process CPU ms, and Spark jobs per call
+      val sfDir = rest.headOption.getOrElse(sys.error("usage: hybrid-filter <sfDir> [calls]"))
+      val calls = rest.drop(1).headOption.map(_.toInt).getOrElse(10)
+      val spark = session(4)
+      val (c, p) = graft.queries.QueryCatalog.e2eCollection(spark, sfDir, 100000, 0)
+      val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+        .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      })
+      val filters = Seq("none" -> None,
+        "s10" -> Some("""{"$and": [{"lang": {"$in": ["en", "de"]}}, {"n_chars": {"$gt": 300}}]}"""),
+        "one" -> Some("""{"id": {"$eq": 7}}"""),
+        "nothing" -> Some("""{"n_chars": {"$lt": 0}}"""))
+      for ((name, f) <- filters) {
+        def call(): Int = c.search(p,
+          semantic = Seq(graft.store.VectorSearchField("text", "spark query table join", boost = 0.75)),
+          fullText = Seq(graft.store.FullTextField("text", "spark data", boost = 0.5)),
+          limit = 10, filterJson = f).collect().length
+        (1 to 3).foreach(_ => call())
+        val runs = (1 to calls).map { _ =>
+          val j0 = jobs.get(); val c0 = os.getProcessCpuTime; val t0 = System.nanoTime()
+          val n = call()
+          ((System.nanoTime() - t0) / 1e6, (os.getProcessCpuTime - c0) / 1e6, jobs.get() - j0, n)
+        }
+        def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+        println(f"HYBRID $name%-8s rows ${runs.head._4}%2d wall ${med(runs.map(_._1))}%8.1f ms " +
+          f"cpu ${med(runs.map(_._2))}%8.1f ms jobs ${med(runs.map(_._3.toDouble))}%5.1f")
+      }
+      spark.stop()
 
     case "serve-floor" :: rest =>
       // how much of v9d/v5d's per-request latency is the irreducible

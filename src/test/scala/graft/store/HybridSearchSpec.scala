@@ -148,7 +148,10 @@ class HybridSearchSpec extends AnyFunSuite {
       Seq(FullTextField("body", "spark")), 12),
     Q(Seq(VectorSearchField("body", "graph", boost = 0.25)),
       Seq(FullTextField("body", "stream", boost = 2.0)), 60,
-      Some("""{"kind": {"$in": [0, 2]}}""")))
+      Some("""{"kind": {"$in": [0, 2]}}""")),
+    // a filter that passes one document, revised into the delta segment
+    Q(Seq(VectorSearchField("body", "spark engine")), Seq(FullTextField("body", "data")), 5,
+      Some("""{"id": {"$eq": 3}}""")))
 
   test("the corpus holds the planted cases") {
     val c = coll
@@ -193,7 +196,7 @@ class HybridSearchSpec extends AnyFunSuite {
     assert(one > default + 2, s"m0 1 ran $one jobs, the default $default")
   }
 
-  test("a warm search runs no Catalyst query and at most 3 jobs unfiltered") {
+  test("a warm search runs no Catalyst query, at most 3 jobs unfiltered and 4 filtered") {
     val c = coll
     def run(q: Q): Unit = { c.search(pipeline, q.semantic, q.fullText, q.limit, q.filter); () }
     Seq(queries.head, queries(4)).foreach { q =>
@@ -204,6 +207,8 @@ class HybridSearchSpec extends AnyFunSuite {
     }
     val jobs = TestSpark.jobsOf(spark)(run(queries.head))
     assert(jobs <= 3, s"warm unfiltered search ran $jobs Spark jobs (budget 3)")
+    val filtered = TestSpark.jobsOf(spark)(run(queries(4)))
+    assert(filtered <= 4, s"warm filtered search ran $filtered Spark jobs (budget 4)")
   }
 
   test("threshold fusion equals the chain over generated score tables") {
@@ -250,9 +255,9 @@ class HybridSearchSpec extends AnyFunSuite {
       }
       val docsRead = SnapshotRead(docsPath, Seq("source_uuid", "document"))(
         spark.read.parquet(docsPath))
-      val passes = filter.map(f => docsRead.predicate(spark, FilterCompiler.compile(f, resolver)))
+      val cond = filter.map(f => docsRead.value(spark, FilterCompiler.compile(f, resolver)))
       for (m0 <- Seq(1, 2, 3, 64)) {
-        val got = HybridSearch.topK(reads, docsRead, passes, limit, m0)
+        val got = HybridSearch.topK(reads, docsRead, cond, limit, m0)
           .map { case (d, doc, sc) => (d, doc, java.lang.Double.doubleToRawLongBits(sc)) }
         assert(got == want, s"seed $seed, m0 $m0, arms ${arms.map(_._2)}, filter $filter")
       }
@@ -305,6 +310,98 @@ class HybridSearchSpec extends AnyFunSuite {
       (Seq(Seq(("e", 1, Some(0.0)), ("e", 0, Some(-0.0)), ("d", 1, Some(0.0)), ("f", 0, Some(-1.0))),
         Seq(("d", 0, Some(-0.0)), ("g", 0, Some(-2.0)), ("g", 1, None))), false)),
       limit = 3, m0 = 1)
+  }
+
+  /** One arm table of (document_id, chunk_index, x) and a documents table
+    * of (source_uuid, document) under `dir`, in `parts` files each. */
+  private def world(s: SparkSession, dir: String, arm: Seq[(String, Int, Double)],
+      docs: Seq[(String, String)], parts: Int): Unit = {
+    import s.implicits._
+    arm.toDF("document_id", "chunk_index", "x").repartition(parts)
+      .write.mode("overwrite").parquet(s"$dir/arm")
+    docs.toDF("source_uuid", "document").repartition(parts)
+      .write.mode("overwrite").parquet(s"$dir/documents")
+  }
+
+  test("candidates that a filter rejects or that lack a documents row cost O(log) jobs") {
+    val s = TestSpark.session
+    val n = 2000
+    val r = new java.util.SplittableRandom(7)
+    val ids = (0 until n).map(i => f"d$i%04d")
+    val arm = ids.map(d => (d, 0, r.nextDouble()))
+    val resolver = FilterCompiler.jsonStringResolver(col("document"))
+    // (documents rows, filter, the result): a filter passing one document
+    // or none, and no filter over rows for one document or none
+    val cases = Seq(
+      (ids, Some("""{"g": {"$eq": 1}}"""), Seq("d1234")),
+      (ids, Some("""{"g": {"$eq": 2}}"""), Nil),
+      (Seq("d1234"), None, Seq("d1234")),
+      (Seq("x"), None, Nil))
+    for ((rowsFor, filter, want) <- cases) {
+      val dir = Files.createTempDirectory("graft_selective_").toString
+      world(s, dir, arm, rowsFor.map(d => (d, s"""{"g": ${if (d == "d1234") 1 else 0}}""")),
+        parts = 4)
+      val read = SnapshotRead(s"$dir/arm", Seq("document_id", "chunk_index", "x"))(
+        s.read.parquet(s"$dir/arm"))
+      val docsRead = SnapshotRead(s"$dir/documents", Seq("source_uuid", "document"))(
+        s.read.parquet(s"$dir/documents"))
+      val arms = IndexedSeq(HybridSearch.Arm(read, read.value(s, col("x")), positive = false))
+      // the filter's scan; m doubles from 1 until it covers the fullest
+      // partition, and a round scans once and fetches at most one short
+      // batch; the full batches double, so at most log2(n + 1) of them
+      val fullest = read.plan.rdd.mapPartitions(it => Iterator(it.size)).collect().max
+      val rounds = 1 + (32 - Integer.numberOfLeadingZeros(fullest - 1))
+      val budget = 1 + 2 * rounds + (32 - Integer.numberOfLeadingZeros(n))
+      val cond = filter.map(f => docsRead.value(s, FilterCompiler.compile(f, resolver)))
+      var got: Seq[(String, String, Double)] = null
+      val jobs = TestSpark.jobsOf(s) { got = HybridSearch.topK(arms, docsRead, cond, 1, 1) }
+      assert(got.map(_._1) == want, s"filter $filter, rows for ${rowsFor.size}")
+      assert(jobs <= budget,
+        s"filter $filter, rows for ${rowsFor.size}: $jobs jobs for $rounds rounds over $n documents")
+    }
+  }
+
+  test("a publish that beats a call's job restarts it once, on fresh plans of every read") {
+    val dir = Files.createTempDirectory("graft_restart_").toString
+    val ids = (0 until 30).map(i => f"d$i%02d")
+    def arm(seed: Long): Seq[(String, Int, Double)] = {
+      val r = new java.util.SplittableRandom(seed)
+      for (d <- ids; c <- 0 until 3) yield (d, c, r.nextDouble() * 2 - 1)
+    }
+    world(spark, dir, arm(1), ids.map(d => (d, s"""{"id": "$d"}""")), parts = 3)
+    def reads(): (IndexedSeq[HybridSearch.Arm], SnapshotRead) = {
+      val a = SnapshotRead(s"$dir/arm", Seq("document_id", "chunk_index", "x"))(
+        spark.read.parquet(s"$dir/arm"))
+      (IndexedSeq(HybridSearch.Arm(a, a.value(spark, col("x")), positive = false)),
+        SnapshotRead(s"$dir/documents", Seq("source_uuid", "document"))(
+          spark.read.parquet(s"$dir/documents")))
+    }
+    val (staleArms, staleDocs) = reads()
+    // the publish: the arm's files replaced by a new snapshot's
+    world(spark, dir, arm(2), ids.map(d => (d, s"""{"id": "$d"}""")), parts = 3)
+    var got: Seq[(String, String, Double)] = null
+    val jobs = TestSpark.jobsOf(spark) {
+      got = HybridSearch.topK(staleArms, staleDocs, None, 5, 1)
+    }
+    val (freshArms, freshDocs) = reads()
+    var again: Seq[(String, String, Double)] = null
+    val fresh = TestSpark.jobsOf(spark) {
+      again = HybridSearch.topK(freshArms, freshDocs, None, 5, 1)
+    }
+    val want = rows(fuse(Seq(bestPerDoc(spark.read.parquet(s"$dir/arm").withColumn("s", col("x")),
+      "s")), spark.read.parquet(s"$dir/documents")
+      .select(col("source_uuid").as("document_id"), col("document")), 5))
+    def bits(t: Seq[(String, String, Double)]) =
+      t.map { case (d, doc, sc) => (d, doc, java.lang.Double.doubleToRawLongBits(sc)) }
+    assert(bits(got) == want && bits(again) == want)
+    // the restart's re-plan of both reads (schema inference runs jobs)
+    val planning = TestSpark.jobsOf(spark) {
+      Seq("arm", "documents").foreach(t => SnapshotRead.invalidate(s"$dir/$t"))
+      reads(); ()
+    }
+    assert(fresh > 2, s"the call ran $fresh jobs: too few to tell a restart from a per-job retry")
+    assert(jobs == 1 + planning + fresh,
+      s"the stale call ran $jobs jobs: not 1 failed + $planning planning + $fresh of a fresh call")
   }
 
   test("a search with neither arm is rejected naming both") {
