@@ -3,7 +3,15 @@ package graft.ml
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  InterpretedMutableProjection, NamedExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
 
@@ -29,8 +37,7 @@ class Registry(spark: SparkSession, dir: String) {
   // (pgml-extension/src/orm/model.rs cache); here: model dirs are immutable
   // per id so the model cache never invalidates, and the per-project
   // deployment pointer invalidates on deploy().
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[Long, (RegistryMeta, org.apache.spark.ml.Transformer)]
+  private val modelCache = scala.collection.concurrent.TrieMap.empty[Long, Served]
   private val deployCache =
     scala.collection.concurrent.TrieMap.empty[String, DeploymentRow]
   private val metricsCache =
@@ -240,7 +247,7 @@ class Registry(spark: SparkSession, dir: String) {
     // prime the serving cache — the first predict after train shouldn't
     // round-trip the estimator through parquet
     model match {
-      case t: org.apache.spark.ml.Transformer => modelCache.put(id, (metaObj, t))
+      case t: org.apache.spark.ml.Transformer => modelCache.put(id, new Served(id, metaObj, t))
       case _ =>
     }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(modelDir(id)))
@@ -352,19 +359,26 @@ class Registry(spark: SparkSession, dir: String) {
     predictWithModel(dep.model_id, df)
   }
 
-  private def cachedModel(modelId: Long): (RegistryMeta, org.apache.spark.ml.Transformer) =
+  private def cachedModel(modelId: Long): Served =
     modelCache.getOrElseUpdate(modelId, {
       val m = JsonMethods.parse(java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"${modelDir(modelId)}/graft_meta.json")))
         .extract[RegistryMeta]
-      (m, loadModel(m.modelClass, modelDir(modelId)))
+      new Served(modelId, m, loadModel(m.modelClass, modelDir(modelId)))
     })
+
+  /** A model the registry serves: its fitted columns, its estimator and
+    * the row chain [[predictRow]] evaluates, prepared on first use. */
+  private final class Served(id: Long, val meta: RegistryMeta,
+      val model: org.apache.spark.ml.Transformer) {
+    lazy val row: RowChain = RowChain(spark, meta, id, predictWithModel(id, _))
+  }
 
   /** Converged centroids of a stored clustering model (the models-table
     * introspection surface; also what lets the m3 oracle replay the
     * fixed-point assignment in SQL with the centers as literals). */
   def clusterCenters(modelId: Long): Array[Array[Double]] = {
-    cachedModel(modelId)._2 match {
+    cachedModel(modelId).model match {
       case km: org.apache.spark.ml.clustering.KMeansModel =>
         km.clusterCenters.map(_.toArray)
       case cm: CentroidModel => cm.centers.map(_.clone())
@@ -379,7 +393,7 @@ class Registry(spark: SparkSession, dir: String) {
     * no deployment or the deployment is not a centroid family. */
   def deployedCentroids(project: String): Option[(Long, Array[Array[Double]])] =
     currentDeployment(project).flatMap { dep =>
-      cachedModel(dep.model_id)._2 match {
+      cachedModel(dep.model_id).model match {
         case km: org.apache.spark.ml.clustering.KMeansModel =>
           Some((dep.model_id, km.clusterCenters.map(_.toArray)))
         case cm: CentroidModel => Some((dep.model_id, cm.centers.map(_.clone())))
@@ -392,7 +406,7 @@ class Registry(spark: SparkSession, dir: String) {
     * replay the projection with the components as SQL literals (same role
     * as [[clusterCenters]] for m3). */
   def pcaComponents(modelId: Long): Array[Array[Double]] = {
-    val (_, model) = cachedModel(modelId)
+    val model = cachedModel(modelId).model
     val pc = model.asInstanceOf[org.apache.spark.ml.feature.PCAModel].pc
     Array.tabulate(pc.numCols, pc.numRows)((c, j) => pc(j, c))
   }
@@ -401,7 +415,7 @@ class Registry(spark: SparkSession, dir: String) {
     * oracles' literal source. Serves both the MLlib estimator and the
     * robust-GD head. */
   def linearParams(modelId: Long): (Array[Double], Double) =
-    cachedModel(modelId)._2 match {
+    cachedModel(modelId).model match {
       case m: org.apache.spark.ml.regression.LinearRegressionModel =>
         (m.coefficients.toArray, m.intercept)
       case m: GdLinearModel => (m.coefficients.clone(), m.intercept)
@@ -413,7 +427,7 @@ class Registry(spark: SparkSession, dir: String) {
     * m13 oracle's literal source (the points in stored order ARE the
     * neighbour tie-break). */
   def knnParams(modelId: Long): (Array[Array[Double]], Array[Double], Int, Boolean) =
-    cachedModel(modelId)._2 match {
+    cachedModel(modelId).model match {
       case m: KnnModel => (m.points.map(_.clone()), m.labels.clone(), m.k, m.classification)
       case other => throw new IllegalArgumentException(
         s"model $modelId is not a knn model: ${other.getClass.getName}")
@@ -427,7 +441,7 @@ class Registry(spark: SparkSession, dir: String) {
     * (treeWeights, divisor 1 — x/1.0 ≡ x under IEEE). */
   def treeEnsemble(modelId: Long)
       : (Array[org.apache.spark.ml.tree.Node], Array[Double], Double) =
-    cachedModel(modelId)._2 match {
+    cachedModel(modelId).model match {
       case m: org.apache.spark.ml.regression.RandomForestRegressionModel =>
         (m.trees.map(_.rootNode), Array.fill(m.trees.length)(1.0),
           m.trees.length.toDouble)
@@ -441,7 +455,7 @@ class Registry(spark: SparkSession, dir: String) {
     * m9/x8 oracles' literal source. Serves both the MLlib estimator and
     * the warm-start head. */
   def logisticParams(modelId: Long): (Array[Double], Double) =
-    cachedModel(modelId)._2 match {
+    cachedModel(modelId).model match {
       case m: org.apache.spark.ml.classification.LogisticRegressionModel =>
         (m.coefficients.toArray, m.intercept)
       case m: GdLogisticModel => (m.coefficients.clone(), m.intercept)
@@ -454,7 +468,7 @@ class Registry(spark: SparkSession, dir: String) {
     * the m12 oracle's literal source. */
   def kernelApproxParams(modelId: Long)
       : (Array[Double], Array[Double], Int, Array[Double], Double) = {
-    val pm = cachedModel(modelId)._2.asInstanceOf[org.apache.spark.ml.PipelineModel]
+    val pm = cachedModel(modelId).model.asInstanceOf[org.apache.spark.ml.PipelineModel]
     val rff = pm.stages(0).asInstanceOf[RffTransformer]
     val (c, b) = pm.stages(1) match {
       case m: org.apache.spark.ml.classification.LinearSVCModel =>
@@ -475,7 +489,7 @@ class Registry(spark: SparkSession, dir: String) {
     * and other estimators fall back to a cold fit). */
   def deployedLogisticParams(project: String): Option[(Long, Array[Double], Double)] =
     currentDeployment(project).flatMap { dep =>
-      cachedModel(dep.model_id)._2 match {
+      cachedModel(dep.model_id).model match {
         case m: org.apache.spark.ml.classification.LogisticRegressionModel
             if m.numClasses == 2 =>
           Some((dep.model_id, m.coefficients.toArray, m.intercept))
@@ -490,11 +504,11 @@ class Registry(spark: SparkSession, dir: String) {
     * name back to its source expression in THIS order, so the replayed
     * margin folds over the same coefficient-feature pairing the served
     * dot product uses). */
-  def featureNames(modelId: Long): Seq[String] = cachedModel(modelId)._1.featNames
+  def featureNames(modelId: Long): Seq[String] = cachedModel(modelId).meta.featNames
 
   /** Stored preprocessing + feature layout of a model, rehydrated. */
   private[ml] def fittedOf(modelId: Long): (Seq[FittedColumn], Seq[String]) = {
-    val meta = cachedModel(modelId)._1
+    val meta = cachedModel(modelId).meta
     (meta.fitted.map(j => FittedColumn(
       ColumnPlan(j.name, j.encode, j.ordinalValues, j.impute, j.scale),
       j.categorical, j.categories, j.imputeValue, j.scaleOffset, j.scaleDiv, j.oneHotCats)),
@@ -513,7 +527,7 @@ class Registry(spark: SparkSession, dir: String) {
   }
 
   def predictWithModel(modelId: Long, df: DataFrame): DataFrame =
-    cachedModel(modelId)._2.transform(prepFeatures(modelId, df))
+    cachedModel(modelId).model.transform(prepFeatures(modelId, df))
 
   /** Persist hyperparameter-search results beside the model
     * (search_results JSON, model.rs:794-940): per-combo params,
@@ -625,18 +639,18 @@ class Registry(spark: SparkSession, dir: String) {
       .getOrElse(throw new IllegalStateException(s"no deployment for project $project"))
     responsesOf(dep.model_id) match {
       case Some(responses) =>
-        val (meta, model) = cachedModel(dep.model_id)
+        val served = cachedModel(dep.model_id)
         // one assignment rule for both families: left-assoc squared
         // distance, first-minimum tie-break (CentroidModel.assign — the
         // warm-started head reuses the identical code path)
-        val assigner = model match {
+        val assigner = served.model match {
           case km: org.apache.spark.ml.clustering.KMeansModel =>
             new CentroidModel(km.clusterCenters.map(_.toArray))
           case cm: CentroidModel => cm
           case other => throw new IllegalStateException(
             s"deployed conversation model is not a centroid family: ${other.getClass.getName}")
         }
-        val dim = meta.featNames.length
+        val dim = served.meta.featNames.length
         val emb = graft.functions.HashEmbedder(dim)
         inputs.map { input =>
           val cluster = assigner.assign(
@@ -656,29 +670,36 @@ class Registry(spark: SparkSession, dir: String) {
     * `__NULL__` → 0, unseen → NaN → impute), numeric impute + scale — then
     * the deployed estimator. Missing keys are NULLs, matching a SQL row()
     * with NULL fields.
+    *
+    * The first call on a model prepares it once: the analyzed Project
+    * chain of `predictWithModel(id, <empty frame>).select("prediction")`
+    * over the fitted schema (categoricals as strings, numerics as
+    * doubles). A call then evaluates that chain interpreted on its one
+    * row — the expressions the optimizer folds a one-row local relation
+    * with, so the bits are `predictWithModel(...).head()`'s — and runs 0
+    * Spark jobs, with no Catalyst analysis or planning. A model whose plan
+    * is not a chain of Projects over its input is refused.
     */
   def predictRow(project: String, row: Map[String, Any]): Double = {
     val dep = currentDeployment(project)
       .getOrElse(throw new IllegalStateException(s"no deployment for project $project"))
-    val (meta, _) = cachedModel(dep.model_id)
-    import org.apache.spark.sql.types._
-    // schema follows the fitted snapshot: categoricals arrive as strings
-    // (any input datum is stringified for lookup, model.rs:1009-1090),
-    // numerics as doubles
-    val schema = StructType(meta.fitted.map(f =>
-      StructField(f.name, if (f.categorical) StringType else DoubleType, nullable = true)))
-    val values: Seq[Any] = meta.fitted.map { f =>
+    val s = cachedModel(dep.model_id)
+    // any input datum is stringified for a categorical lookup
+    // (model.rs:1009-1090); numerics arrive as doubles
+    val out = s.row(s.meta.fitted.map { f =>
       row.get(f.name).flatMap(Option(_)) match {
         case None => null
-        case Some(v) if f.categorical => v.toString
+        case Some(v) if f.categorical => UTF8String.fromString(v.toString)
         case Some(v: Number) => v.doubleValue()
         case Some(v: Boolean) => if (v) 1.0 else 0.0
         case Some(v) => v.toString.toDouble
       }
+    })
+    out match {
+      case n: Number => n.doubleValue()
+      case other => throw new IllegalStateException(
+        s"model ${dep.model_id} predicted $other, not a number")
     }
-    val df = spark.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row(values: _*)), schema)
-    predictWithModel(dep.model_id, df).select("prediction").head().getDouble(0)
   }
 
   /** `pgml.dump_all` / `load_all` — registry tables to/from CSV
@@ -732,3 +753,51 @@ final case class FittedColumnJson(name: String, encode: String,
     ordinalValues: Seq[String], impute: String, scale: String,
     categorical: Boolean, categories: Map[String, Double], imputeValue: Double,
     scaleOffset: Double, scaleDiv: Double, oneHotCats: Seq[String])
+
+/** [[Registry.predictRow]]'s prepared evaluation: the Project chain of a
+  * model's prediction over a one-row input, bottom Project first, each
+  * with the attributes its child outputs. */
+private[ml] final class RowChain(steps: Seq[(Seq[NamedExpression], Seq[Attribute])]) {
+  private val dataType = steps.last._1.head.dataType
+
+  // evaluators no call is using, each over its own copy of the chain: a
+  // call takes one (or makes one) and gives it back, so concurrent calls
+  // never share evaluator state, and an evaluator's UDF converters are
+  // built on its first call only
+  private val idle =
+    new java.util.concurrent.ConcurrentLinkedQueue[Seq[InterpretedMutableProjection]]()
+
+  /** The prediction for an input row of Catalyst values. */
+  def apply(values: Seq[Any]): Any = {
+    val chain = Option(idle.poll()).getOrElse(steps.map { case (exprs, input) =>
+      new InterpretedMutableProjection(exprs.map(ColumnBridge.ownCopy), input)
+    })
+    try chain.foldLeft(InternalRow.fromSeq(values)) { (row, p) =>
+      p.initialize(0)
+      p(row)
+    }.get(0, dataType)
+    finally idle.offer(chain)
+  }
+}
+
+private[ml] object RowChain {
+  /** Model `id`'s chain: `predict` (the model applied to a frame of the
+    * fitted schema) over an empty frame, `select("prediction")`, analyzed,
+    * with runtime-replaceable expressions swapped for the ones they stand
+    * for. */
+  def apply(spark: SparkSession, meta: RegistryMeta, id: Long,
+      predict: DataFrame => DataFrame): RowChain = {
+    val schema = StructType(meta.fitted.map(f =>
+      StructField(f.name, if (f.categorical) StringType else DoubleType, nullable = true)))
+    val plan = ReplaceExpressions(predict(ColumnBridge.localFrame(spark, schema, Nil))
+      .select("prediction").queryExecution.analyzed)
+    def steps(p: LogicalPlan): List[Project] = p match {
+      case pr @ Project(list, child) if !list.exists(_.exists(e =>
+          e.isInstanceOf[Unevaluable] && !e.isInstanceOf[AttributeReference])) => pr :: steps(child)
+      case _: LocalRelation => Nil
+      case other => throw new IllegalStateException(s"model $id does not predict through " +
+        s"a chain of evaluable Projects over its input: ${other.nodeName}")
+    }
+    new RowChain(steps(plan).reverse.map(p => (p.projectList, p.child.output)))
+  }
+}

@@ -245,26 +245,8 @@ class IvfIndex private[operators] (
     val wanted = ranked.toSet
     val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
       probeRdd(idCol), wanted.contains)
-    val mcode = metric
-    val q = query
-    val kk = k
-    val partials = pruned.mapPartitions { it =>
-      import graft.functions.VectorKernels
-      val scoreAt: (Array[Float], Int) => Double = mcode match {
-        case IvfIndex.MetricL2 => (f, o) => -VectorKernels.distL2FS(f, o, q)
-        case IvfIndex.MetricIp => (f, o) => VectorKernels.dotFS(f, o, q)
-        case _ => (f, o) => VectorKernels.cosineFS(f, o, q)
-      }
-      it.map { case (ids, flat, d) =>
-        val acc = new VectorSearch.LongDoubleAcc(ids.length)
-        var j = 0
-        while (j < ids.length) {
-          acc.putIfAbsent(ids(j), scoreAt(flat, j * d))
-          j += 1
-        }
-        acc.topHits(kk)
-      }
-    }.collect()
+    val partials = pruned.sparkContext.runJob(pruned,
+      new IvfIndex.Probe(metric, query, k), pruned.partitions.indices).flatten
     val merged = new VectorSearch.LongDoubleAcc(partials.iterator.map(_.length).sum)
     partials.foreach(_.foreach { case (id, s) => merged.putIfAbsent(id, s) })
     merged.topHits(k)
@@ -312,6 +294,32 @@ object IvfIndex {
       metric: String, vec: org.apache.spark.sql.Column,
       centroid: Array[Float]): org.apache.spark.sql.Column =
     scoreExpr(metric, vec, centroid)
+  /** [[IvfIndex.serveDistributed]]'s task: each cluster blob of the
+    * partition scored exactly against `q`, its top `k` kept. A named class,
+    * so the job's closure cleaning has nothing to walk. */
+  private final class Probe(metric: String, q: Array[Float], k: Int)
+      extends ((org.apache.spark.TaskContext, Iterator[(Array[Long], Array[Float], Int)]) =>
+        Array[Array[(Long, Double)]]) with Serializable {
+    override def apply(ctx: org.apache.spark.TaskContext,
+        it: Iterator[(Array[Long], Array[Float], Int)]): Array[Array[(Long, Double)]] = {
+      import graft.functions.VectorKernels
+      val scoreAt: (Array[Float], Int) => Double = metric match {
+        case MetricL2 => (f, o) => -VectorKernels.distL2FS(f, o, q)
+        case MetricIp => (f, o) => VectorKernels.dotFS(f, o, q)
+        case _ => (f, o) => VectorKernels.cosineFS(f, o, q)
+      }
+      it.map { case (ids, flat, d) =>
+        val acc = new VectorSearch.LongDoubleAcc(ids.length)
+        var j = 0
+        while (j < ids.length) {
+          acc.putIfAbsent(ids(j), scoreAt(flat, j * d))
+          j += 1
+        }
+        acc.topHits(k)
+      }.toArray
+    }
+  }
+
   /** Partition index == cluster id: what makes per-query partition
     * pruning possible on the prepared probe RDD. */
   private[operators] final class ClusterPartitioner(n: Int)

@@ -1,8 +1,12 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.ChunkFunctions.chunkText
 import graft.functions.{Embedder, HashEmbedder}
@@ -1720,8 +1724,11 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * chunk_index, score), best first, as a local frame — see [[hnswHits]]. */
   def hnswSearch(p: Pipeline, field: String, query: Array[Float], k: Int,
       ef: Int = 0): DataFrame =
-    hnswHits(p, field, query, k, ef).map(h => (h.docId, h.chunkIndex, h.score))
-      .toDF("document_id", "chunk_index", "score")
+    ColumnBridge.localFrame(spark, StructType(Seq(StructField("document_id", StringType),
+        StructField("chunk_index", IntegerType, nullable = false),
+        StructField("score", DoubleType, nullable = false))),
+      hnswHits(p, field, query, k, ef)
+        .map(h => InternalRow(UTF8String.fromString(h.docId), h.chunkIndex, h.score)))
 
   /** Graph top-k, then the surrogate hits resolve back to (document_id,
     * chunk_index) through one key lookup on the embeddings table's
@@ -1844,15 +1851,18 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * consuming it later never re-runs the search against tables or index
     * homes a sync or background merge has since swapped.
     *
-    * No per-call Catalyst work over an HNSW field: the graph probe runs on
-    * the resident index handle, and the hid → chunk-key resolve, the
+    * No Catalyst rule runs and no closure is cleaned in a warm call over an
+    * HNSW field: the graph probe is one job of a named task on the
+    * resident index handle, and the hid → chunk-key resolve, the
     * documents payload and the chunk text are key lookups on each table's
     * prepared read ([[SnapshotRead]]) — one physical plan per table,
     * planned once and kept while the table home's file listing
     * ([[graft.operators.IndexStore.listingFingerprint]]) is unchanged, so
     * every call reads the snapshot the home holds when the call starts. A
     * metadata filter is the same compiled filter as `where(filter)`,
-    * evaluated on the fetched documents rows on the driver.
+    * analyzed once per filter shape on the documents read's plan and
+    * evaluated on the fetched documents rows on the driver. The result is
+    * a local relation already marked analyzed.
     *
     * Spark jobs per call over one HNSW field: 4 unfiltered (graph probe,
     * hid → chunk-key resolve, documents payload, chunk text); with a
@@ -1986,14 +1996,13 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       } yield (h, doc, chunk)
     }
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
+    def utf(s: String) = UTF8String.fromString(s)
     val schema = StructType(Seq("document_id", "document", "chunk")
       .map(StructField(_, StringType)) :+ StructField("score", DoubleType))
     rerank match {
       case None =>
-        spark.createDataFrame(
-          joined.map { case (h, d, c) => Row(h.docId, d, c, h.score) }.asJava, schema)
+        ColumnBridge.localFrame(spark, schema,
+          joined.map { case (h, d, c) => InternalRow(utf(h.docId), utf(d), utf(c), h.score) })
       case Some(_) =>
         // cross-scorer seam for pgml.rank (api.rs:612-625) — default is the
         // deterministic token-overlap stand-in; a BiEncoderReranker over a
@@ -2003,9 +2012,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
         // on the driver (no job). chunk_index is the final tie-break:
         // overlapping chunks of one document can share a score.
         val queryText = fieldQueries.map(_.query).mkString(" ")
-        val scored = spark.createDataFrame(
-            joined.map { case (h, d, c) => Row(h.docId, d, c, h.score, h.chunkIndex) }.asJava,
-            schema.add("chunk_index", IntegerType))
+        val scored = ColumnBridge.localFrame(spark, schema.add("chunk_index", IntegerType),
+            joined.map { case (h, d, c) =>
+              InternalRow(utf(h.docId), utf(d), utf(c), h.score, h.chunkIndex) })
           .withColumn("rerank_score", reranker.scoreCol(queryText, col("chunk")))
         val rsType = scored.schema("rerank_score").dataType
         val ranked = scored.withColumn("__rs", col("rerank_score").cast("double"))
@@ -2013,7 +2022,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
           .sorted(Collection.rerankOrder)
           .take(limit)
           .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(5)))
-        spark.createDataFrame(ranked.asJava, schema.add("rerank_score", rsType))
+        val out = schema.add("rerank_score", rsType)
+        val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(out)
+        ColumnBridge.localFrame(spark, out, ranked.map(toCatalyst(_).asInstanceOf[InternalRow]))
     }
   }
 
@@ -2094,12 +2106,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     val filter = filterJson.map(f => docs.value(spark,
       FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document")))))
     val top = HybridSearch.topK((semArms ++ ftsArms).toIndexedSeq, docs, filter, limit, m0)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(top.map { case (d, doc, s) => Row(d, doc, s) }.asJava,
+    ColumnBridge.localFrame(spark,
       StructType(Seq(StructField("document_id", StringType), StructField("document", StringType),
-        StructField("score", DoubleType, nullable = false))))
+        StructField("score", DoubleType, nullable = false))),
+      top.map { case (d, doc, s) => InternalRow(UTF8String.fromString(d), UTF8String.fromString(doc), s) })
   }
 
   /** RAG composition (rag_query_builder.rs:162-373): run named vector

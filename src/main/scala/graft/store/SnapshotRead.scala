@@ -7,10 +7,12 @@ import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, LeafExpression,
+  Literal, Predicate, Unevaluable, UnresolvedNamedLambdaVariable}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 import graft.operators.IndexStore
 
@@ -18,10 +20,12 @@ import graft.operators.IndexStore
   * the physical RDD of `table` (a [[DeltaTable.read]]) projected to the
   * columns a caller looks up or scores, with its manifest/committed-segment
   * resolution, file listing, codegen and Hadoop-conf broadcast fixed at
-  * plan time. Key lookups and scans over it are one `runJob` each with no
-  * Analyzer, planner or closure-cleaning work. Nothing is persisted: a
-  * dropped reader holds no blocks, so retiring one can never pull data from
-  * under a lookup in flight.
+  * plan time. Key lookups and scans over it are one `runJob` each of a
+  * named task, so no closure is cleaned. The Columns a caller scores or
+  * filters the rows with ([[value]], [[predicate]]) are analyzed once per
+  * shape and kept with the plan, so a warm call runs no Catalyst rule
+  * either. Nothing is persisted: a dropped reader holds no blocks, so
+  * retiring one can never pull data from under a lookup in flight.
   *
   * A publish that swaps the home's files (a compaction, a merge, a full
   * rewrite) can land between the listing check that handed out this
@@ -57,33 +61,20 @@ private[store] final class SnapshotRead private (
 
   /** `cond` (a Column over this read's columns) as a predicate on the rows
     * [[lookup]] returns: `where(cond)`'s verdict with no query execution
-    * and no code generation (see [[analyzed]]). */
-  def predicate(spark: SparkSession, cond: Column): InternalRow => Boolean =
-    analyzed(spark, _.where(cond)) match {
-      case Filter(c, child) =>
-        val p = Predicate.createInterpreted(BindReferences.bindReference(c, child.output))
-        p.initialize(0)
-        p.eval
-      case other => throw new IllegalStateException(s"unexpected filter plan $other")
-    }
+    * and no code generation, bound once per shape of `cond` (see
+    * [[SnapshotRead.Plan.bind]]). */
+  def predicate(spark: SparkSession, cond: Column): InternalRow => Boolean = {
+    val p = Predicate.createInterpreted(plan.bind(spark, cond, filter = true))
+    p.initialize(0)
+    p.eval
+  }
 
   /** `v` (a Column over this read's columns) bound to the rows this read's
     * lookups and scans give, for interpreted `eval`: the value
-    * `select(v)` computes for the row, with no query execution (see
-    * [[analyzed]]). Serializable, so a scan's tasks can evaluate it. */
-  def value(spark: SparkSession, v: Column): Expression =
-    analyzed(spark, _.select(v)) match {
-      case Project(Seq(e), child) =>
-        BindReferences.bindReference(e match { case a: Alias => a.child; case o => o }, child.output)
-      case other => throw new IllegalStateException(s"unexpected projection plan $other")
-    }
-
-  /** `f` over an empty relation of this schema, analyzed, with runtime-
-    * replaceable expressions swapped for the ones they stand for — what
-    * the planned query would evaluate, ready to bind and run interpreted. */
-  private def analyzed(spark: SparkSession, f: DataFrame => DataFrame): LogicalPlan =
-    ReplaceExpressions(f(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
-      .queryExecution.analyzed)
+    * `select(v)` computes for the row, with no query execution, bound
+    * once per shape of `v` (see [[SnapshotRead.Plan.bind]]).
+    * Serializable, so a scan's tasks can evaluate it. */
+  def value(spark: SparkSession, v: Column): Expression = plan.bind(spark, v, filter = false)
 }
 
 private[store] object SnapshotRead {
@@ -166,8 +157,94 @@ private[store] object SnapshotRead {
       case _ => false
     }
 
-  /** The resident part: the physical RDD and its schema. */
-  private[store] final class Plan(val schema: StructType, val rdd: RDD[InternalRow])
+  /** The resident part: the physical RDD and its schema, and the
+    * bindings of the Columns evaluated over its rows, one per shape. */
+  private[store] final class Plan(val schema: StructType, val rdd: RDD[InternalRow]) {
+
+    private val bindings = TrieMap.empty[(Boolean, Expression), Binding]
+
+    /** `c` analyzed over this schema as `where(c)` (`filter`) or
+      * `select(c)` would analyze it, with runtime-replaceable expressions
+      * swapped for the ones they stand for, bound to the rows — what the
+      * planned query evaluates, ready to run interpreted. The analysis
+      * runs once per shape of `c` (see [[shape]]); a later call with the
+      * same shape puts its own literals into its own copy of the bound
+      * tree, so no two calls share evaluator state. */
+    def bind(spark: SparkSession, c: Column, filter: Boolean): Expression = {
+      val e = ColumnBridge.converted(spark, c)
+      val lits = e.collect { case l: Literal => l }.toIndexedSeq
+      val key = shape(filter, e)
+      val b = bindings.getOrElse(key, {
+        val fresh = new Binding(analyzed(spark, e, filter), lits)
+        if (fresh.reusable && bindings.size < MaxShapes) bindings.putIfAbsent(key, fresh)
+        fresh
+      })
+      b.instance(lits)
+    }
+
+    /** `e` over an empty relation of this schema, analyzed, replaced and
+      * bound. `e` goes into the plan as it is, so the bound tree holds
+      * `e`'s own literal instances wherever analysis kept them. */
+    private def analyzed(spark: SparkSession, e: Expression, filter: Boolean): Expression = {
+      val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      val col = ColumnBridge.column(e)
+      ReplaceExpressions((if (filter) empty.where(col) else empty.select(col))
+        .queryExecution.analyzed) match {
+        case Filter(cond, child) if filter => BindReferences.bindReference(cond, child.output)
+        case Project(Seq(v), child) if !filter =>
+          BindReferences.bindReference(v match { case a: Alias => a.child; case o => o },
+            child.output)
+        case other => throw new IllegalStateException(s"unexpected bound plan $other")
+      }
+    }
+  }
+
+  /** Past this many shapes a read binds new ones per call: the memo of a
+    * long-lived read stays bounded however many filters callers invent. */
+  private val MaxShapes = 256
+
+  /** `e`'s shape as a `where` (`filter`) or a `select` binding: the tree
+    * with each literal's value dropped and its type kept, and lambda
+    * variables named by order of appearance (the Column API names each one
+    * afresh). A null or integral literal keeps its value: analysis sizes a
+    * decimal comparison by an integral one. */
+  private def shape(filter: Boolean, e: Expression): (Boolean, Expression) = {
+    val names = scala.collection.mutable.HashMap.empty[Seq[String], Seq[String]]
+    filter -> e.transformUp {
+      case l: Literal if !pinned(l) => ShapeSlot(l.dataType)
+      case v: UnresolvedNamedLambdaVariable =>
+        UnresolvedNamedLambdaVariable(names.getOrElseUpdate(v.nameParts, Seq(s"v${names.size}")))
+    }
+  }
+
+  /** `l`'s value stays in its [[shape]]. */
+  private def pinned(l: Literal): Boolean = l.value == null || (l.dataType match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  })
+
+  /** A literal of type `dataType` in a [[shape]]. */
+  private final case class ShapeSlot(dataType: DataType) extends LeafExpression with Unevaluable {
+    override def nullable: Boolean = false
+  }
+
+  /** A shape's bound tree, analyzed from an expression whose literals in
+    * pre-order are `lits`; where analysis kept one of them, it sits in
+    * `bound` as the same instance. */
+  private final class Binding(bound: Expression, lits: IndexedSeq[Literal]) {
+    private val slots = new java.util.IdentityHashMap[Literal, Integer]()
+    lits.indices.reverse.foreach(i => slots.put(lits(i), i))
+
+    /** Analysis kept every literal whose value the shape drops, so another
+      * call's literals can take their place. */
+    val reusable: Boolean = lits.forall(l => pinned(l) || bound.exists(_ eq l))
+
+    /** The bound tree with `call` (the caller's literals in pre-order) in
+      * place of the analyzed ones, as a copy of its own. */
+    def instance(call: IndexedSeq[Literal]): Expression = ColumnBridge.ownCopy(bound.transform {
+      case l: Literal if slots.containsKey(l) => call(slots.get(l))
+    })
+  }
 
   /** The lookup's task: keep the rows whose key columns are in `keys`,
     * copied (scans reuse their row buffers). */

@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   *   ivf-recall [sfDir]                  measured recall@10 at nprobe=4/nlist=16
   *   profile [sfDir]                     stage decomposition of m1 + s4 legs
   *   hybrid-filter <sfDir> [calls]       hybrid search cost per call, per filter selectivity
+  *   serve-driver [docs] [calls]         driver work of a warm call of each serve kind
   */
 object Probe {
 
@@ -648,6 +649,69 @@ object Probe {
         def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
         println(f"HYBRID $name%-8s rows ${runs.head._4}%2d wall ${med(runs.map(_._1))}%8.1f ms " +
           f"cpu ${med(runs.map(_._2))}%8.1f ms jobs ${med(runs.map(_._3.toDouble))}%5.1f")
+      }
+      spark.stop()
+
+    case "serve-driver" :: rest =>
+      // a warm call of each serve kind over a synced GenData collection
+      // (serve_read's pipeline and model): Spark jobs, Catalyst rule runs
+      // and indylambda closure cleans inside the call, and the calling
+      // thread's CPU per call (median)
+      val docs = rest.headOption.map(_.toLong).getOrElse(1000L)
+      val calls = rest.drop(1).headOption.map(_.toInt).getOrElse(20)
+      val spark = session(4)
+      import graft.store._
+      val wh = java.nio.file.Files.createTempDirectory("graft_serve_driver_").toString
+      val corpus = GenData.documents(spark, docs, 1L).cache()
+      val coll = new Collection(spark, "docs", wh)
+      coll.upsertDocuments(corpus.select(to_json(struct(col("doc_id").as("id"), col("text"),
+        col("lang"), col("source"), col("n_chars"))).as("document")))
+      val p = Pipeline("p", Seq(PipelineField("text", splitter = Some((1500, 40)),
+        semanticSearch = Some(graft.functions.HashEmbedder(64)), fullTextSearch = true,
+        hnswIndex = Some((16, 64)))))
+      coll.syncPipeline(p)
+      val trainer = new graft.ml.Trainer(spark, s"$wh/registry")
+      trainer.train("chars", "regression", corpus.select(
+        size(split(col("text"), " ")).cast("double").as("tc"),
+        size(array_distinct(split(col("text"), " "))).cast("double").as("uniq"),
+        col("n_chars").cast("double")), Some("n_chars"), "linear", testSize = 0.0)
+      val queries = corpus.select("text").as[String](org.apache.spark.sql.Encoders.STRING)
+        .take(calls + 3).map(_.split(" ").take(4).mkString(" "))
+      def lang(i: Int) = Some(s"""{"lang": {"$$eq": "${Seq("en", "de", "fr")(i % 3)}"}}""")
+      val kinds: Seq[(String, Int => Unit)] = Seq(
+        "vector_search" -> { (i: Int) =>
+          coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i)))); () },
+        "filtered" -> { (i: Int) =>
+          coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i))), filterJson = lang(i)); () },
+        "hybrid" -> { (i: Int) =>
+          coll.search(p, Seq(VectorSearchField("text", queries(i))),
+            Seq(FullTextField("text", queries(i)))); () },
+        "hybrid_filtered" -> { (i: Int) =>
+          coll.search(p, Seq(VectorSearchField("text", queries(i))),
+            Seq(FullTextField("text", queries(i))), filterJson = lang(i)); () },
+        "predict_row" -> { (i: Int) =>
+          trainer.registry.predictRow("chars", Map("tc" -> i.toDouble, "uniq" -> (i / 2).toDouble))
+          () })
+      kinds.foreach { case (_, f) => (0 until 3).foreach(f) }
+      coll.awaitMaintenance()
+      val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+      for ((kind, f) <- kinds) {
+        val jobs = TestSpark.jobsOf(spark)(f(3))
+        val runs = (3 until calls + 3).map { i =>
+          var cpu = 0L
+          var cleans = 0L
+          val rules = TestSpark.ruleRunsOf {
+            cleans = TestSpark.closureCleansOf {
+              val c0 = threads.getCurrentThreadCpuTime
+              f(i)
+              cpu = threads.getCurrentThreadCpuTime - c0
+            }
+          }
+          (rules.toDouble, cleans.toDouble, cpu / 1e6)
+        }
+        println(f"SERVE $kind%-16s jobs $jobs%2d rules ${med(runs.map(_._1))}%6.0f " +
+          f"cleans ${med(runs.map(_._2))}%3.0f thread_cpu ${med(runs.map(_._3))}%8.2f ms")
       }
       spark.stop()
 

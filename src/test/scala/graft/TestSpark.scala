@@ -71,6 +71,55 @@ object TestSpark {
     seen.get()
   }
 
+  /** Analyzer and optimizer rule executions, process-wide, while `body`
+    * runs: the delta of Catalyst's rule-execution metrics. */
+  def ruleRunsOf(body: => Unit): Long = {
+    val before = org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns
+    body
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns - before
+  }
+
+  /** Indylambda closures Spark's `ClosureCleaner` cleaned on this thread
+    * while `body` ran, counted from its DEBUG "Cleaning indylambda closure"
+    * events by an appender on its logger (the only one the logger writes
+    * to, so turning it to DEBUG prints nothing). */
+  def closureCleansOf(body: => Unit): Long = {
+    ClosureCleans.install
+    val thread = Thread.currentThread().getId
+    val before = ClosureCleans.of(thread)
+    body
+    ClosureCleans.of(thread) - before
+  }
+
+  private object ClosureCleans {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+
+    private val counts = new java.util.concurrent.ConcurrentHashMap[Long, java.util.concurrent.atomic.AtomicLong]()
+    def of(thread: Long): Long = Option(counts.get(thread)).fold(0L)(_.get)
+
+    lazy val install: Unit = {
+      val name = "org.apache.spark.util.ClosureCleaner"
+      val appender = new AbstractAppender("graft-closure-cleans", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          if (e.getMessage.getFormattedMessage.startsWith("Cleaning indylambda closure")) {
+            counts.computeIfAbsent(e.getThreadId, _ => new java.util.concurrent.atomic.AtomicLong())
+              .incrementAndGet()
+            ()
+          }
+      }
+      appender.start()
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val logger = new LoggerConfig(name, Level.DEBUG, false)
+      logger.addAppender(appender, Level.DEBUG, null)
+      ctx.getConfiguration.addLogger(name, logger)
+      ctx.updateLoggers()
+    }
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
