@@ -575,10 +575,7 @@ class Registry(spark: SparkSession, dir: String) {
     require(features.length % numFeatures == 0, "features not a multiple of numFeatures")
     val dep = currentDeployment(project)
       .getOrElse(throw new IllegalStateException(s"no deployment for project $project"))
-    val meta = JsonMethods.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"${modelDir(dep.model_id)}/graft_meta.json")))
-      .extract[RegistryMeta]
-    val colsNames = meta.fitted.map(_.name)
+    val colsNames = cachedModel(dep.model_id).meta.fitted.map(_.name)
     val rows = features.grouped(numFeatures).map(g => org.apache.spark.sql.Row(g: _*)).toSeq
     val schema = org.apache.spark.sql.types.StructType(colsNames.map(n =>
       org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.DoubleType)))

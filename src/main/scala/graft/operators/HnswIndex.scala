@@ -1394,6 +1394,13 @@ object HnswIndex {
       graphCache.keys.filter(_._1 == h).foreach(graphCache.remove)
     }
 
+  /** Drop every home at or below `prefix` (its files are going), with the
+    * deserialized graphs of those homes. */
+  def invalidateUnder(prefix: String): Unit = {
+    family.invalidateUnder(prefix)
+    graphCache.keys.filter(k => IndexStore.isUnder(k._1, prefix)).foreach(graphCache.remove)
+  }
+
   def invalidateAll(): Unit = {
     family.invalidateAll()
     graphCache.clear()

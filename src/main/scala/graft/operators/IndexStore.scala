@@ -108,7 +108,19 @@ private[graft] object IndexStore {
       homes
     }
 
+    /** Drop every cached home at or below `prefix` (a directory whose
+      * files are going: a removed pipeline, an archived collection). */
+    def invalidateUnder(prefix: String): Unit =
+      cache.keys.filter(isUnder(_, prefix)).foreach(invalidate)
+
     def invalidateAll(): Unit = { sourceOf.clear(); cache.keys.foreach(invalidate) }
+  }
+
+  /** `home` is `prefix` or lies below it, matched on whole path segments:
+    * `/wh/c/p` is under `/wh/c`, `/wh/c2/p` is not. */
+  def isUnder(home: String, prefix: String): Boolean = {
+    val dir = prefix.stripSuffix("/")
+    home == dir || home.startsWith(dir + "/")
   }
 
   /** Build-if-absent under the atomic-publish protocol: `sidecarName`'s

@@ -408,6 +408,9 @@ object IvfIndex {
     family.invalidateSource(sourcePath); ()
   }
 
+  /** Drop every home at or below `prefix` (its files are going). */
+  def invalidateUnder(prefix: String): Unit = family.invalidateUnder(prefix)
+
   def invalidateAll(): Unit = family.invalidateAll()
 
   /** Remove a persisted index (e.g. before a re-sync rebuilds it). */

@@ -1858,7 +1858,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * prepared read ([[SnapshotRead]]) — one physical plan per table,
     * planned once and kept while the table home's file listing
     * ([[graft.operators.IndexStore.listingFingerprint]]) is unchanged, so
-    * every call reads the snapshot the home holds when the call starts. A
+    * every call reads the snapshot the home holds when the call starts.
+    * The plan's rows stay resident in Spark's memory store, so a warm
+    * lookup scans decoded rows and opens no file; a partition evicted from
+    * storage memory is read from the planned files again. A
     * metadata filter is the same compiled filter as `where(filter)`,
     * analyzed once per filter shape on the documents read's plan and
     * evaluated on the fetched documents rows on the driver. The result is
@@ -2065,8 +2068,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * 3–4 filtered; a filter that passes nothing stops after its scan.
     * All jobs of a call read one snapshot: a publish that moves the files
     * mid-call restarts it on fresh plans.
-    * Each prepared read adds its planning only on the first call after a
-    * write changed its table.
+    * Each prepared read adds its planning, and the decode of its table's
+    * files, only on the first call after a write changed its table; warm
+    * calls scan the read's resident rows.
     */
   def search(
       p: Pipeline,
@@ -2272,6 +2276,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     checkPipelineName(p.name)
     withExclusiveLock(p.name) {
       Collection.generationOf(pipelineKey(p.name)).incrementAndGet()
+      releaseResident(s"$warehouseDir/$name/${p.name}")
       deleteRec(new java.io.File(s"$warehouseDir/$name/${p.name}"))
     }
     writePipelines(pipelines - p.name)
@@ -2341,8 +2346,18 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       .find(n => !new java.io.File(s"$warehouseDir/$n").exists())
       .get
     val dst = new java.io.File(s"$warehouseDir/$archiveName")
+    releaseResident(s"$warehouseDir/$name")
     require(src.renameTo(dst), s"failed to archive $src -> $dst")
     archiveName
+  }
+
+  /** Drop the resident state served from the table homes at or below
+    * `dir` (index handles with their probe RDDs and graphs, prepared reads
+    * with their rows) before its files go. */
+  private def releaseResident(dir: String): Unit = {
+    graft.operators.HnswIndex.invalidateUnder(dir)
+    graft.operators.IvfIndex.invalidateUnder(dir)
+    SnapshotRead.invalidateUnder(dir)
   }
 
   // write-then-swap so a failed job never truncates the live table; one

@@ -12,7 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Express
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType,
+  StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.IndexStore
 
@@ -24,15 +27,27 @@ import graft.operators.IndexStore
   * named task, so no closure is cleaned. The Columns a caller scores or
   * filters the rows with ([[value]], [[predicate]]) are analyzed once per
   * shape and kept with the plan, so a warm call runs no Catalyst rule
-  * either. Nothing is persisted: a dropped reader holds no blocks, so
-  * retiring one can never pull data from under a lookup in flight.
+  * either.
+  *
+  * The rows of a local home's plan stay resident: each row is copied out
+  * of the scan and the RDD is persisted `MEMORY_ONLY`, so a warm lookup or
+  * scan iterates decoded rows from the block manager and opens no file
+  * (Spark's storage status lists the RDD as `snapshot read (<cols>) of
+  * <home>`). A partition that did not fit in storage memory, or was
+  * evicted, is recomputed from the planned files as it is read. Dropping
+  * a plan (its home's listing changed, [[SnapshotRead.invalidate]], or
+  * [[SnapshotRead.consistent]]'s re-plan) unpersists its RDD, so the
+  * blocks of a retired snapshot go with it. A non-local home is planned on
+  * every call and nothing of it is persisted: an RDD per call would pile
+  * up in the block manager.
   *
   * A publish that swaps the home's files (a compaction, a merge, a full
   * rewrite) can land between the listing check that handed out this
-  * reader and a lookup's or scan's job; the job then finds a planned file
-  * gone. The call ([[SnapshotRead.consistent]]) drops every reader of its
-  * homes, plans them afresh on the new listings and runs once more — so it
-  * reads the snapshot published last, never a subset of one. */
+  * reader and a lookup's or scan's job; a job that must read a planned
+  * file (a first read, or a partition not resident) then finds it gone.
+  * The call ([[SnapshotRead.consistent]]) drops every reader of its homes,
+  * plans them afresh on the new listings and runs once more — so it reads
+  * the snapshot published last, never a subset of one. */
 private[store] final class SnapshotRead private (
     private val home: String, private val cols: Seq[String], private val table: () => DataFrame,
     private[store] val plan: SnapshotRead.Plan) {
@@ -40,8 +55,8 @@ private[store] final class SnapshotRead private (
   def schema: StructType = plan.schema
 
   /** Rows whose `keyCols` equal one of `keys` (Scala values: String, Int,
-    * Long, …), copied, in partition order. One Spark job, or two plus the
-    * re-plan when a publish moved the files. */
+    * Long, …), each a copy of its own, in partition order. One Spark job,
+    * or two plus the re-plan when a publish moved the files. */
   def lookup(keyCols: Seq[String], keys: Iterable[Seq[Any]]): Array[InternalRow] =
     SnapshotRead.consistent(IndexedSeq(this))(_.head.lookupOnce(keyCols, keys))
 
@@ -51,7 +66,7 @@ private[store] final class SnapshotRead private (
     if (keys.isEmpty) Array.empty
     else {
       val ords = keyCols.map(schema.fieldIndex).toArray
-      SnapshotRead.scan(IndexedSeq(this), _ => true)(new SnapshotRead.KeepKeys(ords,
+      SnapshotRead.scan(IndexedSeq(this), _ => true)(SnapshotRead.keep(ords,
         ords.map(schema(_).dataType), keys.map(_.map(CatalystTypeConverters.convertToCatalyst)).toSet))
         .head.flatten
     }
@@ -81,23 +96,31 @@ private[store] object SnapshotRead {
 
   // home → (listing fingerprint, projected columns → plan): the residency
   // layer the index handles use, checked against the home's listing on
-  // every serve; a listing change drops every projection of the home
-  private val reads =
-    new IndexStore.Family[TrieMap[Seq[String], Plan]]("snapshot-reads", 1)(_ => ())
+  // every serve; a listing change drops every projection of the home and
+  // unpersists its rows
+  private val reads = new IndexStore.Family[TrieMap[Seq[String], Plan]]("snapshot-reads", 1)(
+    _.values.foreach(_.release()))
 
   /** The resident reader of `cols` of a local `home`, re-planned from
     * `table` when the home's listing changed since it was planned. A
     * non-local home has no listing to check, so it is planned on every
-    * call: never stale. */
+    * call, never stale, and its rows are not kept. */
   def apply(home: String, cols: Seq[String])(table: => DataFrame): SnapshotRead = {
-    def prepare: Plan = {
+    def prepare(resident: Boolean): Plan = {
       val frame = table.select(cols.head, cols.tail: _*)
-      new Plan(frame.schema, frame.queryExecution.toRdd)
+      val rows = frame.queryExecution.toRdd.map(CopyRow)
+      new Plan(frame.schema, if (!resident) rows
+        else rows.setName(s"snapshot read ${cols.mkString("(", ", ", ")")} of $home")
+          .persist(StorageLevel.MEMORY_ONLY))
     }
-    new SnapshotRead(home, cols, () => table,
-      if (DeltaTable.isLocal(home))
-        reads.serveFixed(home)(TrieMap.empty).getOrElseUpdate(cols, prepare)
-      else prepare)
+    val plan = if (!DeltaTable.isLocal(home)) prepare(resident = false) else {
+      val plans = reads.serveFixed(home)(TrieMap.empty)
+      plans.getOrElse(cols, {
+        val fresh = prepare(resident = true)
+        plans.putIfAbsent(cols, fresh).fold(fresh) { won => fresh.release(); won }
+      })
+    }
+    new SnapshotRead(home, cols, () => table, plan)
   }
 
   /** Field `i` of a looked-up row as a String (null stays null). */
@@ -106,6 +129,15 @@ private[store] object SnapshotRead {
 
   /** Drop every plan of `home`: the next serve plans the home afresh. */
   private[store] def invalidate(home: String): Unit = reads.invalidate(home)
+
+  /** Drop every plan of the homes at or below `prefix`. */
+  private[store] def invalidateUnder(prefix: String): Unit = reads.invalidateUnder(prefix)
+
+  /** A scanned row as a copy of its own (scans reuse their row buffers). A
+    * named class, so planning cleans no closure for it. */
+  private object CopyRow extends (InternalRow => InternalRow) with Serializable {
+    override def apply(r: InternalRow): InternalRow = r.copy()
+  }
 
   /** A [[scan]]'s per-partition work: `run(i, rows)` on a partition of the
     * `i`-th read. */
@@ -157,11 +189,17 @@ private[store] object SnapshotRead {
       case _ => false
     }
 
-  /** The resident part: the physical RDD and its schema, and the
-    * bindings of the Columns evaluated over its rows, one per shape. */
+  /** The resident part: the physical RDD of copied rows and its schema,
+    * and the bindings of the Columns evaluated over its rows, one per
+    * shape. */
   private[store] final class Plan(val schema: StructType, val rdd: RDD[InternalRow]) {
 
     private val bindings = TrieMap.empty[(Boolean, Expression), Binding]
+
+    /** Drop the resident rows, without waiting for their blocks to go. A
+      * task of a call still in flight may cache a partition again; Spark's
+      * context cleaner drops it once the RDD is unreachable. */
+    def release(): Unit = { rdd.unpersist(blocking = false); () }
 
     /** `c` analyzed over this schema as `where(c)` (`filter`) or
       * `select(c)` would analyze it, with runtime-replaceable expressions
@@ -246,12 +284,45 @@ private[store] object SnapshotRead {
     })
   }
 
-  /** The lookup's task: keep the rows whose key columns are in `keys`,
-    * copied (scans reuse their row buffers). */
-  private final class KeepKeys(ords: Array[Int], types: Array[DataType], keys: Set[Seq[Any]])
-      extends Scan[Array[InternalRow]] {
+  /** The lookup's task: keep the rows whose key columns are in `keys`.
+    * The rows are the read's own copies, so they are kept as they come. A
+    * key of one long or string column is tested on the column itself, with
+    * no per-row key tuple and no boxing. */
+  private def keep(ords: Array[Int], types: Array[DataType], keys: Set[Seq[Any]])
+      : Scan[Array[InternalRow]] = {
+    val nulls = keys.contains(Seq(null))
+    if (ords.length == 1 && types(0) == LongType)
+      new KeepLongs(ords(0), keys.iterator.collect { case Seq(l: Long) => l }.toArray.sorted, nulls)
+    else if (ords.length == 1 && types(0).isInstanceOf[StringType]) {
+      val strings = new java.util.HashSet[UTF8String]()
+      keys.foreach { case Seq(u: UTF8String) => strings.add(u); case _ => }
+      new KeepStrings(ords(0), strings, nulls)
+    } else new KeepKeys(ords, types, keys)
+  }
+
+  private abstract class Keep extends Scan[Array[InternalRow]] {
+    protected def kept(r: InternalRow): Boolean
     override def run(read: Int, rows: Iterator[InternalRow]): Array[InternalRow] =
-      rows.filter(r => keys.contains(ords.indices.map(i => r.get(ords(i), types(i)))))
-        .map(_.copy()).toArray
+      rows.filter(kept).toArray
+  }
+
+  /** One long key column, against the sorted keys. */
+  private final class KeepLongs(ord: Int, sorted: Array[Long], nulls: Boolean) extends Keep {
+    override protected def kept(r: InternalRow): Boolean =
+      if (r.isNullAt(ord)) nulls else java.util.Arrays.binarySearch(sorted, r.getLong(ord)) >= 0
+  }
+
+  /** One string key column, against a hash set of the keys. */
+  private final class KeepStrings(ord: Int, keys: java.util.HashSet[UTF8String], nulls: Boolean)
+      extends Keep {
+    override protected def kept(r: InternalRow): Boolean =
+      if (r.isNullAt(ord)) nulls else keys.contains(r.getUTF8String(ord))
+  }
+
+  /** Any other key, as the tuple of its columns' values. */
+  private final class KeepKeys(ords: Array[Int], types: Array[DataType], keys: Set[Seq[Any]])
+      extends Keep {
+    override protected def kept(r: InternalRow): Boolean =
+      keys.contains(ords.indices.map(i => r.get(ords(i), types(i))))
   }
 }

@@ -395,8 +395,30 @@ class CollectionSpec extends AnyFunSuite {
     assert(ChunkKernel.chunk("short", 100, 10).toSeq == Seq("short"))
   }
 
+  /** The RDDs the session holds persisted, by id. */
+  private def persisted: Map[Int, org.apache.spark.rdd.RDD[_]] =
+    spark.sparkContext.getPersistentRDDs.toMap
+
+  /** A pipeline whose serving persists state: a resident HNSW handle (its
+    * probe RDD and graph frame) and prepared reads of its tables. */
+  private val served = Pipeline("pserved", Seq(PipelineField("body", splitter = Some((64, 8)),
+    semanticSearch = Some(HashEmbedder(64)), hnswIndex = Some((8, 32)))))
+
+  /** The RDDs a synced `served` pipeline's first `vectorSearch` persisted. */
+  private def serveOnce(c: Collection): Map[Int, org.apache.spark.rdd.RDD[_]] = {
+    c.syncPipeline(served)
+    c.awaitMaintenance()
+    val before = persisted.keySet
+    c.vectorSearch(served, Seq(VectorSearchField("body", "Test body 3 document")), limit = 3)
+      .collect()
+    val added = persisted -- before
+    assert(added.nonEmpty, "serving persisted nothing")
+    added
+  }
+
   test("pipeline admin: add/disable/enable/remove drive the registry and sync state") {
-    val c = newCollection("c_admin")
+    val wh = Files.createTempDirectory("graft_wh_").toString
+    val c = new Collection(spark, "c_admin", wh)
     c.upsertDocuments(dummyDocs(6))
     val p = Pipeline("padmin", Seq(PipelineField("body", splitter = Some((64, 8)))))
 
@@ -432,6 +454,14 @@ class CollectionSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { c.syncPipeline(evil) }
     intercept[IllegalArgumentException] { c.removePipeline(evil) }
     assert(c.documents.count() == 7)
+
+    // removal releases what the pipeline's serving keeps resident; only the
+    // documents' prepared read, which the collection still serves, stays
+    val added = serveOnce(c)
+    c.removePipeline(served)
+    val left = added.filter { case (id, _) => persisted.contains(id) }.values
+    assert(left.forall(_.name == s"snapshot read (source_uuid, document) of $wh/c_admin/documents"),
+      s"removePipeline left ${left.map(r => s"${r.id} (${r.name})").mkString(", ")} persisted")
   }
 
   test("archive renames the collection home and frees the name") {
@@ -454,5 +484,13 @@ class CollectionSpec extends AnyFunSuite {
     assert(archived2 != archived)
     assert(new java.io.File(s"$wh/$archived2").exists())
     assert(!new java.io.File(s"$wh/c_arch").exists())
+
+    // archiving releases everything the collection's serving keeps resident
+    val live = new Collection(spark, "c_arch", wh)
+    live.upsertDocuments(dummyDocs(12))
+    val added = serveOnce(live)
+    live.archive()
+    val left = added.keySet.intersect(persisted.keySet)
+    assert(left.isEmpty, s"archive left ${left.map(added(_).name).mkString(", ")} persisted")
   }
 }

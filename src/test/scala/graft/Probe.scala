@@ -656,7 +656,10 @@ object Probe {
       // a warm call of each serve kind over a synced GenData collection
       // (serve_read's pipeline and model): Spark jobs, Catalyst rule runs
       // and indylambda closure cleans inside the call, and the calling
-      // thread's CPU per call (median)
+      // thread's CPU per call (median); the executor CPU of the call's
+      // tasks and the bytes it read through Hadoop's local FileSystem
+      // (mean per call); then the storage memory the prepared reads'
+      // resident rows take
       val docs = rest.headOption.map(_.toLong).getOrElse(1000L)
       val calls = rest.drop(1).headOption.map(_.toInt).getOrElse(20)
       val spark = session(4)
@@ -698,21 +701,32 @@ object Probe {
       def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
       for ((kind, f) <- kinds) {
         val jobs = TestSpark.jobsOf(spark)(f(3))
-        val runs = (3 until calls + 3).map { i =>
-          var cpu = 0L
-          var cleans = 0L
-          val rules = TestSpark.ruleRunsOf {
-            cleans = TestSpark.closureCleansOf {
-              val c0 = threads.getCurrentThreadCpuTime
-              f(i)
-              cpu = threads.getCurrentThreadCpuTime - c0
+        var runs = IndexedSeq.empty[(Double, Double, Double)]
+        var taskCpu = 0.0
+        val fsBytes = TestSpark.localBytesReadOf {
+          taskCpu = TestSpark.jobsAndTaskCpuOf(spark) {
+            runs = (3 until calls + 3).map { i =>
+              var cpu = 0L
+              var cleans = 0L
+              val rules = TestSpark.ruleRunsOf {
+                cleans = TestSpark.closureCleansOf {
+                  val c0 = threads.getCurrentThreadCpuTime
+                  f(i)
+                  cpu = threads.getCurrentThreadCpuTime - c0
+                }
+              }
+              (rules.toDouble, cleans.toDouble, cpu / 1e6)
             }
-          }
-          (rules.toDouble, cleans.toDouble, cpu / 1e6)
+          }._2
         }
         println(f"SERVE $kind%-16s jobs $jobs%2d rules ${med(runs.map(_._1))}%6.0f " +
-          f"cleans ${med(runs.map(_._2))}%3.0f thread_cpu ${med(runs.map(_._3))}%8.2f ms")
+          f"cleans ${med(runs.map(_._2))}%3.0f thread_cpu ${med(runs.map(_._3))}%8.2f ms " +
+          f"task_cpu ${taskCpu / calls}%8.2f ms fs_read ${fsBytes / calls}%9d B")
       }
+      val resident = spark.sparkContext.getRDDStorageInfo.filter(_.name.startsWith("snapshot read "))
+      resident.foreach(r => println(f"RESIDENT ${r.memSize}%10d B ${r.numCachedPartitions}%2d/" +
+        f"${r.numPartitions}%-2d partitions  ${r.name}"))
+      println(f"RESIDENT ${resident.map(_.memSize).sum}%10d B in ${resident.length} prepared reads")
       spark.stop()
 
     case "serve-floor" :: rest =>

@@ -20,28 +20,51 @@ object TestSpark {
   /** Spark jobs started while `body` runs on this thread, counted by job
     * group with a listener (the listener bus is asynchronous, so the
     * count is read once it stops changing). */
-  def jobsOf(spark: SparkSession)(body: => Unit): Long = {
+  def jobsOf(spark: SparkSession)(body: => Unit): Long = jobsAndTaskCpuOf(spark)(body)._1
+
+  /** [[jobsOf]], and the executor CPU (ms) of the tasks those jobs ran. */
+  def jobsAndTaskCpuOf(spark: SparkSession)(body: => Unit): (Long, Double) = {
+    import org.apache.spark.scheduler._
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          j.stageIds.foreach(stages.add)
           jobs.incrementAndGet(); ()
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null) {
+          cpuNs.addAndGet(t.taskMetrics.executorCpuTime); ()
         }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(group, group)
       try body finally spark.sparkContext.clearJobGroup()
-      var last = -1L
+      var last = (-1L, -1L)
       var stable = 0
       val deadline = System.currentTimeMillis() + 10000
       while (stable < 3 && System.currentTimeMillis() < deadline) {
         Thread.sleep(100)
-        if (jobs.get() == last) stable += 1 else { stable = 0; last = jobs.get() }
+        val now = (jobs.get(), cpuNs.get())
+        if (now == last) stable += 1 else { stable = 0; last = now }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
+    (jobs.get(), cpuNs.get() / 1e6)
+  }
+
+  /** Bytes every thread of this JVM read through Hadoop's local
+    * `FileSystem` (scheme `file`) while `body` ran: the files a call
+    * opened, which Spark's input metrics cannot tell from cached blocks. */
+  def localBytesReadOf(body: => Unit): Long = {
+    def now = Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file"))
+      .flatMap(s => Option(s.getLong("bytesRead"))).fold(0L)(_.longValue)
+    val before = now
+    body
+    now - before
   }
 
   /** Catalyst query executions that finished while `body` ran, counted
