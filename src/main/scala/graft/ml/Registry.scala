@@ -786,7 +786,8 @@ private[ml] object RowChain {
       predict: DataFrame => DataFrame): RowChain = {
     val schema = StructType(meta.fitted.map(f =>
       StructField(f.name, if (f.categorical) StringType else DoubleType, nullable = true)))
-    val plan = ReplaceExpressions(predict(ColumnBridge.localFrame(spark, schema, Nil))
+    val plan = ReplaceExpressions(predict(
+      ColumnBridge.resultFrame(spark, new ColumnBridge.ResultShape(schema), Nil))
       .select("prediction").queryExecution.analyzed)
     def steps(p: LogicalPlan): List[Project] = p match {
       case pr @ Project(list, child) if !list.exists(_.exists(e =>

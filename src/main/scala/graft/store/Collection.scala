@@ -1721,13 +1721,12 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
   }
 
   /** ANN chunk search over the per-field HNSW forest: (document_id,
-    * chunk_index, score), best first, as a local frame — see [[hnswHits]]. */
+    * chunk_index, score), best first — see [[hnswHits]]. The result frame
+    * is [[vectorSearch]]'s kind: its `collect()` plans nothing, a frame
+    * derived from it plans as before. */
   def hnswSearch(p: Pipeline, field: String, query: Array[Float], k: Int,
       ef: Int = 0): DataFrame =
-    ColumnBridge.localFrame(spark, StructType(Seq(StructField("document_id", StringType),
-        StructField("chunk_index", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      hnswHits(p, field, query, k, ef)
+    ColumnBridge.resultFrame(spark, Collection.chunkHitShape, hnswHits(p, field, query, k, ef)
         .map(h => InternalRow(UTF8String.fromString(h.docId), h.chunkIndex, h.score)))
 
   /** Graph top-k, then the surrogate hits resolve back to (document_id,
@@ -1864,8 +1863,15 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * storage memory is read from the planned files again. A
     * metadata filter is the same compiled filter as `where(filter)`,
     * analyzed once per filter shape on the documents read's plan and
-    * evaluated on the fetched documents rows on the driver. The result is
-    * a local relation already marked analyzed.
+    * evaluated on the fetched documents rows on the driver.
+    *
+    * The result is a result frame ([[ColumnBridge.resultFrame]]): its
+    * plans are fixed when the call builds it and its row deserializer is
+    * bound once for every call of the kind, so the caller's `collect()`
+    * runs no optimizer, planner or Analyzer rule. A frame derived from it
+    * (`where`, `join`, `count`) plans its own query as before. Under
+    * rerank the scorer's query still runs in the call, and the frame's
+    * schema is the call's own, so its first collect binds.
     *
     * Spark jobs per call over one HNSW field: 4 unfiltered (graph probe,
     * hid → chunk-key resolve, documents payload, chunk text); with a
@@ -2000,11 +2006,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     }
     import org.apache.spark.sql.Row
     def utf(s: String) = UTF8String.fromString(s)
-    val schema = StructType(Seq("document_id", "document", "chunk")
-      .map(StructField(_, StringType)) :+ StructField("score", DoubleType))
     rerank match {
       case None =>
-        ColumnBridge.localFrame(spark, schema,
+        ColumnBridge.resultFrame(spark, Collection.vectorSearchShape,
           joined.map { case (h, d, c) => InternalRow(utf(h.docId), utf(d), utf(c), h.score) })
       case Some(_) =>
         // cross-scorer seam for pgml.rank (api.rs:612-625) — default is the
@@ -2015,7 +2019,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
         // on the driver (no job). chunk_index is the final tie-break:
         // overlapping chunks of one document can share a score.
         val queryText = fieldQueries.map(_.query).mkString(" ")
-        val scored = ColumnBridge.localFrame(spark, schema.add("chunk_index", IntegerType),
+        val scored = ColumnBridge.resultFrame(spark, Collection.rerankInputShape,
             joined.map { case (h, d, c) =>
               InternalRow(utf(h.docId), utf(d), utf(c), h.score, h.chunkIndex) })
           .withColumn("rerank_score", reranker.scoreCol(queryText, col("chunk")))
@@ -2025,10 +2029,13 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
           .sorted(Collection.rerankOrder)
           .take(limit)
           .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(5)))
-        val out = schema.add("rerank_score", rsType)
+        // the scorer's column picks the rerank_score type, so this shape is
+        // the call's own
+        val out = Collection.vectorSearchShape.schema.add("rerank_score", rsType)
         val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(out)
-        ColumnBridge.localFrame(spark, out, ranked.map(toCatalyst(_).asInstanceOf[InternalRow]))
+        ColumnBridge.resultFrame(spark, new ColumnBridge.ResultShape(out),
+          ranked.map(toCatalyst(_).asInstanceOf[InternalRow]))
     }
   }
 
@@ -2071,6 +2078,10 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     * Each prepared read adds its planning, and the decode of its table's
     * files, only on the first call after a write changed its table; warm
     * calls scan the read's resident rows.
+    *
+    * The returned frame is [[vectorSearch]]'s kind of result frame: the
+    * caller's `collect()` plans nothing and binds no deserializer, while a
+    * frame derived from it plans as before.
     */
   def search(
       p: Pipeline,
@@ -2110,9 +2121,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     val filter = filterJson.map(f => docs.value(spark,
       FilterCompiler.compile(f, FilterCompiler.jsonStringResolver(col("document")))))
     val top = HybridSearch.topK((semArms ++ ftsArms).toIndexedSeq, docs, filter, limit, m0)
-    ColumnBridge.localFrame(spark,
-      StructType(Seq(StructField("document_id", StringType), StructField("document", StringType),
-        StructField("score", DoubleType, nullable = false))),
+    ColumnBridge.resultFrame(spark, Collection.searchShape,
       top.map { case (d, doc, s) => InternalRow(UTF8String.fromString(d), UTF8String.fromString(doc), s) })
   }
 
@@ -2400,6 +2409,25 @@ object Collection {
       if (d != 0) d else Integer.compare(a.getInt(4), b.getInt(4))
     }
   }
+
+  // The result frames of each serve kind, one shape per kind: a shape
+  // binds its Row deserializer on its first collect and keeps that copy
+  // for every later frame ([[ColumnBridge.ResultShape]]).
+  /** [[Collection.hnswSearch]]'s chunk hits. */
+  private[store] val chunkHitShape = new ColumnBridge.ResultShape(StructType(Seq(
+    StructField("document_id", StringType), StructField("chunk_index", IntegerType, nullable = false),
+    StructField("score", DoubleType, nullable = false))))
+  /** [[Collection.vectorSearch]]'s chunks, without rerank. */
+  private[store] val vectorSearchShape = new ColumnBridge.ResultShape(StructType(
+    Seq("document_id", "document", "chunk").map(StructField(_, StringType)) :+
+      StructField("score", DoubleType)))
+  /** The rows [[Collection.vectorSearch]]'s reranker scores. */
+  private[store] val rerankInputShape = new ColumnBridge.ResultShape(
+    vectorSearchShape.schema.add("chunk_index", IntegerType))
+  /** Hybrid [[Collection.search]]'s documents. */
+  private[store] val searchShape = new ColumnBridge.ResultShape(StructType(Seq(
+    StructField("document_id", StringType), StructField("document", StringType),
+    StructField("score", DoubleType, nullable = false))))
 
   private def utf8Compare(a: String, b: String): Int =
     org.apache.spark.unsafe.types.UTF8String.fromString(a)

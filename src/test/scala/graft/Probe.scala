@@ -658,8 +658,10 @@ object Probe {
       // and indylambda closure cleans inside the call, and the calling
       // thread's CPU per call (median); the executor CPU of the call's
       // tasks and the bytes it read through Hadoop's local FileSystem
-      // (mean per call); then the storage memory the prepared reads'
-      // resident rows take
+      // (mean per call); then, as a separate layer, the thread CPU and
+      // rule runs of the caller's collect() of the returned frame
+      // (median); then the storage memory the prepared reads' resident
+      // rows take
       val docs = rest.headOption.map(_.toLong).getOrElse(1000L)
       val calls = rest.drop(1).headOption.map(_.toInt).getOrElse(20)
       val spark = session(4)
@@ -681,47 +683,58 @@ object Probe {
       val queries = corpus.select("text").as[String](org.apache.spark.sql.Encoders.STRING)
         .take(calls + 3).map(_.split(" ").take(4).mkString(" "))
       def lang(i: Int) = Some(s"""{"lang": {"$$eq": "${Seq("en", "de", "fr")(i % 3)}"}}""")
-      val kinds: Seq[(String, Int => Unit)] = Seq(
-        "vector_search" -> { (i: Int) =>
-          coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i)))); () },
-        "filtered" -> { (i: Int) =>
-          coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i))), filterJson = lang(i)); () },
-        "hybrid" -> { (i: Int) =>
-          coll.search(p, Seq(VectorSearchField("text", queries(i))),
-            Seq(FullTextField("text", queries(i)))); () },
-        "hybrid_filtered" -> { (i: Int) =>
-          coll.search(p, Seq(VectorSearchField("text", queries(i))),
-            Seq(FullTextField("text", queries(i))), filterJson = lang(i)); () },
-        "predict_row" -> { (i: Int) =>
-          trainer.registry.predictRow("chars", Map("tc" -> i.toDouble, "uniq" -> (i / 2).toDouble))
-          () })
-      kinds.foreach { case (_, f) => (0 until 3).foreach(f) }
+      // each kind's call; a frame it returns is collected apart
+      val kinds: Seq[(String, Int => Any)] = Seq(
+        "vector_search" -> (i => coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i))))),
+        "filtered" -> (i =>
+          coll.vectorSearch(p, Seq(VectorSearchField("text", queries(i))), filterJson = lang(i))),
+        "hybrid" -> (i => coll.search(p, Seq(VectorSearchField("text", queries(i))),
+          Seq(FullTextField("text", queries(i))))),
+        "hybrid_filtered" -> (i => coll.search(p, Seq(VectorSearchField("text", queries(i))),
+          Seq(FullTextField("text", queries(i))), filterJson = lang(i))),
+        "hnsw_search" -> (i => coll.hnswSearch(p, "text",
+          graft.functions.HashEmbedder(64).embedOne(queries(i)), 10)),
+        "predict_row" -> (i => trainer.registry.predictRow("chars",
+          Map("tc" -> i.toDouble, "uniq" -> (i / 2).toDouble))))
+      def collected(frame: Any): Unit = frame match {
+        case df: org.apache.spark.sql.DataFrame => df.collect(); ()
+        case _ => ()
+      }
+      kinds.foreach { case (_, f) => (0 until 3).foreach(i => collected(f(i))) }
       coll.awaitMaintenance()
       val threads = java.lang.management.ManagementFactory.getThreadMXBean
       def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
       for ((kind, f) <- kinds) {
         val jobs = TestSpark.jobsOf(spark)(f(3))
-        var runs = IndexedSeq.empty[(Double, Double, Double)]
+        var runs = IndexedSeq.empty[(Double, Double, Double, Double, Double)]
         var taskCpu = 0.0
         val fsBytes = TestSpark.localBytesReadOf {
           taskCpu = TestSpark.jobsAndTaskCpuOf(spark) {
             runs = (3 until calls + 3).map { i =>
               var cpu = 0L
               var cleans = 0L
+              var frame: Any = null
               val rules = TestSpark.ruleRunsOf {
                 cleans = TestSpark.closureCleansOf {
                   val c0 = threads.getCurrentThreadCpuTime
-                  f(i)
+                  frame = f(i)
                   cpu = threads.getCurrentThreadCpuTime - c0
                 }
               }
-              (rules.toDouble, cleans.toDouble, cpu / 1e6)
+              var collectCpu = 0L
+              val collectRules = TestSpark.ruleRunsOf {
+                val c0 = threads.getCurrentThreadCpuTime
+                collected(frame)
+                collectCpu = threads.getCurrentThreadCpuTime - c0
+              }
+              (rules.toDouble, cleans.toDouble, cpu / 1e6, collectRules.toDouble, collectCpu / 1e6)
             }
           }._2
         }
         println(f"SERVE $kind%-16s jobs $jobs%2d rules ${med(runs.map(_._1))}%6.0f " +
           f"cleans ${med(runs.map(_._2))}%3.0f thread_cpu ${med(runs.map(_._3))}%8.2f ms " +
-          f"task_cpu ${taskCpu / calls}%8.2f ms fs_read ${fsBytes / calls}%9d B")
+          f"task_cpu ${taskCpu / calls}%8.2f ms fs_read ${fsBytes / calls}%9d B | collect " +
+          f"rules ${med(runs.map(_._4))}%4.0f thread_cpu ${med(runs.map(_._5))}%6.2f ms")
       }
       val resident = spark.sparkContext.getRDDStorageInfo.filter(_.name.startsWith("snapshot read "))
       resident.foreach(r => println(f"RESIDENT ${r.memSize}%10d B ${r.numCachedPartitions}%2d/" +

@@ -68,30 +68,42 @@ object TestSpark {
   }
 
   /** Catalyst query executions that finished while `body` ran, counted
-    * with a `QueryExecutionListener`. A marker query runs after `body`; the
-    * listener bus delivers in order, so once the marker is seen every
-    * execution of `body` has been counted. Counts the whole session: run
-    * nothing else concurrently. */
-  def queriesOf(spark: SparkSession)(body: => Unit): Long = {
+    * with a `QueryExecutionListener` ([[actionsOf]]). Counts the whole
+    * session: run nothing else concurrently. */
+  def queriesOf(spark: SparkSession)(body: => Unit): Long = actionsOf(spark)(body).size.toLong
+
+  /** The action of each Catalyst query execution that finished while
+    * `body` ran, in the order the listener saw them: its function name
+    * (`collect`, `count`, ...), with " failed" added for a failure. A
+    * marker query runs before `body` and one after; the listener bus
+    * delivers in order, so what it delivers between the two markers is
+    * exactly the executions of `body` (an execution that ended before, its
+    * event still queued, comes before the first marker). Sees the whole
+    * session: run nothing else concurrently. */
+  def actionsOf(spark: SparkSession)(body: => Unit): Seq[String] = {
     val marker = s"queries_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val seen = new java.util.concurrent.atomic.AtomicLong(0)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val done = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def count(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
-        else { seen.incrementAndGet(); () }
+      // touched only on the listener bus's thread
+      private var started = false
+      private def report(action: String, qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) {
+          if (started) done.countDown() else started = true
+        } else if (started) { seen.add(action); () }
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = count(qe)
+          ns: Long): Unit = report(f, qe)
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = count(qe)
+          e: Exception): Unit = report(s"$f failed", qe)
     }
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).toDF(marker).collect()
       body
       spark.range(1).toDF(marker).collect()
       assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS), "marker query never reported")
     } finally spark.listenerManager.unregister(listener)
-    seen.get()
+    seen.toArray(Array.empty[String]).toSeq
   }
 
   /** Analyzer and optimizer rule executions, process-wide, while `body`

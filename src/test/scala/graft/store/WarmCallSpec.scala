@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,8 @@ import graft.ml.Trainer
 /** A warm serving call does only the work its own inputs need: no
   * Analyzer or optimizer rule runs and no closure is cleaned inside
   * `vectorSearch` (plain and filtered), hybrid `search` (plain and
-  * filtered) or `predictRow`. The bindings behind that — a prepared
+  * filtered), `hnswSearch` or `predictRow`, and the caller's `collect()`
+  * of the frame a call returns plans nothing. The bindings behind that — a prepared
   * read's Columns analyzed once per shape — give what a fresh analysis
   * gives for any literals, die with their read's plan, and share no state
   * between concurrent calls. */
@@ -61,9 +62,10 @@ class WarmCallSpec extends AnyFunSuite {
   private def predictRow(tc: Double): Double =
     registry.predictRow("warm", Map("tc" -> tc, "uniq" -> 2.0))
 
-  /** Each call kind with the literals of call `i`: every call of a kind has
-    * one shape (two query terms, one filter value), other values. */
-  private val kinds: Seq[(String, Int => Any)] = Seq(
+  /** Each call kind that returns a frame, with the literals of call `i`:
+    * every call of a kind has one shape (two query terms, one filter
+    * value), other values. */
+  private val frameKinds: Seq[(String, Int => DataFrame)] = Seq(
     "vectorSearch" -> (i => coll.vectorSearch(pipeline,
       Seq(VectorSearchField("text", s"${words(i)} ${words(i + 1)}")), limit = 5)),
     "filtered vectorSearch" -> (i => coll.vectorSearch(pipeline,
@@ -76,7 +78,10 @@ class WarmCallSpec extends AnyFunSuite {
       semantic = Seq(VectorSearchField("text", s"${words(i)} model")),
       fullText = Seq(FullTextField("text", s"${words(i)} model")), limit = 5,
       filterJson = Some(lang(langs(i % 3))))),
-    "predictRow" -> (i => predictRow(i.toDouble)))
+    "hnswSearch" -> (i => coll.hnswSearch(pipeline, "text",
+      HashEmbedder(32).embedOne(s"${words(i)} ${words(i + 3)}"), 5)))
+  private val kinds: Seq[(String, Int => Any)] =
+    frameKinds :+ ("predictRow" -> ((i: Int) => predictRow(i.toDouble)))
 
   test("a warm serve call runs no analyzer or optimizer rule and cleans no closure") {
     kinds.foreach { case (_, call) => call(0); call(1) }
@@ -90,6 +95,23 @@ class WarmCallSpec extends AnyFunSuite {
     }
     assert(counts.forall(_._2 == 0), s"Catalyst rules ran: $counts")
     assert(counts.forall(_._3 == 0), s"closures were cleaned: $counts")
+  }
+
+  test("the caller's collect of a warm call's frame runs no planning and cleans no closure") {
+    frameKinds.foreach { case (_, call) => call(0).collect(); call(1).collect() }
+    coll.awaitMaintenance()
+    // (kind, rule runs, closure cleans) of collect() alone, the frame built
+    // before; rule runs are the least of three, as above
+    val counts = frameKinds.map { case (what, call) =>
+      (what, (2 to 4).map { i => val frame = call(i); TestSpark.ruleRunsOf(frame.collect()) }.min,
+        { val frame = call(5); TestSpark.closureCleansOf(frame.collect()) })
+    }
+    // optimizing and planning the frame's relation and resolving its row
+    // deserializer ran ~390 rules per collect; what is left is Spark's code
+    // generator canonicalizing the scan's unsafe projection (one run per
+    // column) and the deserializer's safe projection (one run)
+    assert(counts.forall(_._2 <= 39), s"collect planned: $counts")
+    assert(counts.forall(_._3 == 0), s"collect cleaned closures: $counts")
   }
 
   test("a same-shape filter bind gives a fresh analysis's verdict for other values") {
