@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object AnnServing {
 
   /** Build/serve knobs — per-family defaults equal the distributed entry
-    * points' defaults, so `serveLocal(family, src, …)` with default params
-    * serves the SAME home a default distributed query built. */
+    * points' defaults, so `localProber(family, src, …)` with default
+    * params serves the SAME home a default distributed query built. */
   final case class LocalParams(
       metric: String = IvfIndex.MetricCosine,
       // hnsw build (HnswIndex.serveOrBuild defaults) + probe width
@@ -34,38 +34,15 @@ object AnnServing {
 
   val Families: Seq[String] = Seq("hnsw", "ivf", "ivfpq")
 
-  /** In-process top-k over `sourcePath`'s vectors: (id, score) best-first,
-    * ties by id — zero Spark jobs once the family's local cache is warm. */
-  def serveLocal(
-      spark: SparkSession, family: String, sourcePath: String,
-      df: => DataFrame, idCol: String, vecCol: String,
-      query: Array[Float], k: Int,
-      params: LocalParams = LocalParams()): Seq[(Long, Double)] = family match {
-    case "hnsw" =>
-      HnswIndex.serveOrBuild(spark, sourcePath, df, vecCol, idCol,
-          params.hnswM, params.efConstruction, params.numPartitions, params.metric)
-        .searchLocal(query, k, params.ef)
-    case "ivf" =>
-      IvfIndex.serveOrBuild(spark, sourcePath, df, vecCol, params.nlist,
-          params.metric, params.nassign)
-        .searchLocal(query, k, params.nprobe, idCol)
-    case "ivfpq" =>
-      IvfPq.searchLocal(spark, sourcePath, df, idCol, vecCol, query, k,
-        params.nprobe, params.rerank, params.pqNlist, params.m, params.kCent,
-        params.nassign, params.metric, params.byResidual, params.variant)
-    case other => throw new IllegalArgumentException(
-      s"unknown ANN family '$other' — serveLocal serves ${Families.mkString("/")}")
-  }
-
-  /** Resolve-once probe handle: the production serving shape. Each
-    * [[serveLocal]] call re-resolves the source's mtime-hashed home (an
-    * `exists` + `listStatus` per call — measured ~0.35 ms on a local FS,
-    * a third of the whole HNSW probe), which a server holding thousands
-    * of requests per handle should pay ONCE. The returned closure probes
-    * the home resolved at acquisition: acquire a prober per request
-    * batch; a source rewritten after acquisition is picked up on the
-    * next acquisition (or immediately by [[serveLocal]]'s per-call
-    * resolution — the one-shot entry keeps that contract). */
+  /** In-process top-k over `sourcePath`'s vectors, (id, score) best-first,
+    * ties by id — zero Spark jobs once the family's local tier is warm.
+    * Acquiring the handle resolves the source's mtime-hashed home (an
+    * `exists` + `listStatus` — measured ~0.35 ms on a local FS, a third of
+    * the whole HNSW probe), which a server holding thousands of requests
+    * per handle should pay ONCE. The returned closure probes the home
+    * resolved at acquisition: acquire a prober per request batch; a
+    * source rewritten after acquisition is picked up on the next
+    * acquisition. A one-shot call is `localProber(...)(query, k)`. */
   def localProber(
       spark: SparkSession, family: String, sourcePath: String,
       df: => DataFrame, idCol: String, vecCol: String,

@@ -503,55 +503,43 @@ class HnswIndex private[operators] (
   // partition — and an evicted block recomputes from parquet lineage, so
   // the fallback story on a busy cluster is Spark's own. Built at most
   // once per index instance; released with the instance (family release /
-  // invalidate), so a rewritten source never serves stale blobs.
+  // invalidation), so a rewritten source never serves stale blobs.
   // Residency tradeoff, stated plainly: while BOTH the plan paths
   // (search/searchBatch over the cached DataFrame) and the prepared paths
   // are in use, the blobs are resident twice (columnar cache + object
   // cache) — GB-class at 5M nodes. A prepared-only deployment can
   // `graphs.unpersist()` after the first probe; at forest sizes where
   // this matters the driver-local tier is the designed serving shape.
-  @transient private lazy val probeRddRef =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.rdd.RDD[(Int, Int, Array[Byte])]](null)
+  @transient private[graft] val prepared =
+    new IndexStore.Slot[org.apache.spark.rdd.RDD[(Int, Int, Array[Byte])]]("hnsw")(
+      IndexStore.unpersist)
 
-  private def probeRdd: org.apache.spark.rdd.RDD[(Int, Int, Array[Byte])] = {
-    val cur = probeRddRef.get()
-    if (cur != null) cur
-    else {
-      val spark = graphs.sparkSession
-      import spark.implicits._
-      // derive from the RAW part frame when one exists (loaded indexes):
-      // the prepared tier then never materializes the plan paths'
-      // columnar cache — at a wide 5M forest that cache is a second
-      // ~21 GB resident copy built from GB-class batch buffers. The
-      // repartition+sort re-establishes the grouping invariant the
-      // object rows need; built (mem:) indexes use their already-grouped
-      // cached frame directly.
-      // pid-exact partition count: repartition(col) alone yields
-      // spark.sql.shuffle.partitions partitions (mostly EMPTY at small
-      // forests) and every probe job then schedules that many tasks —
-      // measured 1.6× on per-request latency at sf0.1 (32 tasks for an
-      // 8-graph forest). One partition per pid keeps a probe wave at
-      // exactly forest-size tasks.
-      val src = collectSrc
-        .map(_.repartition(math.max(1, numPids), col("pid"))
-          .sortWithinPartitions(col("pid"), col("part")))
-        .getOrElse(graphs)
-      val built = src.select(col("pid"), col("part"), col("graph"))
-        .as[(Int, Int, Array[Byte])].rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (probeRddRef.compareAndSet(null, built)) {
-        built.count() // materialize: every later probe is cache-resident
-        built
-      } else { built.unpersist(false); probeRddRef.get() }
-    }
+  private def probeRdd: org.apache.spark.rdd.RDD[(Int, Int, Array[Byte])] = prepared {
+    val spark = graphs.sparkSession
+    import spark.implicits._
+    // derive from the RAW part frame when one exists (loaded indexes):
+    // the prepared tier then never materializes the plan paths'
+    // columnar cache — at a wide 5M forest that cache is a second
+    // ~21 GB resident copy built from GB-class batch buffers. The
+    // repartition+sort re-establishes the grouping invariant the
+    // object rows need; built (mem:) indexes use their already-grouped
+    // cached frame directly.
+    // pid-exact partition count: repartition(col) alone yields
+    // spark.sql.shuffle.partitions partitions (mostly EMPTY at small
+    // forests) and every probe job then schedules that many tasks —
+    // measured 1.6× on per-request latency at sf0.1 (32 tasks for an
+    // 8-graph forest). One partition per pid keeps a probe wave at
+    // exactly forest-size tasks.
+    val src = collectSrc
+      .map(_.repartition(math.max(1, numPids), col("pid"))
+        .sortWithinPartitions(col("pid"), col("part")))
+      .getOrElse(graphs)
+    val built = src.select(col("pid"), col("part"), col("graph"))
+      .as[(Int, Int, Array[Byte])].rdd
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    built.count() // materialize: every later probe is cache-resident
+    built
   }
-
-  /** Drop the prepared probe RDD (source rewrite / family eviction). */
-  private[graft] def releaseProbe(): Unit =
-    Option(probeRddRef.getAndSet(null)).foreach { r =>
-      try { r.unpersist(false); () } catch { case _: Throwable => () }
-    }
 
   /** Prepared single-query distributed probe: one RDD job over the
     * persisted blob rows — per-partition graph search via the executor
@@ -613,90 +601,67 @@ class HnswIndex private[operators] (
     * forest fits one machine. The distributed [[search]]/[[searchBatch]]
     * paths remain the scale tier: same graphs, same results, executor
     * parallelism, no driver residency requirement. Results are identical
-    * to [[search]] (same per-graph search, same merge order). */
-  @transient private val localGraphsRef =
-    new java.util.concurrent.atomic.AtomicReference[Array[HnswGraph]](null)
+    * to [[search]] (same per-graph search, same merge order). Released by
+    * residency eviction or with the handle: the graphs leave the shared
+    * deserialized-graph cache too, and the next [[searchLocal]] collects
+    * them again — bit-identical results, one job. */
+  @transient private[graft] val local = new IndexStore.Slot[Array[HnswGraph]]("hnsw",
+    Some(_.iterator.map(_.residentBytes).sum))(_ => HnswIndex.dropGraphs(_ == cacheKey))
 
-  private def localGraphs: Array[HnswGraph] = {
-    val cur = localGraphsRef.get()
-    if (cur != null) { LocalResidency.touch("hnsw", cacheKey); cur }
-    else {
-      val spark = graphs.sparkSession
-      import spark.implicits._
-      // collect from the UN-grouped source when one exists: driver-side
-      // reassembly needs no partition co-location, so the local tier
-      // skips the blobFrame grouping exchange (and at a loaded 5M-node
-      // forest, a full columnar-cache materialization) entirely
-      val blobs = collectSrc.getOrElse(graphs)
-        .select(col("pid"), col("part"), col("graph"))
-        .as[(Int, Int, Array[Byte])].collect()
-      // deserialize the partition graphs CONCURRENTLY: the pids are
-      // independent and graphCache is a TrieMap, while one thread walking
-      // numPartitions object streams is minutes of cold-start at 5M nodes
-      // (measured ~8 min single-threaded at sf100, ~1 min across 8 cores).
-      // Each pid's part BYTES drop as soon as its graph exists — holding
-      // the full blob set AND the full graph set doubles residency for the
-      // whole cold-start (at 1024-d × 5M that double is ~21 GB).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val byPid: Seq[(Int, Seq[Int])] = blobs.indices
-        .groupBy(i => blobs(i)._1).toSeq
-        .map { case (pid, is) => pid -> is.sortBy(i => blobs(i)._2).toSeq }
-      val built = Await.result(
-        Future.sequence(byPid.map { case (pid, is) =>
-          Future {
-            val parts = new Array[Array[Byte]](is.length)
-            var j = 0
-            while (j < is.length) {
-              val (_, part, bytes) = blobs(is(j))
-              require(part == j, s"HNSW home $cacheKey pid $pid: blob part " +
-                s"$part found at index $j — part set incomplete or reordered")
-              parts(j) = bytes
-              blobs(is(j)) = null
-              j += 1
-            }
-            HnswIndex.graphForParts(cacheKey, pid, parts)
+  private def localGraphs: Array[HnswGraph] = local {
+    val spark = graphs.sparkSession
+    import spark.implicits._
+    // collect from the UN-grouped source when one exists: driver-side
+    // reassembly needs no partition co-location, so the local tier
+    // skips the blobFrame grouping exchange (and at a loaded 5M-node
+    // forest, a full columnar-cache materialization) entirely
+    val blobs = collectSrc.getOrElse(graphs)
+      .select(col("pid"), col("part"), col("graph"))
+      .as[(Int, Int, Array[Byte])].collect()
+    // deserialize the partition graphs CONCURRENTLY: the pids are
+    // independent and graphCache is a TrieMap, while one thread walking
+    // numPartitions object streams is minutes of cold-start at 5M nodes
+    // (measured ~8 min single-threaded at sf100, ~1 min across 8 cores).
+    // Each pid's part BYTES drop as soon as its graph exists — holding
+    // the full blob set AND the full graph set doubles residency for the
+    // whole cold-start (at 1024-d × 5M that double is ~21 GB).
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val byPid: Seq[(Int, Seq[Int])] = blobs.indices
+      .groupBy(i => blobs(i)._1).toSeq
+      .map { case (pid, is) => pid -> is.sortBy(i => blobs(i)._2).toSeq }
+    Await.result(
+      Future.sequence(byPid.map { case (pid, is) =>
+        Future {
+          val parts = new Array[Array[Byte]](is.length)
+          var j = 0
+          while (j < is.length) {
+            val (_, part, bytes) = blobs(is(j))
+            require(part == j, s"HNSW home $cacheKey pid $pid: blob part " +
+              s"$part found at index $j — part set incomplete or reordered")
+            parts(j) = bytes
+            blobs(is(j)) = null
+            j += 1
           }
-        }), Duration.Inf).toArray
-      if (localGraphsRef.compareAndSet(null, built)) {
-        LocalResidency.register("hnsw", cacheKey,
-          built.iterator.map(_.residentBytes).sum)(() => releaseLocal())
-        built
-      } else {
-        // another thread won the install; serve the witness — and if a
-        // concurrent invalidation already nulled it again, serve OUR
-        // build (an unregistered snapshot: correct results, GC'd with
-        // this call) rather than NPE-ing on a re-read (ADVICE r17)
-        val witness = localGraphsRef.get()
-        if (witness != null) witness else built
-      }
-    }
-  }
-
-  /** Drop the driver-local tier (residency eviction / family
-    * invalidation): the instance reference AND the shared deserialized-
-    * graph cache entries for this home. The next [[searchLocal]]
-    * re-collects and re-registers — bit-identical results, one job. */
-  private[graft] def releaseLocal(): Unit = {
-    localGraphsRef.set(null)
-    HnswIndex.dropGraphCache(cacheKey)
-    LocalResidency.release("hnsw", cacheKey)
+          HnswIndex.graphForParts(cacheKey, pid, parts)
+        }
+      }), Duration.Inf).toArray
   }
 
   /** In-process top-k (see [[localGraphs]]): returns (id, cosine) pairs
     * best-first, ties by id — no DataFrame, no job.
     *
     * The forest's graphs probe CONCURRENTLY when
-    * `graft.hnsw.localParallelism` > 1 (default: available cores): each
+    * [[HnswIndex.localParallelism]] > 1 (default: available cores): each
     * graph is searched by one thread and the per-graph results merge
     * under the same (score desc, id asc) order, so results are
     * bit-identical to the sequential walk (HnswSpec pins it) — the
     * forest layout's in-process probe then costs ~one graph's search,
-    * not numPartitions of them, on a multi-core serving box. Set the
-    * knob to 1 for a single-threaded probe (the apples-to-apples shape
-    * against the reference's one-graph in-process number). */
+    * not numPartitions of them, on a multi-core serving box. At 1 the
+    * probe is single-threaded (the apples-to-apples shape against the
+    * reference's one-graph in-process number). */
   def searchLocal(query: Array[Float], k: Int, ef: Int = 0): Seq[(Long, Double)] = {
     val efEff = if (ef > 0) math.max(ef, k) else math.max(4 * k, efConstruction)
     val gs = localGraphs
@@ -706,7 +671,7 @@ class HnswIndex private[operators] (
     // (clean r18 board, 8×250-node graphs), while the 5M wide-dim forests
     // it was built for clear the gate by 20×. Results are identical
     // either way (same per-graph search, same merge order).
-    val parallelWorthIt = gs.exists(_.size >= HnswIndex.localParallelMinNodes)
+    val parallelWorthIt = gs.exists(_.size >= HnswIndex.LocalParallelMinNodes)
     val perGraph: Seq[Array[(Long, Double)]] =
       if (HnswIndex.localParallelism <= 1 || gs.length <= 1 || !parallelWorthIt)
         gs.toSeq.map(_.search(query, k, efEff))
@@ -771,10 +736,8 @@ class HnswIndex private[operators] (
       // tasks × a cell is P × ~2 cells of heap at once. With blob PARTS
       // every cell is ≤ blobPartBytes (the GB-class single-cell layout
       // that OOM'd the 1024-d × 5M save with 32 writers is gone), so the
-      // default bound is now just a sane writer count; raise it for wide
-      // forests on big hosts. Knob: -Dgraft.hnsw.saveWriters (default 4).
-      val writers = sys.props.get("graft.hnsw.saveWriters").map(_.toInt)
-        .getOrElse(4)
+      // bound is now just a sane writer count.
+      val writers = 4
       val out =
         if (graphs.rdd.getNumPartitions > writers) graphs.coalesce(writers)
         else graphs
@@ -830,30 +793,26 @@ object HnswIndex {
 
   /** Thread budget for [[HnswIndex.searchLocal]]'s forest probe
     * (1 = sequential). Results are identical at any setting. */
-  @volatile var localParallelism: Int =
-    sys.props.get("graft.hnsw.localParallelism").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+  @volatile var localParallelism: Int = Runtime.getRuntime.availableProcessors()
 
   /** Smallest per-graph node count at which the parallel forest probe
     * engages (below it, thread dispatch outweighs the search itself —
-    * measured ~3× a tiny forest's sequential walk). Knob
-    * `-Dgraft.hnsw.localParallelMinNodes`; results identical either way. */
-  @volatile var localParallelMinNodes: Int =
-    sys.props.get("graft.hnsw.localParallelMinNodes").map(_.toInt)
-      .getOrElse(8192)
+    * measured ~3× a tiny forest's sequential walk); results identical
+    * either way. */
+  private val LocalParallelMinNodes = 8192
 
-  // session cache of served indexes (keyed by resolved persisted home,
-  // shared serve/prune layer) and executor-local cache of deserialized
-  // graphs (keyed by (home, pid))
-  private val family =
-    new IndexStore.Family[HnswIndex]("hnsw", FormatVersion)({ idx =>
-      idx.graphs.unpersist(); idx.releaseProbe(); idx.releaseLocal()
-    })
-  private val graphCache =
+  // executor-local cache of deserialized graphs (keyed by (home, pid)),
+  // and the session cache of served indexes (keyed by resolved persisted
+  // home), whose every invalidation drops the home's graphs too
+  private[graft] val graphCache =
     scala.collection.concurrent.TrieMap.empty[(String, Int), HnswGraph]
+  private val family =
+    new IndexStore.Family[HnswIndex]("hnsw", FormatVersion, forget = dropGraphs)({ idx =>
+      idx.graphs.unpersist(); idx.prepared.release(); idx.local.release()
+    })
 
-  private[operators] def dropGraphCache(home: String): Unit =
-    graphCache.keys.filter(_._1 == home).foreach(graphCache.remove)
+  private[operators] def dropGraphs(home: String => Boolean): Unit =
+    graphCache.keys.filter(k => home(k._1)).foreach(graphCache.remove)
 
   private[operators] def graphForParts(
       key: String, pid: Int, parts: Array[Array[Byte]]): HnswGraph =
@@ -866,11 +825,8 @@ object HnswIndex {
     * groups, writer buffers, and shuffle records all stay in the
     * ~100 MB class no matter the vector width, and the JVM's 2 GB
     * byte-array ceiling can never bind. `var` for spec-forced
-    * multi-part layouts on tiny graphs; knob
-    * `-Dgraft.hnsw.blobPartBytes` for deployments. */
-  @volatile private[graft] var blobPartBytes: Int =
-    sys.props.get("graft.hnsw.blobPartBytes").map(_.toInt)
-      .getOrElse(100 << 20)
+    * multi-part layouts on tiny graphs. */
+  @volatile private[graft] var blobPartBytes: Int = 100 << 20
 
   /** OutputStream that seals ≤`chunk`-byte parts as it fills. The first
     * buffer is presized to the (estimated, cap-bounded) payload so small
@@ -1043,7 +999,7 @@ object HnswIndex {
         // entering this section together allocate P × ~3 GB at
         // 1024-d × 312k nodes in one burst — the 5M 1024-d build died
         // here (multi-minute full GC → heartbeat timeout → job kill).
-        // Bound the burst: at most `freezePermits` concurrent
+        // Bound the burst: at most four concurrent
         // freeze+serialize sections per JVM (a per-executor constraint,
         // exactly like a memory-bounded columnar writer). Parts emit
         // from ONE task, so the (pid, part) runs the read paths rely on
@@ -1058,9 +1014,8 @@ object HnswIndex {
   }
 
   /** Concurrency bound for the freeze+serialize tail of a graph build
-    * (see [[buildGraphBlobs]]); `-Dgraft.hnsw.freezePermits=N`, default 4. */
-  private[operators] val freezeGate = new java.util.concurrent.Semaphore(
-    sys.props.get("graft.hnsw.freezePermits").map(_.toInt).getOrElse(4))
+    * (see [[buildGraphBlobs]]). */
+  private[operators] val freezeGate = new java.util.concurrent.Semaphore(4)
 
   /** pid range reserved per delta segment: graph partition ids must be
     * unique across CONCURRENT appenders (the executor graph cache and
@@ -1119,7 +1074,7 @@ object HnswIndex {
     graft.store.DeltaTable.stagePublishSegment(blobs, s"$path/delta", seg)
     graft.store.DeltaTable.commitSegment(path, seg)
     // drop session + executor caches so the next load sees the new blobs
-    invalidate(path)
+    IndexStore.invalidate(path)
     try before.unpersist(true)
     catch { case _: org.apache.spark.sql.AnalysisException => () }
   }
@@ -1159,7 +1114,7 @@ object HnswIndex {
           .map { case (bytes, i) => Seq(pid, i, bytes) }.toSeq)
     }
     graft.store.DeltaTable.commitSegment(path, seg)
-    invalidate(path)
+    IndexStore.invalidate(path)
     try before.unpersist(true)
     catch { case _: org.apache.spark.sql.AnalysisException => () }
   }
@@ -1196,7 +1151,7 @@ object HnswIndex {
       IndexStore.writeString(fs, new Path(tmp, Sidecar),
         s"""{"m":$m,"efConstruction":$efConstruction,"metric":"$metric"}""")
     }
-    invalidate(path)
+    IndexStore.invalidate(path)
     load(spark, path)
   }
 
@@ -1210,7 +1165,7 @@ object HnswIndex {
     // by plan, and plans over the same path compare equal, so a rebuild's
     // fresh load() would silently adopt the old in-memory blobs. unpersist
     // (plan-matched, no recache) while the old files still resolve.
-    invalidate(path)
+    IndexStore.invalidate(path)
     // guard, don't catch: deleting a never-built home (every FIRST full
     // sync) would otherwise pay a doomed analysis of `data/` whose
     // swallowed failure Spark still logs as a full ERROR stack
@@ -1379,30 +1334,4 @@ object HnswIndex {
       metric: String = MetricCosine): String =
     family.homeFor(spark, sourcePath,
       s"m=$m@efc=$efConstruction@p=$numPartitions@mt=$metric")
-
-  /** Drop cached state for a home (writers call this on source rewrite) —
-    * the served index AND the executor-local deserialized graphs. */
-  def invalidate(home: String): Unit = {
-    family.invalidate(home)
-    graphCache.keys.filter(_._1 == home).foreach(graphCache.remove)
-  }
-
-  /** Drop every cached home served for a SOURCE path, including the
-    * executor-local deserialized graphs of those homes. */
-  def invalidateSource(sourcePath: String): Unit =
-    family.invalidateSource(sourcePath).foreach { h =>
-      graphCache.keys.filter(_._1 == h).foreach(graphCache.remove)
-    }
-
-  /** Drop every home at or below `prefix` (its files are going), with the
-    * deserialized graphs of those homes. */
-  def invalidateUnder(prefix: String): Unit = {
-    family.invalidateUnder(prefix)
-    graphCache.keys.filter(k => IndexStore.isUnder(k._1, prefix)).foreach(graphCache.remove)
-  }
-
-  def invalidateAll(): Unit = {
-    family.invalidateAll()
-    graphCache.clear()
-  }
 }

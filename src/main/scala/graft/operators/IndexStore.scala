@@ -3,32 +3,54 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Shared persistence plumbing for ANN index homes ([[IvfIndex]],
-  * [[HnswIndex]]): Hadoop-FS IO (HDFS/S3A work like local disk),
-  * stage-then-rename atomic publish, source-mtime-keyed home resolution,
-  * and manifest-based pruning of stale sibling homes. Its fixed-home
-  * residency ([[IndexStore.Family.serveFixed]] + [[listingFingerprint]])
-  * also keeps `graft.store`'s prepared table reads.
-  */
+/** The lifecycle every ANN index family shares, written once: where a
+  * home lives, when its served state is reused and when it is dropped.
+  * A family ([[HnswIndex]], [[IvfIndex]], [[IvfPq]], [[Pq]], [[Quantized]]
+  * binary signatures, and `graft.store`'s prepared table reads) builds
+  * one [[IndexStore.Family]] and so joins the registry; [[invalidate]],
+  * [[invalidateSource]] and [[invalidateUnder]] then drop the matching
+  * homes of every family at once, so a writer makes one call and no
+  * family can miss it. The prepared state a served handle builds once
+  * (probe RDDs, driver-local tiers) lives in [[IndexStore.Slot]]s that the
+  * family's release hook drops with the handle.
+  *
+  * What a family still supplies: its build (published here under the
+  * stage-then-rename protocol), its load, its probe kernel, the release
+  * hook for a dropped handle and, for state kept per home outside any
+  * handle (HNSW's executor graph cache), a `forget` hook that every
+  * invalidation runs whether or not the home holds a served entry.
+  *
+  * Also here: Hadoop-FS IO (HDFS/S3A work like local disk), source-mtime
+  * keyed home resolution, and manifest-based pruning of stale sibling
+  * homes. */
 private[graft] object IndexStore {
 
   val SourceManifest = "source.path"
 
-  /** One instance per index family (IVF, HNSW, PQ, binary-signature,
-    * IVF-PQ): owns the family's on-disk root (`GRAFT_INDEX_DIR/<name>`,
-    * default `java.io.tmpdir/graft-<name>`), resolves mtime-keyed homes,
-    * runs the session cache with serve-time manifest publish/prune, and
-    * releases cached executor state on invalidation. The five families
-    * previously hand-rolled copies of exactly this layer — and both
-    * round-10 latent bugs (the cross-param sibling prune and the
-    * unknown-metric fallthrough) lived in those duplicated copies, so the
-    * resolution/prune/cache contract now exists ONCE.
-    *
-    * `release` runs when a cached entry is dropped (unpersist cached
-    * frames so a rewritten source never serves evicted blocks against
-    * swapped parquet). */
-  final class Family[T](name: String, formatVersion: Int)(
-      release: T => Unit) {
+  private val families = new java.util.concurrent.CopyOnWriteArrayList[Family[_]]()
+
+  /** Drop `home`'s served state in every family. */
+  def invalidate(home: String): Unit = families.forEach(_.invalidate(home))
+
+  /** Drop every home served for `sourcePath` in every family (writers hold
+    * the table path, not the mtime-hashed home). A fixed home is its own
+    * source: a table's prepared reads go too. */
+  def invalidateSource(sourcePath: String): Unit =
+    families.forEach(_.invalidateSource(sourcePath))
+
+  /** Drop every home at or below `prefix` in every family (a directory
+    * whose files are going: a removed pipeline, an archived collection). */
+  def invalidateUnder(prefix: String): Unit =
+    families.forEach(_.invalidateUnder(prefix))
+
+  /** One index family's homes (`GRAFT_INDEX_DIR/<name>`, default
+    * `java.io.tmpdir/graft-<name>`) and served handles. `release` runs
+    * when a served handle is dropped: it unpersists cached frames, so a
+    * rewritten source never serves evicted blocks against swapped
+    * parquet, and releases the handle's [[Slot]]s. `forget` drops the
+    * per-home state whose home matches. */
+  final class Family[T](name: String, formatVersion: Int,
+      forget: (String => Boolean) => Unit = _ => ())(release: T => Unit) {
     // home → (listing fingerprint, served index); mtime-keyed homes carry
     // fingerprint 0 — their key already changes with the source
     private val cache = scala.collection.concurrent.TrieMap.empty[String, (Long, T)]
@@ -37,6 +59,7 @@ private[graft] object IndexStore {
     // SOURCE path: homes are mtime-hashed, so a writer holding only the
     // table path could otherwise never name the cache key it must drop
     private val sourceOf = scala.collection.concurrent.TrieMap.empty[String, String]
+    families.add(this)
 
     def root: String = sys.env.get("GRAFT_INDEX_DIR").map(_ + s"/$name")
       .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-$name")
@@ -94,27 +117,70 @@ private[graft] object IndexStore {
       }
     }
 
-    def invalidate(home: String): Unit = cache.remove(home).foreach(e => release(e._2))
+    private def drop(home: String): Unit = cache.remove(home).foreach(e => release(e._2))
 
-    /** Drop every cached home served for `sourcePath` (writers hold the
-      * table path, not the mtime-hashed home). Returns the homes dropped so
-      * callers can clear their own per-home side caches (executor graphs,
-      * driver-local postings). */
-    def invalidateSource(sourcePath: String): Seq[String] = {
-      val homes = sourceOf.collect {
-        case (h, s) if s == sourcePath => h
-      }.toSeq
-      homes.foreach { h => sourceOf.remove(h); invalidate(h) }
-      homes
+    private[IndexStore] def invalidate(home: String): Unit = { drop(home); forget(_ == home) }
+
+    private[IndexStore] def invalidateSource(sourcePath: String): Unit = {
+      val homes = sourceOf.collect { case (h, s) if s == sourcePath => h }.toSet + sourcePath
+      homes.foreach { h => sourceOf.remove(h); drop(h) }
+      forget(homes)
     }
 
-    /** Drop every cached home at or below `prefix` (a directory whose
-      * files are going: a removed pipeline, an archived collection). */
-    def invalidateUnder(prefix: String): Unit =
-      cache.keys.filter(isUnder(_, prefix)).foreach(invalidate)
-
-    def invalidateAll(): Unit = { sourceOf.clear(); cache.keys.foreach(invalidate) }
+    private[IndexStore] def invalidateUnder(prefix: String): Unit = {
+      cache.keys.filter(isUnder(_, prefix)).foreach(drop)
+      forget(isUnder(_, prefix))
+    }
   }
+
+  /** One piece of prepared state a served handle builds once and drops
+    * with that handle: a probe RDD or a driver-local tier. A hit is one
+    * volatile read. Concurrent misses build once; a value `valid` rejects
+    * (built for another id column) is rebuilt and replaced. With `bytes`,
+    * the value is driver-heap resident: it is registered with
+    * [[LocalResidency]] under a process-unique key, touched on every hit,
+    * and released when the residency cap evicts it. [[release]] drops the
+    * value (`drop` unpersists or forgets what it holds); the next access
+    * rebuilds it. */
+  final class Slot[T <: AnyRef](family: String, bytes: Option[T => Long] = None)(
+      drop: T => Unit) {
+    private val key = s"$family-${slotIds.incrementAndGet()}"
+    private val held = new java.util.concurrent.atomic.AtomicReference[T]()
+
+    def apply(build: => T): T = matching(_ => true)(build)
+
+    def matching(valid: T => Boolean)(build: => T): T = {
+      val cur = held.get()
+      if (cur != null && valid(cur)) {
+        if (bytes.isDefined) LocalResidency.touch(family, key)
+        cur
+      } else synchronized {
+        val again = held.get()
+        if (again != null && valid(again)) again
+        else {
+          val t = build
+          // register before the value is visible, so a release racing
+          // the install never leaves an entry without its value
+          bytes.foreach(b => LocalResidency.register(family, key, b(t))(() => release()))
+          Option(held.getAndSet(t)).foreach(drop)
+          t
+        }
+      }
+    }
+
+    /** Drop the held value, if any. Lock-free, so a residency eviction
+      * run from another slot's install never waits on this one. */
+    def release(): Unit = Option(held.getAndSet(null.asInstanceOf[T])).foreach { t =>
+      if (bytes.isDefined) LocalResidency.release(family, key)
+      drop(t)
+    }
+  }
+
+  private val slotIds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** A [[Slot]]'s `drop` for a persisted RDD. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    try { rdd.unpersist(false); () } catch { case _: Throwable => () }
 
   /** `home` is `prefix` or lies below it, matched on whole path segments:
     * `/wh/c/p` is under `/wh/c`, `/wh/c2/p` is not. */

@@ -93,22 +93,12 @@ class IvfIndex private[operators] (
   // 15M spill rows as individual Array[Float]s cost ~1.5 GB of object
   // headers and a pointer chase per scanned row at sf100; the flat blob
   // scans with stride (VectorKernels strided twins, bit-identical scores)
-  @transient private lazy val localPostingsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Map[Int, (Array[Long], Array[Float])])]
-
-  // residency-key base: a process-unique instance number, NOT
-  // System.identityHashCode — identity hashes collide between live
-  // instances, and a collision lets one index's register/release evict
-  // or replace ANOTHER's accounting entry (ADVICE r17)
-  @transient private lazy val resInstance: Long =
-    IvfIndex.resInstanceCounter.incrementAndGet()
-  private def resKeyFor(idCol: String): String = s"ivf-$resInstance/$idCol"
+  @transient private[graft] val local =
+    new IndexStore.Slot[IvfIndex.Postings]("ivf", Some(_.bytes))(_ => ())
 
   def searchLocal(query: Array[Float], k: Int, nprobe: Int,
       idCol: String): Seq[(Long, Double)] = {
-    val resKey = resKeyFor(idCol)
-    if (localPostingsCache.contains(idCol)) LocalResidency.touch("ivf", resKey)
-    val (dim, postings) = localPostingsCache.getOrElseUpdate(idCol, {
+    val tier = local.matching(_.idCol == idCol) {
       val spark = data.sparkSession
       import spark.implicits._
       val rows = data
@@ -129,14 +119,11 @@ class IvfIndex private[operators] (
         idArr(c)(i) = id
         System.arraycopy(v, 0, flatArr(c), i * d, d)
       }
-      val built = (d, (0 until k).filter(counts(_) > 0)
+      IvfIndex.Postings(idCol, d, (0 until k).filter(counts(_) > 0)
         .map(c => c -> (idArr(c), flatArr(c))).toMap)
-      LocalResidency.register("ivf", resKey,
-        built._2.valuesIterator
-          .map { case (is, fl) => 8L * is.length + 4L * fl.length }.sum)(
-        () => { localPostingsCache.remove(idCol); () })
-      built
-    })
+    }
+    val dim = tier.dim
+    val postings = tier.byCluster
     val ranked = IvfIndex.rankCentroids(centroids, query, metric, nprobe)
     import graft.functions.VectorKernels
     val scoreAt: (Array[Float], Int) => Double = metric match {
@@ -170,15 +157,15 @@ class IvfIndex private[operators] (
   // PartitionPruningRDD job over exactly the nprobe ranked partitions —
   // the scheduler never even creates tasks for the other nlist−nprobe
   // clusters, which is the partition-pruning serving contract of the
-  // persisted parquet layout with zero per-query Catalyst work. Keyed by
-  // idCol like the local postings cache; released with the instance.
-  @transient private lazy val probeRddCache =
-    scala.collection.concurrent.TrieMap.empty[
-      String, org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Int)]]
+  // persisted parquet layout with zero per-query Catalyst work. Built for
+  // one idCol like the local postings; released with the instance.
+  @transient private[graft] val prepared =
+    new IndexStore.Slot[(String, org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Int)])](
+      "ivf")(p => IndexStore.unpersist(p._2))
 
   private def probeRdd(idCol: String)
       : org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Int)] =
-    probeRddCache.getOrElseUpdate(idCol, {
+    prepared.matching(_._1 == idCol) {
       val spark = data.sparkSession
       import spark.implicits._
       val n = centroids.length
@@ -206,25 +193,8 @@ class IvfIndex private[operators] (
         }, preservesPartitioning = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       rdd.count() // materialize: every later probe is cache-resident
-      rdd
-    })
-
-  /** Drop the prepared probe RDDs (source rewrite / family eviction). */
-  private[graft] def releaseProbe(): Unit = {
-    probeRddCache.values.foreach { r =>
-      try { r.unpersist(false); () } catch { case _: Throwable => () }
-    }
-    probeRddCache.clear()
-  }
-
-  /** Drop the driver-local postings tier + its residency entries
-    * (source rewrite / family eviction). */
-  private[graft] def releaseLocal(): Unit = {
-    localPostingsCache.keys.foreach { idCol =>
-      LocalResidency.release("ivf", resKeyFor(idCol))
-    }
-    localPostingsCache.clear()
-  }
+      (idCol, rdd)
+    }._2
 
   /** Prepared single-query distributed probe: rank centroids on the
     * driver, then ONE partition-pruned RDD job over the nprobe cluster
@@ -255,10 +225,13 @@ class IvfIndex private[operators] (
 
 object IvfIndex {
 
-  /** Monotone instance numbers for [[IvfIndex.resKeyFor]] — never reused,
-    * so two live indexes can never share a residency entry. */
-  private[operators] val resInstanceCounter =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  /** [[IvfIndex.searchLocal]]'s tier for one id column: per cluster, the
+    * ids and their vectors as one flat n·dim float[]. */
+  private[graft] final case class Postings(
+      idCol: String, dim: Int, byCluster: Map[Int, (Array[Long], Array[Float])]) {
+    def bytes: Long = byCluster.valuesIterator
+      .map { case (is, fl) => 8L * is.length + 4L * fl.length }.sum
+  }
 
   private val Sidecar = "centroids.json"
   // bump when the on-disk layout or assignment scheme changes: the format
@@ -331,7 +304,7 @@ object IvfIndex {
   // home resolution / session cache / manifest prune — shared layer
   private val family =
     new IndexStore.Family[IvfIndex]("ivf", FormatVersion)({ idx =>
-      idx.data.unpersist(); idx.releaseProbe(); idx.releaseLocal()
+      idx.data.unpersist(); idx.prepared.release(); idx.local.release()
     })
 
   /** The family's on-disk root (spec introspection). */
@@ -398,24 +371,9 @@ object IvfIndex {
     family.homeFor(spark, sourcePath,
       s"nlist=$nlist@nassign=$nassign@mt=$metric")
 
-  /** Drop a cached index after its underlying table is rewritten —
-    * writers (Collection.writeSnapshot) call this so queries never serve a
-    * stale index or recompute evicted blocks against swapped parquet. */
-  def invalidate(key: String): Unit = family.invalidate(key)
-
-  /** Drop every cached home served for a SOURCE path (what writers hold). */
-  def invalidateSource(sourcePath: String): Unit = {
-    family.invalidateSource(sourcePath); ()
-  }
-
-  /** Drop every home at or below `prefix` (its files are going). */
-  def invalidateUnder(prefix: String): Unit = family.invalidateUnder(prefix)
-
-  def invalidateAll(): Unit = family.invalidateAll()
-
   /** Remove a persisted index (e.g. before a re-sync rebuilds it). */
   def delete(spark: SparkSession, path: String): Unit = {
-    invalidate(path)
+    IndexStore.invalidate(path)
     IndexStore.fsFor(spark, path).delete(new Path(path), true); ()
   }
 
@@ -524,7 +482,7 @@ object IvfIndex {
       deltaPath, seg, partitionCols = Seq("cluster_id"))
     graft.store.DeltaTable.appendManifestFor(path, docIds, DeltaDocCol, seg, knownIds)
     graft.store.DeltaTable.commitSegment(path, seg)
-    invalidate(path)
+    IndexStore.invalidate(path)
   }
 
   /** Above this centroid count, assignment switches from the inlined

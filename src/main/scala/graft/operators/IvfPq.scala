@@ -40,12 +40,30 @@ object IvfPq {
       metric: String,
       nassign: Int,
       byResidual: Boolean,
-      codes: DataFrame)
+      codes: DataFrame) {
+    /** The driver-local tier: built by the first [[localProbe]] of this
+      * home, dropped with it. */
+    private[graft] val local = new IndexStore.Slot[Local]("ivfpq", Some(_.bytes))(_ => ())
+  }
+
+  /** [[localProbe]]'s snapshots of one home, both FLAT primitive layouts
+    * (the quantized counterpart of HnswIndex's graph cache): per cluster
+    * the ids and their m-strided codes, and every source vector as an
+    * id → offset index over one dim-strided blob. Millions of 8-byte
+    * Array[Byte]s / boxed map entries are mostly object header, and their
+    * GC pressure starved the 24 GB sf100 heap. */
+  private[graft] final case class Local(
+      codes: Map[Int, (Array[Long], Array[Byte])],
+      vecIdx: VectorSearch.LongIntIndex, vecDim: Int, vecFlat: Array[Float]) {
+    def bytes: Long =
+      codes.valuesIterator.map { case (is, cs) => 8L * is.length + cs.length.toLong }.sum +
+        vecIdx.residentBytes + 4L * vecFlat.length
+  }
 
   // codes frames are served uncached (partition pruning is the point), so
-  // invalidation has no executor state to release
+  // a dropped home releases only its driver-local tier
   private val family =
-    new IndexStore.Family[Home]("ivfpq", FormatVersion)(_ => ())
+    new IndexStore.Family[Home]("ivfpq", FormatVersion)(_.local.release())
 
   def indexPathFor(spark: SparkSession, sourcePath: String,
       nlist: Int, m: Int, kCent: Int, nassign: Int = 3,
@@ -134,23 +152,6 @@ object IvfPq {
     }
   }
 
-  def invalidate(home: String): Unit = {
-    family.invalidate(home)
-    localCodesCache.remove(home)
-    localVecCache.remove(home)
-    LocalResidency.release("ivfpq", home)
-  }
-
-  /** Drop every cached home served for a SOURCE path, including the
-    * driver-local code/vector snapshots (writers hold the table path, not
-    * the mtime-hashed home — see IndexStore.Family.invalidateSource). */
-  def invalidateSource(sourcePath: String): Unit =
-    family.invalidateSource(sourcePath).foreach { h =>
-      localCodesCache.remove(h)
-      localVecCache.remove(h)
-      LocalResidency.release("ivfpq", h)
-    }
-
   /** The candidate stage on its own: driver-side probe selection → a
     * partition-pruned ADC scan of the probed clusters' codes → top-`r`
     * ids. Exposed so the probe PLAN (cluster_id PartitionFilters +
@@ -211,17 +212,6 @@ object IvfPq {
 
   // ---------------------------------------------------- driver-local tier
 
-  // cluster→codes postings and id→vector snapshots, collected IN-PROCESS
-  // once per served home (the quantized counterpart of HnswIndex's graph
-  // cache) — both FLAT primitive layouts: per-cluster (ids, m-strided code
-  // blob), and (id→offset index, dim-strided vector blob). Millions of
-  // 8-byte Array[Byte]s / boxed map entries are mostly object header, and
-  // their GC pressure starved the 24 GB sf100 heap.
-  private val localCodesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Int, (Array[Long], Array[Byte])]]
-  private val localVecCache =
-    scala.collection.concurrent.TrieMap.empty[String, (VectorSearch.LongIntIndex, Int, Array[Float])]
-
   /** Driver-local serving tier: probe selection → in-process ADC scan of
     * the probed clusters' cached codes → top-r shortlist → exact re-rank
     * against the cached vectors. Zero Spark jobs after the first call;
@@ -243,10 +233,11 @@ object IvfPq {
       nlist, m, kCent, nassign, metric, byResidual, variant)(query, k)
 
   /** Resolve-once probe factory: pays serveOrBuild + the mtime-hashed home
-    * resolution + the code/vector snapshot lookups ONCE and returns a
-    * closure that only does per-probe arithmetic — the shape
-    * AnnServing.localProber hands a server loop (searchLocal keeps the
-    * one-shot per-call-resolution contract by delegating here). */
+    * resolution ONCE and returns a closure that probes that home's
+    * driver-local tier — the shape AnnServing.localProber hands a server
+    * loop (searchLocal keeps the one-shot per-call-resolution contract by
+    * delegating here). A tier the residency cap evicted is collected
+    * again by the next probe. */
   def localProbe(
       spark: SparkSession, sourcePath: String,
       df: => DataFrame, idCol: String, vecCol: String,
@@ -256,9 +247,7 @@ object IvfPq {
       variant: String = ""): (Array[Float], Int) => Seq[(Long, Double)] = {
     val h = serveOrBuild(spark, sourcePath, df, idCol, vecCol,
       nlist, m, kCent, nassign, metric, byResidual, variant)
-    val home = indexPathFor(spark, sourcePath, nlist, m, kCent, nassign,
-      metric, byResidual, variant)
-    val codes = localCodesCache.getOrElseUpdate(home, {
+    def tier: Local = h.local {
       import spark.implicits._
       val rows = h.codes
         .select(col("id").cast("long"), col("pq"), col("cluster_id").cast("int"))
@@ -275,34 +264,24 @@ object IvfPq {
         idArr(c)(i) = id
         System.arraycopy(pq, 0, codeArr(c), i * mW, mW)
       }
-      (0 until k).filter(counts(_) > 0)
-        .map(c => c -> (idArr(c), codeArr(c))).toMap
-    })
-    val (vecIdx, vecDim, vecFlat) = localVecCache.getOrElseUpdate(home, {
-      import spark.implicits._
-      val rows = df.select(col(idCol).cast("long"), col(vecCol))
+      val vecRows = df.select(col(idCol).cast("long"), col(vecCol))
         .as[(Long, Array[Float])].collect()
-      val d = if (rows.isEmpty) 1 else rows(0)._2.length
-      val idx = new VectorSearch.LongIntIndex(rows.length)
+      val d = if (vecRows.isEmpty) 1 else vecRows(0)._2.length
+      val idx = new VectorSearch.LongIntIndex(vecRows.length)
       val flat = new Array[Float](
-        VectorSearch.flatFloats(rows.length, d, "IVF-PQ local rerank snapshot"))
+        VectorSearch.flatFloats(vecRows.length, d, "IVF-PQ local rerank snapshot"))
       var i = 0
-      while (i < rows.length) {
-        idx.put(rows(i)._1, i)
-        System.arraycopy(rows(i)._2, 0, flat, i * d, d)
+      while (i < vecRows.length) {
+        idx.put(vecRows(i)._1, i)
+        System.arraycopy(vecRows(i)._2, 0, flat, i * d, d)
         i += 1
       }
-      (idx, d, flat)
-    })
-    // one residency entry covers both snapshots (they resolve together);
-    // register on every handle acquisition — replace + LRU enforce
-    LocalResidency.register("ivfpq", home,
-      codes.valuesIterator
-        .map { case (is, cs) => 8L * is.length + cs.length.toLong }.sum
-        + vecIdx.residentBytes + 4L * vecFlat.length)(
-      () => { localCodesCache.remove(home); localVecCache.remove(home); () })
+      Local((0 until k).filter(counts(_) > 0)
+        .map(c => c -> (idArr(c), codeArr(c))).toMap, idx, d, flat)
+    }
+    tier
     (query: Array[Float], k: Int) => {
-    LocalResidency.touch("ivfpq", home)
+    val Local(codes, vecIdx, vecDim, vecFlat) = tier
     val r = math.max(if (rerank > 0) rerank else 10 * k, k)
     val probed = IvfIndex.rankCentroids(h.centroids, query, metric, nprobe)
     // ADC shortlist: copies carry identical scores when codes encode raw

@@ -1,27 +1,20 @@
 package graft.operators
 
-/** Byte-accounted LRU registry over the DRIVER-LOCAL ANN tier caches
-  * (HNSW graph arrays, IVF flat postings, IVF-PQ codes + re-rank vector
-  * snapshots). The r16 sf100 measurement: three co-resident 5M local
-  * tiers need ~40 GB of heap — without a cap, a serving JVM sized for
-  * ONE family is OOM'd by a single stray probe on another. With
-  * `maxBytes` set, registering a tier evicts least-recently-PROBED
-  * tiers until the total fits; the newly registered tier itself is
-  * never evicted (serving must work even when one tier alone exceeds
-  * the budget — the cap bounds co-residency, not the workload).
+/** Byte-accounted LRU registry over the DRIVER-LOCAL ANN tiers (HNSW
+  * graph arrays, IVF flat postings, IVF-PQ codes + re-rank vector
+  * snapshots). Each tier is an [[IndexStore.Slot]], the only caller of
+  * [[register]], [[touch]] and [[release]]. The r16 sf100 measurement:
+  * three co-resident 5M local tiers need ~40 GB of heap — without a cap,
+  * a serving JVM sized for ONE family is OOM'd by a single stray probe on
+  * another. With [[maxBytes]] set, registering a tier evicts
+  * least-recently-PROBED tiers until the total fits; the newly registered
+  * tier itself is never evicted (serving must work even when one tier
+  * alone exceeds the budget — the cap bounds co-residency, not the
+  * workload).
   *
-  * Eviction frees the REGISTRY's references (the family caches' maps);
-  * a resolve-once probe handle that captured the arrays keeps its own
-  * snapshot alive until the handle is dropped — standard cache
-  * semantics. An evicted tier rebuilds transparently on its next probe
-  * (one collect job), bit-identical results.
-  *
-  * Knob: `-Dgraft.ann.localResidencyMaxBytes=N` or set [[maxBytes]]
-  * directly; 0 = uncapped. The DEFAULT is ON at half the JVM's max heap
-  * (r17 verdict #8): a serving box that never touches a second family
-  * pays nothing, and the 40 GB three-tier co-residency OOM cannot happen
-  * out of the box. Explicit [[evict]]/[[evictAll]] work regardless of
-  * the cap.
+  * Eviction releases the tier's slot; the next probe through the slot
+  * rebuilds it transparently (one collect job), bit-identical results.
+  * Explicit [[evict]]/[[evictAll]] work regardless of the cap.
   */
 object LocalResidency {
 
@@ -29,10 +22,10 @@ object LocalResidency {
     * Default: half of `Runtime.maxMemory` — graph/posting arrays are the
     * dominant resident class in a serving JVM, and half the heap leaves
     * room for probe transients, the blob collect, and Spark's own
-    * driver-side state. */
-  @volatile var maxBytes: Long =
-    sys.props.get("graft.ann.localResidencyMaxBytes").map(_.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory() / 2)
+    * driver-side state. A serving box that never touches a second family
+    * pays nothing, and the 40 GB three-tier co-residency OOM cannot happen
+    * out of the box. */
+  @volatile var maxBytes: Long = Runtime.getRuntime.maxMemory() / 2
 
   private final case class Entry(bytes: Long, evict: () => Unit)
 
@@ -41,10 +34,9 @@ object LocalResidency {
     new java.util.LinkedHashMap[(String, String), Entry](16, 0.75f, true)
 
   /** Record (or replace) a resident tier and enforce the budget against
-    * everything ELSE. `evict` must drop the owning cache's strong
-    * references (idempotent; called outside the registry lock's
-    * critical path is not guaranteed — keep it lock-free). */
-  def register(family: String, key: String, bytes: Long)(evict: () => Unit): Unit = {
+    * everything ELSE. `evict` must drop the owning slot's value
+    * (idempotent, and lock-free: it runs on the registering thread). */
+  private[operators] def register(family: String, key: String, bytes: Long)(evict: () => Unit): Unit = {
     val victims = entries.synchronized {
       entries.put((family, key), Entry(bytes, evict))
       collectVictims(exclude = (family, key))
@@ -53,11 +45,11 @@ object LocalResidency {
   }
 
   /** Bump a tier's recency (call on every probe that serves from it). */
-  def touch(family: String, key: String): Unit =
+  private[operators] def touch(family: String, key: String): Unit =
     entries.synchronized { entries.get((family, key)); () }
 
   /** Remove a tier the owner already dropped itself (no callback). */
-  def release(family: String, key: String): Unit =
+  private[operators] def release(family: String, key: String): Unit =
     entries.synchronized { entries.remove((family, key)); () }
 
   /** Explicitly evict one tier: callback + removal. No-op if absent. */

@@ -318,16 +318,6 @@ object Pq {
     }
   }
 
-  /** Drop cached state (writers call this after rewriting a source). */
-  def invalidate(home: String): Unit = family.invalidate(home)
-
-  /** Drop every cached home served for a SOURCE path (what writers hold). */
-  def invalidateSource(sourcePath: String): Unit = {
-    family.invalidateSource(sourcePath); ()
-  }
-
-  def invalidateAll(): Unit = family.invalidateAll()
-
   /** Serving-shape KNN: ADC shortlist from the persisted codes table,
     * exact cosine re-rank of the R full vectors fetched through the shared
     * [[VectorSearch.fetchShortlist]] seam — In(id…) pushdown (row-group

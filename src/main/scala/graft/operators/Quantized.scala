@@ -137,16 +137,6 @@ object Quantized {
     }
   }
 
-  /** Drop cached state (writers call this after rewriting a source). */
-  def invalidate(home: String): Unit = family.invalidate(home)
-
-  /** Drop every cached home served for a SOURCE path (what writers hold). */
-  def invalidateSource(sourcePath: String): Unit = {
-    family.invalidateSource(sourcePath); ()
-  }
-
-  def invalidateAll(): Unit = family.invalidateAll()
-
   // ---- SQ8 scalar quantization ----
 
   /** Per-dimension affine quantizer: `code = round((v - min) / scale)`,

@@ -2285,7 +2285,7 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
     checkPipelineName(p.name)
     withExclusiveLock(p.name) {
       Collection.generationOf(pipelineKey(p.name)).incrementAndGet()
-      releaseResident(s"$warehouseDir/$name/${p.name}")
+      graft.operators.IndexStore.invalidateUnder(s"$warehouseDir/$name/${p.name}")
       deleteRec(new java.io.File(s"$warehouseDir/$name/${p.name}"))
     }
     writePipelines(pipelines - p.name)
@@ -2355,18 +2355,9 @@ class Collection(spark: SparkSession, val name: String, warehouseDir: String) {
       .find(n => !new java.io.File(s"$warehouseDir/$n").exists())
       .get
     val dst = new java.io.File(s"$warehouseDir/$archiveName")
-    releaseResident(s"$warehouseDir/$name")
+    graft.operators.IndexStore.invalidateUnder(s"$warehouseDir/$name")
     require(src.renameTo(dst), s"failed to archive $src -> $dst")
     archiveName
-  }
-
-  /** Drop the resident state served from the table homes at or below
-    * `dir` (index handles with their probe RDDs and graphs, prepared reads
-    * with their rows) before its files go. */
-  private def releaseResident(dir: String): Unit = {
-    graft.operators.HnswIndex.invalidateUnder(dir)
-    graft.operators.IvfIndex.invalidateUnder(dir)
-    SnapshotRead.invalidateUnder(dir)
   }
 
   // write-then-swap so a failed job never truncates the live table; one

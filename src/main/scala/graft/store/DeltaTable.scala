@@ -3,6 +3,8 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.IndexStore
+
 /** Segmented append+tombstone parquet table with document-granularity
   * supersession — the storage shape that makes Collection's incremental
   * sync O(changed docs) instead of O(corpus) per batch.
@@ -123,20 +125,6 @@ object DeltaTable {
         case _ => None
       }).foldLeft(-1)(math.max)
 
-  /** Drop EVERY index family's cached state for a rewritten table — not
-    * just IVF's. Homes are mtime-hashed, so writers (which hold only the
-    * table path) go through each family's source→home map; families with
-    * driver/executor side caches (HNSW graphs, IVF-PQ postings) clear those
-    * for the dropped homes too. Without this, the IVF-PQ local tier kept
-    * serving its first-call snapshot across a source rewrite. */
-  private def invalidateIndexes(path: String): Unit = {
-    graft.operators.IvfIndex.invalidateSource(path)
-    graft.operators.IvfPq.invalidateSource(path)
-    graft.operators.HnswIndex.invalidateSource(path)
-    graft.operators.Pq.invalidateSource(path)
-    graft.operators.Quantized.invalidateSource(path)
-  }
-
   private def hasManifest(path: String): Boolean = {
     val d = new java.io.File(manifestPath(path))
     d.isDirectory && Option(d.listFiles()).exists(_.exists(f =>
@@ -147,7 +135,7 @@ object DeltaTable {
     * the same write-then-swap as the old snapshot path. The slate-clean
     * state every full sync and every compaction produces. */
   def writeBase(df: DataFrame, path: String, sortCols: Seq[String] = Nil): Unit = {
-    invalidateIndexes(path)
+    IndexStore.invalidateSource(path)
     requireLocalWrites(path, "writeBase")
     manifestCache.remove(path)
     invalidateSchemas(path)
@@ -187,7 +175,7 @@ object DeltaTable {
       // instead of a coalesce(1) job per table-touch — on a micro-batch,
       // scheduling fixed costs dwarf the one-row payloads
       knownIds: Option[Seq[String]] = None): Int = {
-    invalidateIndexes(path)
+    IndexStore.invalidateSource(path)
     requireLocalWrites(path, "appendDelta")
     val seg = allocSeg(path)
     val sized = if (coalesceTo > 0) df.coalesce(coalesceTo) else df
@@ -471,7 +459,7 @@ object DeltaTable {
       rows: Seq[Seq[Any]],
       ids: Seq[String],
       docCol: String): Int = {
-    invalidateIndexes(path)
+    IndexStore.invalidateSource(path)
     requireLocalWrites(path, "appendDeltaLocal")
     require(ids.nonEmpty, "appendDeltaLocal needs the batch's document ids")
     val seg = allocSeg(path)
@@ -1115,7 +1103,7 @@ object DeltaTable {
   /** Swap a staged home into place (cache-coherent twin of the swap inside
     * [[writeBase]]). Caller must hold the home's writer lock. */
   private[graft] def publishStaged(staged: String, home: String): Unit = {
-    invalidateIndexes(home)
+    IndexStore.invalidateSource(home)
     manifestCache.remove(home)
     invalidateSchemas(home)
     swap(staged, home)
@@ -1141,7 +1129,7 @@ object DeltaTable {
       path: String,
       docIds: DataFrame,
       docCol: String = "document_id"): Unit = {
-    invalidateIndexes(path)
+    IndexStore.invalidateSource(path)
     requireLocalWrites(path, "tombstone")
     val seg = allocSeg(path)
     appendManifest(path, docIds, docCol, seg)
@@ -1383,7 +1371,7 @@ object DeltaTable {
     * log sinks share this with the segmented layout's base writes, so the
     * crash-window semantics live in exactly one place. */
   private[graft] def writeSnapshot(df: DataFrame, path: String): Unit = {
-    invalidateIndexes(path)
+    IndexStore.invalidateSource(path)
     requireLocalWrites(path, "writeSnapshot")
     val tmp = path + "_tmp"
     df.write.mode(SaveMode.Overwrite).parquet(tmp)

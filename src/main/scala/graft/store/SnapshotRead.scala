@@ -35,7 +35,7 @@ import graft.operators.IndexStore
   * (Spark's storage status lists the RDD as `snapshot read (<cols>) of
   * <home>`). A partition that did not fit in storage memory, or was
   * evicted, is recomputed from the planned files as it is read. Dropping
-  * a plan (its home's listing changed, [[SnapshotRead.invalidate]], or
+  * a plan (its home's listing changed, [[IndexStore.invalidate]], or
   * [[SnapshotRead.consistent]]'s re-plan) unpersists its RDD, so the
   * blocks of a retired snapshot go with it. A non-local home is planned on
   * every call and nothing of it is persisted: an RDD per call would pile
@@ -127,12 +127,6 @@ private[store] object SnapshotRead {
   def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
-  /** Drop every plan of `home`: the next serve plans the home afresh. */
-  private[store] def invalidate(home: String): Unit = reads.invalidate(home)
-
-  /** Drop every plan of the homes at or below `prefix`. */
-  private[store] def invalidateUnder(prefix: String): Unit = reads.invalidateUnder(prefix)
-
   /** A scanned row as a copy of its own (scans reuse their row buffers). A
     * named class, so planning cleans no closure for it. */
   private object CopyRow extends (InternalRow => InternalRow) with Serializable {
@@ -153,7 +147,7 @@ private[store] object SnapshotRead {
     try body(reads)
     catch {
       case e: Exception if missingFile(e) =>
-        reads.map(_.home).distinct.foreach(invalidate)
+        reads.map(_.home).distinct.foreach(IndexStore.invalidate)
         body(reads.map(_.replanned))
     }
 

@@ -22,7 +22,7 @@ class AnnResidencySpec extends AnyFunSuite {
   private val p = AnnServing.LocalParams(nlist = 16, pqNlist = 8, kCent = 16, rerank = 100)
 
   private def probe(family: String, q: Array[Float]): Seq[(Long, Double)] =
-    AnnServing.serveLocal(spark, family, src, emb, "vec_id", "embedding", q, 10, p)
+    AnnServing.localProber(spark, family, src, emb, "vec_id", "embedding", p)(q, 10)
 
   test("the cap defaults ON at half the JVM heap (no knob set)") {
     // r17 verdict #8: without a default, a serving JVM sized for one

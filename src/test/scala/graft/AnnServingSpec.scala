@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AnnServing, HnswIndex, IvfIndex, IvfPq}
 
 /** The unified driver-local serving entry: all three families through
-  * AnnServing.serveLocal, each bit-identical to its family's distributed
+  * AnnServing.localProber, each bit-identical to its family's distributed
   * path (the facade adds dispatch only, never arithmetic). */
 class AnnServingSpec extends AnyFunSuite {
 
@@ -26,21 +26,21 @@ class AnnServingSpec extends AnyFunSuite {
         .serveOrBuild(spark, src, emb, "embedding", "vec_id")
         .search(q, 10, ef = 0, idName = "vec_id")
         .as[(Long, Double)].collect().toSeq
-      assert(AnnServing.serveLocal(spark, "hnsw", src, emb, "vec_id", "embedding",
-        q, 10, p) == hnswDist, "hnsw facade diverged")
+      assert(AnnServing.localProber(spark, "hnsw", src, emb, "vec_id", "embedding", p)(
+        q, 10) == hnswDist, "hnsw facade diverged")
 
       val ivfDist = IvfIndex.serveOrBuild(spark, src, emb, "embedding", nlist = 16)
         .search(q, 10, p.nprobe, Seq("vec_id"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(AnnServing.serveLocal(spark, "ivf", src, emb, "vec_id", "embedding",
-        q, 10, p) == ivfDist, "ivf facade diverged")
+      assert(AnnServing.localProber(spark, "ivf", src, emb, "vec_id", "embedding", p)(
+        q, 10) == ivfDist, "ivf facade diverged")
 
       val pqDist = IvfPq.knnIndexed(spark, src, emb, "vec_id", "embedding", q, 10,
           nprobe = p.nprobe, rerank = p.rerank, nlist = p.pqNlist, m = p.m,
           kCent = p.kCent)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(AnnServing.serveLocal(spark, "ivfpq", src, emb, "vec_id", "embedding",
-        q, 10, p) == pqDist, "ivfpq facade diverged")
+      assert(AnnServing.localProber(spark, "ivfpq", src, emb, "vec_id", "embedding", p)(
+        q, 10) == pqDist, "ivfpq facade diverged")
     }
   }
 
@@ -51,7 +51,7 @@ class AnnServingSpec extends AnyFunSuite {
       val probe = AnnServing.localProber(spark, fam, src, emb, "vec_id", "embedding", p)
       for (q <- queries)
         assert(probe(q, 10) ==
-          AnnServing.serveLocal(spark, fam, src, emb, "vec_id", "embedding", q, 10, p),
+          AnnServing.localProber(spark, fam, src, emb, "vec_id", "embedding", p)(q, 10),
           s"$fam prober diverged from per-call serveLocal")
     }
   }
@@ -63,7 +63,7 @@ class AnnServingSpec extends AnyFunSuite {
       val probe = AnnServing.distributedProber(spark, fam, src, emb, "vec_id", "embedding", p)
       for (q <- queries)
         assert(probe(q, 10) ==
-          AnnServing.serveLocal(spark, fam, src, emb, "vec_id", "embedding", q, 10, p),
+          AnnServing.localProber(spark, fam, src, emb, "vec_id", "embedding", p)(q, 10),
           s"$fam distributed prober diverged from the local tier")
     }
     val err = intercept[IllegalArgumentException] {
@@ -74,7 +74,7 @@ class AnnServingSpec extends AnyFunSuite {
 
   test("unknown family refuses loudly") {
     val err = intercept[IllegalArgumentException] {
-      AnnServing.serveLocal(spark, "flat", src, emb, "vec_id", "embedding",
+      AnnServing.localProber(spark, "flat", src, emb, "vec_id", "embedding")(
         queryVec(3), 10)
     }
     assert(err.getMessage.contains("hnsw/ivf/ivfpq"))

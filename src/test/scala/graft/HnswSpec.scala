@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{HnswGraphBuilder, HnswIndex, VectorSearch}
+import graft.operators.{HnswGraphBuilder, HnswIndex, IndexStore, VectorSearch}
 
 /** HNSW forest: kernel-level exactness on tiny graphs, recall gate vs
   * brute force on real embeddings, persisted save→load identity, and the
@@ -88,7 +88,7 @@ class HnswSpec extends AnyFunSuite {
       HnswIndex.loadOrBuild(spark, home, emb.limit(200), "embedding", "vec_id",
         m = 8, efConstruction = 32, metric = "chebyshev")
     }
-    HnswIndex.invalidate(home)
+    IndexStore.invalidate(home)
   }
 
   test("forest recall gate vs exact brute force on real embeddings") {
@@ -232,7 +232,7 @@ class HnswSpec extends AnyFunSuite {
     }
     // the prepared RDD is persisted while served, dropped on release
     val before = spark.sparkContext.getPersistentRDDs.size
-    idx.releaseProbe()
+    idx.prepared.release()
     assert(spark.sparkContext.getPersistentRDDs.size == before - 1,
       "releaseProbe did not unpersist the prepared probe RDD")
     idx.graphs.unpersist()
@@ -371,7 +371,7 @@ class HnswSpec extends AnyFunSuite {
       val q = emb.where($"vec_id" === 7).select("embedding").as[Array[Float]].head()
       val want = idx.search(q, 10, ef = 64, idName = "vec_id")
         .as[(Long, Double)].collect().toSeq
-      HnswIndex.invalidate(home)
+      IndexStore.invalidate(home)
       val loaded = HnswIndex.load(spark, home)
       // every read path reassembles identically: plan-based search,
       // prepared distributed probe, driver-local tier
@@ -386,7 +386,7 @@ class HnswSpec extends AnyFunSuite {
       HnswIndex.appendSegmentLocal(spark, home,
         Seq((900000L, emb.where($"vec_id" === 7)
           .select("embedding").as[Array[Float]].head())))
-      HnswIndex.invalidate(home)
+      IndexStore.invalidate(home)
       val withDelta = HnswIndex.load(spark, home)
       // the appended node duplicates vec 7's embedding: both score 1.0,
       // ties resolve by id — top-2 must be exactly (7, 900000)
@@ -396,7 +396,7 @@ class HnswSpec extends AnyFunSuite {
       withDelta.graphs.unpersist()
       loaded.graphs.unpersist()
       idx.graphs.unpersist()
-      HnswIndex.invalidate(home)
+      IndexStore.invalidate(home)
     } finally HnswIndex.blobPartBytes = prevCap
   }
 
@@ -419,7 +419,7 @@ class HnswSpec extends AnyFunSuite {
   }
 
   private def servedIds(home: String, probeFor: Long): Set[Long] = {
-    HnswIndex.invalidate(home)
+    IndexStore.invalidate(home)
     val idx = HnswIndex.load(spark, home)
     val q = idVecs(Seq(probeFor)).head._2
     idx.search(q, 5, ef = 500).select("id").as[Long].collect().toSet
@@ -440,7 +440,7 @@ class HnswSpec extends AnyFunSuite {
     assert(segs.size == 2, s"expected 2 delta segments, got $segs")
     // pid blocks keyed on the segment number never collide (rows are
     // (pid, part) parts now — uniqueness holds per pair)
-    HnswIndex.invalidate(home)
+    IndexStore.invalidate(home)
     val pids = HnswIndex.load(spark, home).graphs
       .select("pid", "part").as[(Int, Int)].collect().toSeq
     assert(pids.distinct.size == pids.size, s"pid collision across segments: $pids")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VecFunctions._
-import graft.operators.{IvfIndex, IvfPq, VectorSearch}
+import graft.operators.{IndexStore, IvfIndex, IvfPq, VectorSearch}
 
 /** IVF-PQ composite index: recall against exact search, degeneration to
   * flat PQ at full probe width, partition-pruned probe plan, persisted
@@ -55,7 +55,7 @@ class IvfPqSpec extends AnyFunSuite {
         nprobe = 4, rerank = 100, nlist = 8, m = 8, kCent = 16)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // drop the session cache; the home reloads from disk
-    IvfPq.invalidate(IvfPq.indexPathFor(spark, src, 8, 8, 16))
+    IndexStore.invalidate(IvfPq.indexPathFor(spark, src, 8, 8, 16))
     val second = IvfPq.knnIndexed(spark, src, emb, "vec_id", "embedding", q, 10,
         nprobe = 4, rerank = 100, nlist = 8, m = 8, kCent = 16)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -101,7 +101,7 @@ class IvfPqSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(
       fs, new org.apache.hadoop.fs.Path(cosHome),
       fs, new org.apache.hadoop.fs.Path(l2Home), false, conf)
-    IvfPq.invalidate(l2Home)
+    IndexStore.invalidate(l2Home)
     val e = intercept[IllegalArgumentException] {
       IvfPq.knnIndexed(spark, src, emb, "vec_id", "embedding", q, 5,
         nlist = 8, m = 8, kCent = 16, metric = IvfIndex.MetricL2)
@@ -163,5 +163,37 @@ class IvfPqSpec extends AnyFunSuite {
       nprobe = 4, rerank = 100, nlist = 8, m = 8, kCent = 16,
       metric = IvfIndex.MetricL2, byResidual = true)
     assert(local == dist, "local tier diverged under residual l2")
+  }
+
+  test("searchLocal after its df grew the source serves the grown source's home") {
+    // the df thunk appends a part on its first evaluation, inside the
+    // first call's build: that call's home was resolved on the old
+    // listing, and the next call must serve the grown source's home with
+    // its own codes, never the first home's
+    val wh = java.nio.file.Files.createTempDirectory("graft_ivfpq_grow_").toString
+    val path = s"$wh/emb"
+    val rows = emb.select("vec_id", "embedding")
+    rows.where($"vec_id" % 2 === 0).write.parquet(path)
+    var appended = false
+    def grown = {
+      val d = spark.read.parquet(path)
+      if (!appended) {
+        appended = true
+        rows.where($"vec_id" % 2 === 1).write.mode("append").parquet(path)
+        new java.io.File(path).setLastModified(System.currentTimeMillis() + 5000)
+      }
+      d
+    }
+    val q = queryVec(7)
+    IvfPq.searchLocal(spark, path, grown, "vec_id", "embedding", q, 10,
+      nprobe = 2, rerank = 100, nlist = 8, m = 8, kCent = 16)
+    assert(appended)
+    val local = IvfPq.searchLocal(spark, path, grown, "vec_id", "embedding", q, 10,
+      nprobe = 2, rerank = 100, nlist = 8, m = 8, kCent = 16)
+    val dist = IvfPq.knnIndexed(spark, path, grown, "vec_id", "embedding", q, 10,
+        nprobe = 2, rerank = 100, nlist = 8, m = 8, kCent = 16)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(dist.head._1 == 7L, s"the grown source's own vector is not its top hit: $dist")
+    assert(local == dist, "the local tier served another home's codes")
   }
 }

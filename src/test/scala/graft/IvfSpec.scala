@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{IvfIndex, VectorSearch}
+import graft.operators.{IndexStore, IvfIndex, VectorSearch}
 
 class IvfSpec extends AnyFunSuite {
 
@@ -95,7 +95,7 @@ class IvfSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       IvfIndex.build(spark, emb.limit(10), "embedding", nlist = 2, metric = "hamming")
     }
-    IvfIndex.invalidate(home)
+    IndexStore.invalidate(home)
   }
 
   test("persisted IVF: save→load round-trip identical, probes prune partitions") {
@@ -230,7 +230,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   private def servedDocs(home: String): Set[String] = {
-    IvfIndex.invalidate(home)
+    IndexStore.invalidate(home)
     IvfIndex.load(spark, home, "embedding").data
       .select("document_id").as[String].collect().toSet
   }
@@ -355,11 +355,11 @@ class IvfSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val prep = mi.serveDistributed(q, 10, nprobe = 3, "vec_id").toSeq
       assert(prep == dist, s"prepared probe diverged under $metric")
-      mi.releaseProbe(); mi.data.unpersist()
+      mi.prepared.release(); mi.data.unpersist()
     }
     // the prepared RDD is persisted while served, dropped on release
     val before = spark.sparkContext.getPersistentRDDs.size
-    idx.releaseProbe()
+    idx.prepared.release()
     assert(spark.sparkContext.getPersistentRDDs.size == before - 1,
       "releaseProbe did not unpersist the prepared probe RDD")
     idx.data.unpersist()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VecFunctions._
-import graft.operators.Pq
+import graft.operators.{IndexStore, Pq}
 
 /** Product quantization: deterministic codebooks, ADC-math identity
   * against driver-side reconstruction, recall gates vs exact search, and
@@ -91,7 +91,7 @@ class PqSpec extends AnyFunSuite {
     // persisted home exists; second call serves from the session cache
     val home = Pq.indexPathFor(spark, src)
     assert(new java.io.File(s"$home/data").exists())
-    Pq.invalidate(home)
+    IndexStore.invalidate(home)
   }
 
   test("persisted-codes twin scores identically to encode-on-the-fly") {

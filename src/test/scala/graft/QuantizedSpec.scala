@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VecFunctions._
-import graft.operators.{Quantized, VectorSearch}
+import graft.operators.{IndexStore, Quantized, VectorSearch}
 
 /** Quantized vector search: binary sign-bit signatures + Hamming prefilter
   * and SQ8 ADC scoring (operators/Quantized.scala). Kernel bit-math is
@@ -159,7 +159,7 @@ class QuantizedSpec extends AnyFunSuite {
     // the persisted home exists and serves from the session cache
     val home = Quantized.indexPathFor(spark, src)
     assert(new java.io.File(s"$home/data").exists())
-    Quantized.invalidate(home)
+    IndexStore.invalidate(home)
   }
 
   test("Collection sync builds the per-field signature table; binarySearch matches brute force") {

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.functions.HashEmbedder
 import graft.functions.VecFunctions._
+import graft.operators.IndexStore
 
 /** `search`'s prepared-read kernel returns the rows, in the order and with
   * the score bits, of the window → full-outer-join → sort plan it replaced
@@ -396,7 +397,7 @@ class HybridSearchSpec extends AnyFunSuite {
     assert(bits(got) == want && bits(again) == want)
     // the restart's re-plan of both reads (schema inference runs jobs)
     val planning = TestSpark.jobsOf(spark) {
-      Seq("arm", "documents").foreach(t => SnapshotRead.invalidate(s"$dir/$t"))
+      Seq("arm", "documents").foreach(t => IndexStore.invalidate(s"$dir/$t"))
       reads(); ()
     }
     assert(fresh > 2, s"the call ran $fresh jobs: too few to tell a restart from a per-job retry")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.functions.HashEmbedder
-import graft.operators.HnswIndex
+import graft.operators.IndexStore
 
 /** Invariant "no cache entry outlives its source" for the resident state
   * `vectorSearch` serves from — the index handle and the prepared reads of
@@ -50,8 +50,8 @@ class ResidentIndexSpec extends AnyFunSuite {
     * dropped (only this warehouse's — other suites' caches share the JVM),
     * and a new Collection over the same warehouse. */
   private def fresh(wh: String, q: String, filtered: Boolean = false): Seq[Row] = {
-    HnswIndex.invalidate(s"$wh/$name/p/body_hnsw")
-    homes(wh).foreach(SnapshotRead.invalidate)
+    IndexStore.invalidate(s"$wh/$name/p/body_hnsw")
+    homes(wh).foreach(IndexStore.invalidate)
     search(new Collection(spark, name, wh), q, filtered)
   }
 

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.functions.HashEmbedder
+import graft.operators.IndexStore
 
 /** The rows of a prepared read stay resident: a warm serve call scans
   * decoded rows from Spark's block manager and opens no file, a listing
@@ -180,7 +181,7 @@ class ResidentReadSpec extends AnyFunSuite {
     assert(local.forall(_._2 == want))
     assert(local.map(_._1.plan).distinct.size == 1, "a file: home was planned more than once")
     assert(persisted -- start == Set(local.head._1.plan.rdd.id))
-    SnapshotRead.invalidate(s"file://$dir")
+    IndexStore.invalidate(s"file://$dir")
     assert((persisted -- start).isEmpty, "invalidate left the file: home's rows persisted")
   }
 }

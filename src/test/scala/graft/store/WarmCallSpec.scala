@@ -10,6 +10,7 @@ import graft.TestSpark
 import graft.functions.HashEmbedder
 import graft.functions.VecFunctions.{cosineSimilarity, floatVec}
 import graft.ml.Trainer
+import graft.operators.IndexStore
 
 /** A warm serving call does only the work its own inputs need: no
   * Analyzer or optimizer rule runs and no closure is cleaned inside
@@ -170,7 +171,7 @@ class WarmCallSpec extends AnyFunSuite {
         val rules = TestSpark.ruleRunsOf { memo = read.value(spark, score(q)) }
         assert(rules == 0, s"$table $q re-analyzed")
         // a fresh analysis: the home's plans dropped, so its memo with them
-        SnapshotRead.invalidate(s"$wh/warm/p/text_$table")
+        IndexStore.invalidate(s"$wh/warm/p/text_$table")
         val fresh = read.value(spark, score(q))
         val bits = (e: org.apache.spark.sql.catalyst.expressions.Expression) =>
           rows.map(r => java.lang.Double.doubleToRawLongBits(e.eval(r).asInstanceOf[Double]))
